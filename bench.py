@@ -67,6 +67,7 @@ def make_job_frontier(tracker, start: int = 0):
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entrymod
+    from cdc_debezium_kafka_airflow_spark.operators.similarity import clear_model_memos
     from cdc_debezium_kafka_airflow_spark.session import get_spark
 
     spark = get_spark("bench")
@@ -133,13 +134,9 @@ def main() -> None:
         # own training (round 13 — no cross-query model amortization)
         spark.catalog.clearCache()
         try:
-            from cdc_debezium_kafka_airflow_spark.operators.similarity import (
-                clear_model_memos,
-            )
-
             clear_model_memos()
-        except Exception:
-            pass
+        except Exception as e:
+            print(f"BENCH-ERROR clear_model_memos: {e!r}", file=sys.stderr, flush=True)
         return elapsed
 
     timings: dict[str, float] = {}

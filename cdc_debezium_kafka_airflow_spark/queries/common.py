@@ -5,7 +5,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from cdc_debezium_kafka_airflow_spark.session import apply_runtime_confs
-from cdc_debezium_kafka_airflow_spark.sources.tables import load_table
+from cdc_debezium_kafka_airflow_spark.sources.tables import (
+    _file_fingerprint,
+    load_table,
+    table_path,
+)
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -30,15 +34,16 @@ def widen_narrow_scan(df: DataFrame, key: tuple | None = None) -> DataFrame:
     count, not a local constant (optimization-guide §2: partitioning must
     be scale-adaptive, not tuned to one harness).
 
-    ``key``: optional (sf_dir, table)-style identity for the underlying
-    scan. The probe forces a physical planning pass (~60-100 ms per
+    ``key``: optional (sf_dir, table) of the fixture store the scan
+    reads. The probe forces a physical planning pass (~60-100 ms per
     fresh plan — ADVICE r12); the answer depends only on the scan's file
-    layout and the session width, both stable per fixture directory, so
-    keyed callers pay the planning once per process. Keyless calls probe
-    every time (correct, just slower)."""
+    layout and the session width, so keyed callers pay the planning once
+    per store layout: the memo key carries the store's on-disk
+    fingerprint, and a store rewritten in-process probes again. Keyless
+    calls probe every time (correct, just slower)."""
     width = df.sparkSession.sparkContext.defaultParallelism
     if key is not None:
-        memo_key = (key, width)
+        memo_key = (key, _file_fingerprint(table_path(*key)), width)
         if memo_key not in _NARROW_SCAN_MEMO:
             _NARROW_SCAN_MEMO[memo_key] = (
                 df.rdd.getNumPartitions() < width

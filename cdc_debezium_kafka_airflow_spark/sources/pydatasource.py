@@ -110,11 +110,13 @@ def _emit_changelog_batch(path: str, partition: "ChangelogPartition"):
     # as the literal string "None+00:00" inside the envelope (the old
     # row-at-a-time code crashed instead, and the byte-pin twin test
     # cannot catch it because the reference crashes too) — fail loudly if
-    # a future fixture ever carries one
-    assert tbl["ts"].null_count == 0, (
-        f"null ts in changelog fixture {path}: the envelope template "
-        "cannot represent it"
-    )
+    # a future fixture ever carries one (a raise, not an assert: the check
+    # must survive python -O)
+    if tbl["ts"].null_count:
+        raise ValueError(
+            f"null ts in changelog fixture {path}: the envelope template "
+            "cannot represent it"
+        )
     # nanos -> micros truncation, the same convention as the batch
     # loader's nanosAsLong div-1000 path (sub-microsecond digits drop)
     ts_us = tbl["ts"].cast(pa.timestamp("us"), safe=False).combine_chunks()

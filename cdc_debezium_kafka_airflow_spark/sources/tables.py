@@ -89,9 +89,14 @@ def _file_fingerprint(path: str, _depth: int = 2) -> tuple:
         return ()
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    """The on-disk store of fixture table ``name``."""
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table: ``{sf_dir}/{name}.parquet``."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    path = table_path(sf_dir, name)
     key = (sf_dir, name, _file_fingerprint(path))
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:

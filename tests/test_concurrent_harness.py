@@ -140,7 +140,7 @@ def test_dead_pid_scratch_dirs_are_swept(tmp_path, monkeypatch):
     keep.mkdir()
     os.utime(keep, (old, old))
     monkeypatch.setattr(cache_util, "_REPO_ROOT", str(tmp_path))
-    monkeypatch.setattr(cache_util, "_SCRATCH_SWEPT", False)
+    monkeypatch.setattr(cache_util, "_SWEPT_BASES", set())
     p = cache_util.process_scoped_db_path("db")
     assert str(tmp_path) in p
     assert not dead_old.exists()

@@ -136,3 +136,25 @@ def test_vectorized_emitter_is_byte_identical_to_reference():
             assert g_ts[i] == t
         n_rows += size
     assert n_rows > 0
+
+
+def test_null_ts_raises_value_error(tmp_path):
+    """A NULL ts cannot be rendered into the envelope template; the guard
+    is a raise, so it also holds under ``python -O``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array([dt.datetime(2024, 1, 1), None], pa.timestamp("us")),
+            "user_id": pa.array([7, 8], pa.int64()),
+            "event_type": ["click", "view"],
+            "value": [1.0, 2.0],
+            "props": ["{}", "{}"],
+        }),
+        path,
+    )
+    with pytest.raises(ValueError, match="null ts"):
+        next(_emit_changelog_batch(path, ChangelogPartition(0, 0, 2)))

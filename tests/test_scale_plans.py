@@ -1618,3 +1618,29 @@ def test_changelog_pushdown_barrier_holds(spark, sf_dir):
     # the barrier column survives: the always-true partition-id CASE has
     # not been constant-folded away
     assert "spark_partition_id" in plan.lower(), plan[:3000]
+
+
+def test_narrow_scan_memo_reprobes_a_rewritten_store(spark, tmp_path):
+    """The narrow-scan memo keys on the store's on-disk fingerprint: a
+    store rewritten in-process with at least core-width splits is probed
+    again instead of reusing the first store's answer."""
+    from cdc_debezium_kafka_airflow_spark.queries.common import widen_narrow_scan
+    from cdc_debezium_kafka_airflow_spark.sources.tables import table_path
+
+    width = spark.sparkContext.defaultParallelism
+    key = (str(tmp_path), "t")
+    path = table_path(*key)
+    spark.range(100).coalesce(1).write.parquet(path)
+    single = spark.read.parquet(path)
+    assert widen_narrow_scan(single, key=key) is not single  # widened
+
+    # small files pack into about defaultParallelism splits; asking for 4x
+    # as many gives each of the 4x width files its own split
+    spark.range(40 * width).repartition(4 * width).write.mode("overwrite").parquet(path)
+    spark.conf.set("spark.sql.files.minPartitionNum", str(4 * width))
+    try:
+        wide = spark.read.parquet(path)
+        assert wide.rdd.getNumPartitions() >= width
+        assert widen_narrow_scan(wide, key=key) is wide
+    finally:
+        spark.conf.unset("spark.sql.files.minPartitionNum")
