@@ -40,26 +40,47 @@ def parse_envelope(changelog: DataFrame) -> DataFrame:
     Adds:
       parsed   struct  -- envelope (NULL when value is NULL or unparseable)
       key_id   long    -- primary key from the record key
-    Stateless projection; ``from_json`` against a fixed StructType lets
-    Catalyst prune unreferenced nested fields down to the scan.
+
+    Each record's value is parsed exactly once. ``split_dlq`` filters on
+    the parse result, and without a guard Catalyst pushes that filter below
+    this projection and inlines ``from_json`` into it: the value is then
+    parsed twice, once in the Filter and once in the Project (a parquet
+    scan even carries the parse as a DataFilter). The CASE WHEN
+    spark_partition_id() wrapper is value-identical (partition ids are
+    never negative, so the branch is always taken) but marks the column
+    non-deterministic, which the optimizer never re-evaluates below or
+    inlines into its consumers -- the guard ``build_changelog`` puts on the
+    serialize. Batch and stream consumers both go through here.
     """
+    envelope = F.from_json(F.col("value"), ENVELOPE_SCHEMA, JSON_TS_OPTS)
     return changelog.withColumns(
         {
-            "parsed": F.from_json(F.col("value"), ENVELOPE_SCHEMA, JSON_TS_OPTS),
+            "parsed": F.when(F.spark_partition_id() >= F.lit(-1), envelope),
             "key_id": F.from_json(F.col("key"), KEY_SCHEMA)["payload"]["id"],
         }
     )
 
 
+def is_dlq_record() -> F.Column:
+    """``split_dlq``'s routing predicate over a parsed record: it has a
+    value that failed envelope parsing. Tombstones have no value and are
+    legitimate delete markers, so they stay on the main path."""
+    return F.col("value").isNotNull() & F.col("parsed.payload").isNull()
+
+
+def change_op() -> F.Column:
+    """``unwrap``'s op over a parsed main-path record; tombstones (no
+    envelope) surface as 'd' delete markers."""
+    return F.coalesce(F.col("parsed.payload.op"), F.lit("d"))
+
+
 def split_dlq(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
     """``xf_errors_tolerant`` + ``snk_dlq``: (main, dlq) two-way split.
 
-    A record goes to the DLQ when it has a value that fails envelope parsing
-    (tombstones have no value and are legitimate delete markers, so they stay
-    on the main path). Both branches share one scan (Spark reuses the
-    exchange); neither shuffles.
+    A record goes to the DLQ when ``is_dlq_record``. Both branches share
+    one scan (Spark reuses the exchange); neither shuffles.
     """
-    is_bad = F.col("value").isNotNull() & F.col("parsed.payload").isNull()
+    is_bad = is_dlq_record()
     return parsed.filter(~is_bad), parsed.filter(is_bad)
 
 
@@ -82,7 +103,7 @@ def unwrap(main: DataFrame) -> DataFrame:
     Tombstones (value IS NULL) surface as op='d' delete markers, matching
     delete.enabled=true + drop.tombstones=false.
     """
-    op = F.coalesce(F.col("parsed.payload.op"), F.lit("d"))
+    op = change_op()
     return main.select(
         F.col("offset"),
         route_topic(main).alias("table_name"),

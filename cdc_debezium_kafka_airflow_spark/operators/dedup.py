@@ -148,7 +148,7 @@ def ngram_jaccard_pairs(
             "doc_id", "block", shingle_fn(F.col("t"), k).alias("shingles")
         )
     else:
-        # pre-shingled input (e.g. the fingerprint-cached shingle table):
+        # pre-shingled input (e.g. the shared shingled_documents frame):
         # must carry (doc_id, block, shingles); k/unit are then descriptive
         src_cached = (
             shingled.storageLevel.useMemory or shingled.storageLevel.useDisk
@@ -327,7 +327,7 @@ def minhash_lsh_pairs(
             word_shingles_from_tokens(F.col("toks"), 3).alias("shingles"),
         ).persist()
     else:
-        # pre-shingled word-3 input (the fingerprint-cached shingle table)
+        # pre-shingled word-3 input (the shared shingled_documents frame)
         src_cached = (
             shingled.storageLevel.useMemory or shingled.storageLevel.useDisk
         )

@@ -150,7 +150,7 @@ def decontaminate(
     No all-pairs comparison anywhere.
 
     ``shingled``: optional pre-shingled frame (doc_id, split, shingles) —
-    e.g. the fingerprint-cached shingle table — used instead of re-shingling
+    e.g. the shared ``shingled_documents`` frame — used instead of re-shingling
     ``labeled``; ``k`` is then descriptive."""
     from cdc_debezium_kafka_airflow_spark.operators.dedup import word_shingles
 

@@ -1,10 +1,13 @@
 """CDC-semantics queries (SURVEY.md §2.A/§2.B) + monitoring dataflow (§2.C).
 
-Every query here runs the REAL pipeline (events -> serialized Debezium
-envelopes -> from_json parse -> DLQ split -> unwrap -> materialize); the
-DuckDB oracles reproduce the *results* through the deterministic changelog
-spec (sources/cdc_fixture.py docstring) without the JSON round-trip — so a
-hash match also proves the Spark ser/de round-trip is lossless.
+Every query here runs the REAL pipeline: the serialized Debezium wire log
+(events -> JSON envelopes, written once per events store, the Kafka
+topic's role: ``streaming/jobs.changelog_dir``) -> from_json parse, once
+per record -> DLQ split -> unwrap -> materialize. Batch queries read the
+same log as the streaming twins. The DuckDB oracles reproduce the
+*results* through the deterministic changelog spec (sources/cdc_fixture.py
+docstring) without the JSON round-trip — so a hash match also proves the
+Spark ser/de round-trip is lossless.
 """
 
 from __future__ import annotations
@@ -12,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cdc_debezium_kafka_airflow_spark.queries.common import t
+from cdc_debezium_kafka_airflow_spark.session import apply_runtime_confs
 from cdc_debezium_kafka_airflow_spark.sources.cdc_fixture import (
     SQL_IS_MALFORMED,
     SQL_IS_TOMBSTONE,
@@ -24,7 +28,9 @@ from cdc_debezium_kafka_airflow_spark.sources.monitor_fixture import (
     build_topic_offsets,
 )
 from cdc_debezium_kafka_airflow_spark.operators.cdc import (
+    change_op,
     hoist_field,
+    is_dlq_record,
     parse_envelope,
     route_topic,
     schema_evolve,
@@ -38,6 +44,7 @@ from cdc_debezium_kafka_airflow_spark.operators.monitoring import (
     lag_metrics,
     status_health,
 )
+from cdc_debezium_kafka_airflow_spark.streaming import jobs
 
 QUERIES = {}
 ORACLES = {}
@@ -82,36 +89,13 @@ mat AS (
 """
 
 
-_PARSED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _parsed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serialized+parsed changelog, persisted: the DLQ split filters on the
-    parse result, and without a materialization boundary Catalyst pushes that
-    filter below the projection and re-evaluates the whole
-    to_json->from_json round-trip three times (visible in .explain).
-    A real pipeline has the same boundary — Kafka holds the serialized
-    stream; the engine parses each record once.
-
-    Memoized per (session, sf_dir): every CDC query shares ONE persisted
-    parse instead of leaking a fresh cached copy per invocation across a
-    full oracle/bench sweep. If an external ``clearCache`` evicted the
-    entry (the bench isolates queries that way), it is re-registered."""
-    import os
-
-    from cdc_debezium_kafka_airflow_spark.session import session_key
-
-    key = (session_key(spark), os.path.abspath(sf_dir))
-    df = _PARSED_CACHE.get(key)
-    if df is None:
-        ch = build_changelog(t(spark, sf_dir, "events"))
-        df = parse_envelope(ch).persist()
-        _PARSED_CACHE[key] = df
-    else:
-        lvl = df.storageLevel
-        if not (lvl.useMemory or lvl.useDisk):
-            df.persist()
-    return df
+    """The parsed wire log, unpersisted: a bounded read of the serialized
+    change log the streams consume (``jobs.changelog_batch``), each record
+    parsed once (``parse_envelope``). A query that reads the parse in two
+    or more branches persists what it needs itself."""
+    apply_runtime_confs(spark)
+    return parse_envelope(jobs.changelog_batch(spark, sf_dir))
 
 
 def _unwrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -651,7 +635,8 @@ def cdc_snapshot_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys deleted before the handoff stay absent unless re-created, keys
     updated after it converge to the suffix image, and offset-based
     last-write-wins arbitrates any snapshot/suffix overlap."""
-    u = _unwrapped(spark, sf_dir)
+    # several branches read the parse: parse the wire log once
+    u = _unwrapped(spark, sf_dir).persist()
     after_fields = [
         f.name for f in u.schema["after"].dataType.fields
     ]
@@ -719,84 +704,66 @@ def e2e_reference_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage's frame, so a defect anywhere surfaces as a wrong audit row
     downstream — this is the 'a reference user can switch' claim as a
     single executable fact (MIGRATION.md walks the same path in prose).
+
+    Plan: two aggregates crossed once, zero collect()s at construction.
+    One pass over the parsed wire log counts the serialize, parse_dlq and
+    unwrap rows through ``split_dlq``'s and ``unwrap``'s own predicates;
+    one per-table aggregate of the materialized state, joined with the
+    integrity probe, gives the other three. The six audit rows are
+    exploded out of the single 1x1 cross-joined row, so every aggregate
+    subtree appears exactly once in the plan (ADVICE r09), and nothing is
+    persisted: each branch parses each record once.
     """
-    ev = t(spark, sf_dir, "events")
-    # the serialized stream is parsed ONCE through the shared persisted
-    # parse boundary (Kafka's materialization role) — the audit replays the
-    # same lineage every other CDC query consumes, and each audit stage is
-    # ONE consolidated aggregation over it (counts + checksums fused), not
-    # one Spark job per number
-    main, dlq = split_dlq(_parsed(spark, sf_dir))
-    un = unwrap(main)
-    mat = upsert_materialize(un).persist()
-
-    # All six audit rows are built as single-row AGGREGATE FRAMES and
-    # UNIONed into one lazy plan — zero collect()s, ONE Spark job when
-    # the caller materializes the result (r09; the old shape paid 8
-    # driver round-trips, each a full scheduling barrier — pure per-job
-    # floor tax on this host and pure latency on a 1000-executor
-    # cluster). `mat` is persisted, so the four branches that read it
-    # share one materialization; cross-joins below are 1-row x 1-row.
-    def stage_row(name: str, n_col, checksum_col) -> DataFrame:
-        return F.lit(name).alias("stage"), n_col.cast("long").alias(
-            "n_rows"
-        ), checksum_col.cast("long").alias("checksum")
-
-    serialize_row = ev.agg(
-        *stage_row("serialize", F.count("*"), F.sum("event_id"))
-    )
-    un_agg = un.agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("is_delete").cast("long")).alias("d"),
-    )
-    dlq_agg = dlq.agg(F.count("*").alias("n_dlq"))
-    mat_agg = mat.agg(
-        F.count("*").alias("n_mat"),
-        F.sum(F.round(F.col("value") * 10000).cast("long")).alias("s"),
-        F.max("user_id").alias("mx"),
+    parsed = _parsed(spark, sf_dir)
+    bad = is_dlq_record()
+    log = parsed.agg(
+        F.count("*").alias("n_log"),
+        F.sum("offset").alias("sum_off"),
+        F.count_if(~bad).alias("n_main"),
+        F.count_if(bad).alias("n_dlq"),
+        F.count_if(~bad & (change_op() == "d")).alias("n_del"),
     )
 
+    mat = upsert_materialize(unwrap(split_dlq(parsed)[0]))
     # independent sink-side recomputation feeds the integrity probe — but
     # deletes must drop keys, so the source side is the LIVE key set too
-    live_src = mat.select("table_name", F.col("user_id").alias("key"))
-    sink_keyed = mat.select("table_name", F.col("user_id").alias("key"))
-    integ_agg = integrity_compare(live_src, sink_keyed, "key").agg(
+    keyed = mat.select("table_name", F.col("user_id").alias("key"))
+    per_table = mat.groupBy("table_name").agg(
+        F.count("*").alias("n"),
+        F.sum(F.round(F.col("value") * 10000).cast("long")).alias("s"),
+        F.max("user_id").alias("mx"),
+    ).join(integrity_compare(keyed, keyed, "key"), "table_name")
+    state = per_table.agg(
+        F.coalesce(F.sum("n"), F.lit(0)).alias("n_mat"),
+        F.sum("s").alias("s"),
+        F.max("mx").alias("mx"),
         F.count("*").alias("n_tables"),
-        F.sum(
-            (F.col("max_match") & F.col("count_match")).cast("long")
-        ).alias("n_match"),
+        F.count_if(F.col("max_match") & F.col("count_match")).alias("n_match"),
     )
 
-    # ADVICE r09: each 1-row agg frame used to feed TWO union branches,
-    # evaluating its subtree twice inside the "one job". Cross-joining
-    # the four 1-row frames (1x1 joins) and EXPLODING the five audit
-    # rows out of the single combined row makes every agg subtree appear
-    # exactly once in the plan.
-    def srow(name: str, n_col, checksum_col):
+    def srow(name: str, n: str, checksum: str):
         return F.struct(
             F.lit(name).alias("stage"),
-            n_col.cast("long").alias("n_rows"),
-            checksum_col.cast("long").alias("checksum"),
+            F.col(n).cast("long").alias("n_rows"),
+            F.col(checksum).cast("long").alias("checksum"),
         )
 
-    fused = (
-        un_agg.crossJoin(dlq_agg)
-        .crossJoin(mat_agg)
-        .crossJoin(integ_agg)
+    return (
+        log.crossJoin(state)
         .select(
             F.explode(
                 F.array(
-                    srow("parse_dlq", F.col("n"), F.col("n_dlq")),
-                    srow("unwrap", F.col("n"), F.col("d")),
-                    srow("materialize", F.col("n_mat"), F.col("s")),
-                    srow("integrity", F.col("n_tables"), F.col("n_match")),
-                    srow("bi_query", F.col("n_tables"), F.col("mx")),
+                    srow("serialize", "n_log", "sum_off"),
+                    srow("parse_dlq", "n_main", "n_dlq"),
+                    srow("unwrap", "n_main", "n_del"),
+                    srow("materialize", "n_mat", "s"),
+                    srow("integrity", "n_tables", "n_match"),
+                    srow("bi_query", "n_tables", "mx"),
                 )
             ).alias("r")
         )
         .select("r.*")
     )
-    return serialize_row.unionByName(fused)
 
 
 @q(
@@ -841,7 +808,8 @@ def cdc_incremental_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join's right side stays bounded by churn-per-window, not by table
     size.
     """
-    u = _unwrapped(spark, sf_dir)
+    # several branches read the parse: parse the wire log once
+    u = _unwrapped(spark, sf_dir).persist()
     after_fields = [f.name for f in u.schema["after"].dataType.fields]
     n_chunks = 8
     cols = ["table_name", "key_id", "offset", "is_delete", "after"]
@@ -1059,7 +1027,8 @@ def cdc_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     those questions."""
     from cdc_debezium_kafka_airflow_spark.operators.cdc import scd2_history
 
-    un = _unwrapped(spark, sf_dir)
+    # several branches read the parse: parse the wire log once
+    un = _unwrapped(spark, sf_dir).persist()
     versions = scd2_history(un)
     mo = un.agg(F.max("offset").alias("m"))
     v = versions.crossJoin(F.broadcast(mo)).select(
@@ -1144,7 +1113,8 @@ def cdc_txn_consistent(spark: SparkSession, sf_dir: str) -> DataFrame:
     the in-flight buffer is bounded by one group commit x arrival rate, not
     by history.
     """
-    u = _unwrapped(spark, sf_dir)
+    # several branches read the parse: parse the wire log once
+    u = _unwrapped(spark, sf_dir).persist()
     cols = ["table_name", "key_id", "offset", "is_delete", "after"]
     tx = u.withColumn(
         "txn_id", F.floor(F.col("offset") / 16).cast("long")
@@ -1514,7 +1484,8 @@ def cdc_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         point_in_time_lookup,
     )
 
-    u = _unwrapped(spark, sf_dir)
+    # several branches read the parse: parse the wire log once
+    u = _unwrapped(spark, sf_dir).persist()
     dim = u.filter(F.col("table_name") == "entidades").select(
         "key_id",
         "offset",
@@ -1670,7 +1641,8 @@ def cdc_bitemporal_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side, before the shuffle)."""
     from pyspark.sql.window import Window
 
-    u = _unwrapped(spark, sf_dir)
+    # several branches read the parse: parse the wire log once
+    u = _unwrapped(spark, sf_dir).persist()
     live = u.filter(~F.col("is_delete"))
     v_of = F.col("offset") - (F.col("offset") % 10) * 50
     dim = live.filter(F.col("table_name") == "entidades").select(

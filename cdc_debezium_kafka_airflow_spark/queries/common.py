@@ -19,7 +19,7 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def widen_narrow_scan(df: DataFrame, key: tuple | None = None) -> DataFrame:
+def widen_narrow_scan(df: DataFrame, key: tuple | str | None = None) -> DataFrame:
     """Give an upcoming expensive per-row stage (Python UDTF,
     applyInPandas, or a heavy higher-order-function projection) its full
     core width — scale-adaptively.
@@ -35,15 +35,17 @@ def widen_narrow_scan(df: DataFrame, key: tuple | None = None) -> DataFrame:
     be scale-adaptive, not tuned to one harness).
 
     ``key``: optional (sf_dir, table) of the fixture store the scan
-    reads. The probe forces a physical planning pass (~60-100 ms per
-    fresh plan — ADVICE r12); the answer depends only on the scan's file
-    layout and the session width, so keyed callers pay the planning once
-    per store layout: the memo key carries the store's on-disk
-    fingerprint, and a store rewritten in-process probes again. Keyless
-    calls probe every time (correct, just slower)."""
+    reads, or the path of any other parquet store. The probe forces a
+    physical planning pass (~60-100 ms per fresh plan — ADVICE r12); the
+    answer depends only on the scan's file layout and the session width,
+    so keyed callers pay the planning once per store layout: the memo key
+    carries the store's on-disk fingerprint, and a store rewritten
+    in-process probes again. Keyless calls probe every time (correct, just
+    slower)."""
     width = df.sparkSession.sparkContext.defaultParallelism
     if key is not None:
-        memo_key = (key, _file_fingerprint(table_path(*key)), width)
+        path = key if isinstance(key, str) else table_path(*key)
+        memo_key = (key, _file_fingerprint(path), width)
         if memo_key not in _NARROW_SCAN_MEMO:
             _NARROW_SCAN_MEMO[memo_key] = (
                 df.rdd.getNumPartitions() < width

@@ -192,8 +192,8 @@ def ext_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     set-similarity join. k=10 because this corpus's vocabulary saturates
     short shingle spaces (377 distinct 3-grams vs ~50k 10-grams) — short
     shingles make every pair ~0.6-similar and any algorithm quadratic.
-    Starts from the fingerprint-cached shingle table (shared with the other
-    shingle-family queries)."""
+    Starts from the shared shingle derivation (``shingled_documents``, the
+    same frame the other shingle-family queries build in their own run)."""
     from cdc_debezium_kafka_airflow_spark.sources.shingle_cache import (
         shingled_documents,
     )

@@ -1045,8 +1045,9 @@ def snk_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explicit id/vec columns (r13): this call used to resolve only via a
     # memo/artifact hit populated by an earlier ANN query — cold training
     # on the raw embeddings table needs the real column names
+    n_cells = 8
     cents = train_ivf_centroids(
-        e, id_col="vec_id", vec_col="embedding", k=8, cache_key=fp
+        e, id_col="vec_id", vec_col="embedding", k=n_cells, cache_key=fp
     )
     cent_rows = [(r["centroid_id"], r["centroid"]) for r in cents.collect()]
     assigner = nearest_cell_assigner(
@@ -1091,7 +1092,7 @@ def snk_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("q")
         .write.mode("overwrite")
         .option(
-            "maxRecordsPerFile", max(1, -(-n_assigned // (8 * 4)))
+            "maxRecordsPerFile", max(1, -(-n_assigned // (n_cells * 4)))
         )
         .partitionBy("cell")
         .parquet(frag_dir)

@@ -1316,8 +1316,8 @@ def ext_dedup_minhash_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup candidate pairs through Spark MLlib's OFFICIAL LSH API
     (`ml.feature.MinHashLSH` — the Spark mapping SURVEY.md §2 names for
     ext_dedup_near), as the library twin of the native implementation in
-    operators/dedup.py: shingle arrays (the same fingerprint-cached word-
-    3-gram table every dedup op starts from) -> HashingTF binary sparse
+    operators/dedup.py: shingle arrays (the same word-3-gram derivation
+    every dedup op starts from) -> HashingTF binary sparse
     vectors (2^18 features, deterministic MurmurHash) -> MinHashLSH with a
     FIXED seed -> approxSimilarityJoin at Jaccard distance <= 0.95, a < b
     (the synthetic corpus's pairwise similarities are low, so the loose

@@ -456,7 +456,8 @@ def cdc_late_arriving_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         _unwrapped,
     )
 
-    u = _unwrapped(spark, sf_dir)
+    # several branches read the parse: parse the wire log once
+    u = _unwrapped(spark, sf_dir).persist()
     dim = u.filter(F.col("table_name") == "entidades").select(
         "key_id",
         "offset",
@@ -1470,7 +1471,7 @@ def ext_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined against FULL postings (the asymmetric-threshold trade; prefix
     shingles are rare by construction so fan-out is Σ df(prefix), never
     |block|²), exact array_intersect verify on candidates only. Starts
-    from the shared fingerprint-cached shingle table. Oracle: the naive
+    from the shared shingle derivation (``shingled_documents``). Oracle: the naive
     quadratic in-SQL twin, tractable at oracle scale."""
     from cdc_debezium_kafka_airflow_spark.operators.dedup import (
         containment_pairs,
@@ -1805,7 +1806,8 @@ def cdc_temporal_align(spark: SparkSession, sf_dir: str) -> DataFrame:
         _unwrapped,
     )
 
-    u = _unwrapped(spark, sf_dir)
+    # several branches read the parse: parse the wire log once
+    u = _unwrapped(spark, sf_dir).persist()
 
     def markers(table: str, side: str) -> DataFrame:
         return u.filter(F.col("table_name") == table).select(

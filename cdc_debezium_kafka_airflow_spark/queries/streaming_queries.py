@@ -251,10 +251,12 @@ def ctl_retry_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = jobs.foreach_batch_upsert(
         spark,
         sf_dir,
-        # 4 micro-batches (32 replay files / 8): several distinct injected
-        # faults + cross-batch state, at 1/8 the per-batch Derby MERGE +
-        # doubled-staging overhead of one-file-per-trigger (23.8s -> ~3s)
-        max_files_per_trigger=8,
+        # 4 micro-batches whatever the wire log's file count (it is the
+        # building session's core count): several distinct injected faults
+        # + cross-batch state, at a fraction of the per-batch Derby MERGE +
+        # doubled-staging overhead of one-file-per-trigger (23.8s -> ~3s
+        # for 32 files)
+        max_files_per_trigger=-(-jobs.changelog_files(spark, sf_dir) // 4),
         fault_injector=flaky,
         max_attempts=3,
         attempt_log=attempt_log,

@@ -178,7 +178,8 @@ def cdc_diff_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-outer join."""
     from cdc_debezium_kafka_airflow_spark.operators.cdc import upsert_materialize
 
-    u = _unwrapped(spark, sf_dir)
+    # several branches read the parse: parse the wire log once
+    u = _unwrapped(spark, sf_dir).persist()
     s1 = upsert_materialize(u.filter(F.col("offset") <= 5000)).select(
         "table_name",
         F.col("user_id").alias("key_id"),
@@ -662,11 +663,10 @@ def cdc_scd2_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         _unwrapped,
     )
 
-    v = scd2_history(_unwrapped(spark, sf_dir))
-    wm = (
-        _unwrapped(spark, sf_dir)
-        .agg((F.floor(F.max("offset") / 2)).cast("long").alias("wm"))
-    )
+    # several branches read the parse: parse the wire log once
+    u = _unwrapped(spark, sf_dir).persist()
+    v = scd2_history(u)
+    wm = u.agg((F.floor(F.max("offset") / 2)).cast("long").alias("wm"))
     w = Window.partitionBy("table_name", "key_id", "is_current").orderBy(
         F.col("valid_from_offset").desc()
     )
@@ -743,16 +743,16 @@ def cdc_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     join_range_asof (union + carry-forward)."""
     from cdc_debezium_kafka_airflow_spark.operators.cdc import scd2_history
 
-    versions = scd2_history(_unwrapped(spark, sf_dir)).select(
+    # several branches read the parse: parse the wire log once
+    u = _unwrapped(spark, sf_dir).persist()
+    versions = scd2_history(u).select(
         "table_name",
         "valid_from_offset",
         "valid_to_offset",
         "value",
         "user_id",
     )
-    mo = _unwrapped(spark, sf_dir).agg(
-        F.max("offset").alias("mo")
-    )
+    mo = u.agg(F.max("offset").alias("mo"))
     probes = mo.select(
         F.explode(
             F.array(

@@ -81,18 +81,25 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_ts(raw)
 
 
-def changelog_stream(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Streaming CDC changelog, replayed from a materialized serialized log.
+#: Column contract of the serialized wire log: Spark's Kafka source
+#: projection (``sources/kafka._project``'s output shape).
+CHANGELOG_DDL = (
+    "offset long, topic string, partition int, key string, value string, "
+    "timestamp timestamp"
+)
+
+
+def changelog_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The serialized wire log of ``sf_dir``'s events, built if stale.
 
     The serialized records are written to disk ONCE (deterministic content)
-    and the stream reads them back — exactly Kafka's role: the broker stores
-    serialized bytes, consumers parse each record once. Building the
-    changelog inline in the streaming plan instead would let Catalyst
-    re-inline the to_json into every downstream from_json/filter (the
-    serialize would run up to 4x per record — no cache boundary exists in a
-    streaming plan to stop it)."""
+    and every CDC consumer, batch or stream, reads them back — exactly
+    Kafka's role: the broker stores serialized bytes, consumers parse each
+    record once. Building the changelog inline in a consumer's plan instead
+    would let Catalyst re-inline the to_json into every downstream
+    from_json/filter (no cache boundary exists in a streaming plan to stop
+    it). The log is an input, fingerprinted on the events store; its file
+    count is the ``defaultParallelism`` of the session that built it."""
     from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
         cache_is_fresh,
         source_fingerprint,
@@ -103,23 +110,47 @@ def changelog_stream(
     replay_dir = os.path.join("/root/repo/.cache", f"changelog_{tag}")
     fp = source_fingerprint(sf_dir, "events")
     if not cache_is_fresh(replay_dir, fp):
-        from cdc_debezium_kafka_airflow_spark.sources.tables import load_table
-
         batch = build_changelog(load_table(spark, sf_dir, "events"))
         batch.write.mode("overwrite").parquet(replay_dir)
         write_fingerprint(replay_dir, fp)
-    schema = (
-        "offset long, topic string, partition int, key string, value string, "
-        "timestamp timestamp"
+    return replay_dir
+
+
+def changelog_files(spark: SparkSession, sf_dir: str) -> int:
+    """Number of data files in the wire log (one per stream input file)."""
+    return sum(
+        1 for f in os.listdir(changelog_dir(spark, sf_dir))
+        if f.endswith(".parquet")
     )
-    reader = spark.readStream.schema(schema)
+
+
+def changelog_stream(
+    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """Streaming CDC changelog, replayed from the serialized wire log
+    (``changelog_dir``)."""
+    reader = spark.readStream.schema(CHANGELOG_DDL)
     if max_files_per_trigger is not None:
         # micro-batch cap — the analog of the reference sink's batch.size
-        # (register-postgres-sink.json:6) / Kafka's maxOffsetsPerTrigger;
-        # with the replay log's 32 files this forces a multi-batch run that
-        # exercises cross-batch state merging
+        # (register-postgres-sink.json:6) / Kafka's maxOffsetsPerTrigger.
+        # The batch count is changelog_files / this cap: callers that need
+        # k micro-batches derive the cap from changelog_files
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(replay_dir)
+    return reader.parquet(changelog_dir(spark, sf_dir))
+
+
+def changelog_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bounded read of the same wire log as ``changelog_stream``, in the
+    Kafka batch source's shape (``sources/kafka.read_changelog_batch``).
+
+    A log with fewer files than the session has cores is spread over the
+    cores before anything parses it (``widen_narrow_scan``; a no-op when
+    the builder had as many cores as the reader)."""
+    from cdc_debezium_kafka_airflow_spark.queries.common import widen_narrow_scan
+
+    path = changelog_dir(spark, sf_dir)
+    log = spark.read.schema(CHANGELOG_DDL).parquet(path)
+    return widen_narrow_scan(log, key=path)
 
 
 def kafka_changelog_stream(
@@ -1459,12 +1490,8 @@ def schema_evolving_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
 
     replay_dir = two_gen_replay_dir(spark, sf_dir)
 
-    schema = (
-        "offset long, topic string, partition int, key string, value string, "
-        "timestamp timestamp"
-    )
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(CHANGELOG_DDL)
         .option("maxFilesPerTrigger", "4")
         .parquet(replay_dir)
     )
@@ -3027,12 +3054,8 @@ def txn_consistent_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).repartition(8).write.mode(mode).parquet(replay_dir)
         write_fingerprint(replay_dir, fp)
 
-    schema = (
-        "offset long, topic string, partition int, key string, value string, "
-        "timestamp timestamp"
-    )
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(CHANGELOG_DDL)
         .option("maxFilesPerTrigger", "8")
         .parquet(os.path.join(replay_dir, "*.parquet"))
     )

@@ -21,8 +21,10 @@ def test_listener_captures_microbatch_progress(spark, sf_dir):
     capture = ProgressCapture()
     spark.streams.addListener(capture)
     try:
-        # multi-batch run so the listener sees several progress events
-        jobs.streaming_upsert_state(spark, sf_dir, max_files_per_trigger=8)
+        # multi-batch run so the listener sees several progress events: two
+        # micro-batches whatever the wire log's file count
+        per_trigger = -(-jobs.changelog_files(spark, sf_dir) // 2)
+        jobs.streaming_upsert_state(spark, sf_dir, max_files_per_trigger=per_trigger)
         # listener delivery is async — wait until all input is accounted for
         for _ in range(80):
             if sum(p["num_input_rows"] for p in capture.progress) >= n_events:

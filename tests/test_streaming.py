@@ -176,7 +176,10 @@ def test_checkpoint_restart_exactly_once(spark, sf_dir, tmp_path):
         return sink
 
     def run(fail_after_batch: int):
-        src = jobs.changelog_stream(spark, sf_dir, max_files_per_trigger=8)
+        # two micro-batches whatever the wire log's file count, so the
+        # crash after batch 0 commits is reached
+        per_trigger = -(-jobs.changelog_files(spark, sf_dir) // 2)
+        src = jobs.changelog_stream(spark, sf_dir, max_files_per_trigger=per_trigger)
         q = (
             src.writeStream.foreachBatch(make_sink(fail_after_batch))
             .option("checkpointLocation", ckpt)
