@@ -108,6 +108,19 @@ RUNTIME_CONFS: dict[str, str] = {
     # variants in 8 runs on local[32]); with the id in the class name, each
     # variant's source differs and misses the codegen cache.
     "spark.sql.codegen.useIdInClassName": "false",
+    # Commit streaming checkpoint files (offsets, commits, state deltas)
+    # through the FileSystem API instead of FileContext. FileContext's
+    # rename asks for the target's link status, and without Hadoop's
+    # native library RawLocalFileSystem answers that by forking `readlink`
+    # (Hadoop 3.4.2: getFileLinkStatusInternal -> FileUtil.readLink ->
+    # Shell), a fork per checkpoint file. Every checkpoint here is on a
+    # local filesystem (tmpfs or .cache), where rename(2) is atomic either
+    # way. A deployment whose checkpoints live on HDFS or an object store
+    # should drop this line and let Spark pick its default manager.
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 

@@ -50,7 +50,12 @@ def temp_checkpoint_dir() -> str:
     3.9-8.3s for the same stream-stream join on /tmp vs a stable 3.1-4.5s on
     /dev/shm). The cluster analog: point `spark.sql.streaming.checkpointLocation`
     worker state at fast local SSD, keep only the *resumable* production
-    checkpoints on durable storage. Callers must remove the dir when done."""
+    checkpoints on durable storage. Callers must remove the dir when done.
+
+    Files here are committed by ``FileSystemBasedCheckpointFileManager``
+    (``session.RUNTIME_CONFS``): a plain rename, atomic on a local
+    filesystem, with no forked ``readlink`` per file as the default
+    FileContext manager needs without Hadoop's native library."""
     import tempfile
 
     base = "/dev/shm/spark_graft_ck"
@@ -1026,11 +1031,6 @@ def foreach_batch_upsert(
     )
     created = {"done": False}
     attempts: dict[int, int] = {}
-    # per-batch persisted image, released in an outer finally once the batch
-    # is DONE (committed or abandoned after the last retry) — retry attempts
-    # in between reuse the cache; a permanently-failed batch must not leak
-    # executor storage on a long-running stream.
-    cached: dict[int, DataFrame] = {}
 
     def _write(df: DataFrame, table: str) -> None:
         # truncate=true: Spark TRUNCATEs an existing stage table instead of
@@ -1049,14 +1049,9 @@ def foreach_batch_upsert(
         finally:
             conn.close()
 
-    def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        # persist the per-batch image: the stage write consumes it, and a
-        # RETRY attempt (ctl_retry) rebuilds the same canonical plan, so the
-        # cache serves attempt 2+ instead of re-running the parse lineage.
-        # Deliberately NOT unpersisted here on failure — release happens in
-        # the outer per-batch finally (after the retry loop gives up or the
-        # batch commits), so the cache serves retries without leaking.
-        flat = (
+    def collapse(batch: DataFrame) -> DataFrame:
+        # the batch's per-key latest image
+        return (
             batch.groupBy("table_name", "key_id")
             .agg(
                 F.max_by(F.struct("is_delete", "after"), "offset").alias("last"),
@@ -1070,9 +1065,9 @@ def foreach_batch_upsert(
                 F.col("last.is_delete").alias("is_delete"),
                 F.col("last.after.*"),
             )
-            .persist()
         )
-        cached[batch_id] = flat
+
+    def merge(flat: DataFrame, batch_id: int) -> None:
         if not created["done"]:
             _write(flat, "CDC_TARGET")
             try:
@@ -1092,33 +1087,45 @@ def foreach_batch_upsert(
             fault_injector(batch_id, attempts[batch_id])
         _exec_sql(merge_sql)
 
-    unwrapped = unwrap(split_dlq(parse_envelope(changelog_stream(spark, sf_dir, max_files_per_trigger)))[0])
-    body = (
-        merge_batch
-        if max_attempts == 1
-        else retrying_foreach_batch(
-            merge_batch, max_attempts=max_attempts, attempt_log=attempt_log
-        )
-    )
+    if max_attempts == 1:
+        # the image is read once, by the write: no cache, so AQE coalesces
+        # the collapse's shuffle and the write opens one connection per
+        # coalesced partition, not one per spark.sql.shuffle.partitions
+        def body(batch: DataFrame, batch_id: int) -> None:
+            merge(collapse(batch), batch_id)
 
-    def body_release(batch: DataFrame, batch_id: int) -> None:
-        # outer finally: the persisted batch image survives intermediate
-        # retry attempts (the point of the cache) but is ALWAYS released
-        # once the batch commits or is abandoned — no leaked executor
-        # storage from permanently-failed batches.
-        try:
-            body(batch, batch_id)
-        finally:
-            df = cached.pop(batch_id, None)
-            if df is not None:
-                df.unpersist()
+    else:
+        # a retry reads the image again, so persist it once per batch and
+        # release it once the batch commits or is abandoned after the last
+        # attempt: a permanently-failed batch must not leak executor
+        # storage on a long-running stream.
+        cached: dict[int, DataFrame] = {}
+
+        def attempt(batch: DataFrame, batch_id: int) -> None:
+            if batch_id not in cached:
+                cached[batch_id] = collapse(batch).persist()
+            merge(cached[batch_id], batch_id)
+
+        retrying = retrying_foreach_batch(
+            attempt, max_attempts=max_attempts, attempt_log=attempt_log
+        )
+
+        def body(batch: DataFrame, batch_id: int) -> None:
+            try:
+                retrying(batch, batch_id)
+            finally:
+                image = cached.pop(batch_id, None)
+                if image is not None:
+                    image.unpersist()
+
+    unwrapped = unwrap(split_dlq(parse_envelope(changelog_stream(spark, sf_dir, max_files_per_trigger)))[0])
 
     import shutil
 
     ck = temp_checkpoint_dir()
     try:
         q = (
-            unwrapped.writeStream.foreachBatch(body_release)
+            unwrapped.writeStream.foreachBatch(body)
             .outputMode("append")
             .option("checkpointLocation", ck)
             .trigger(availableNow=True)

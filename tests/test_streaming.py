@@ -314,6 +314,110 @@ def test_retry_exhaustion_propagates(spark, sf_dir):
     assert len(failing) == 2  # both attempts logged before surfacing
 
 
+CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing"
+
+
+def _checkpoint_manager(session, path: str) -> str:
+    """Class name of the manager a stream started in ``session`` would
+    commit its checkpoint files through."""
+    jvm = session._jvm
+    hadoop_conf = session._jsparkSession.sessionState().newHadoopConf()
+    manager = getattr(jvm, f"{CHECKPOINTING}.CheckpointFileManager").create(
+        jvm.org.apache.hadoop.fs.Path(path), hadoop_conf
+    )
+    return manager.getClass().getName()
+
+
+def test_checkpoints_commit_through_filesystem_manager(spark, sf_dir, tmp_path):
+    """Checkpoint files commit through the FileSystem-based manager, whose
+    rename forks no ``readlink`` helper: in the tuned session, and in an
+    untuned one once a query has loaded its first table through ``t()``."""
+    from cdc_debezium_kafka_airflow_spark.queries.common import t
+
+    fs_manager = f"{CHECKPOINTING}.FileSystemBasedCheckpointFileManager"
+    assert _checkpoint_manager(spark, str(tmp_path)) == fs_manager
+
+    fresh = spark.newSession()
+    assert _checkpoint_manager(fresh, str(tmp_path)) != fs_manager
+    t(fresh, sf_dir, "events")
+    assert _checkpoint_manager(fresh, str(tmp_path)) == fs_manager
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_single_attempt_upsert_caches_nothing_and_coalesces(spark, sf_dir):
+    """Without retries each micro-batch image is read once, by the stage
+    write, so nothing is persisted, and AQE coalesces the collapse: no
+    reduce stage runs at the session's full shuffle width (a persisted
+    image is built at that width, one Derby connection per partition)."""
+    from py4j.protocol import Py4JJavaError
+
+    from bench import make_job_frontier
+
+    spark.catalog.clearCache()  # earlier tests' persisted frames
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    # job ids are sequential per context; this also counts the jobs of
+    # streaming query threads
+    job_frontier = make_job_frontier(sc.statusTracker())
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # two micro-batches: the create path and the stage + MERGE path
+    per_trigger = -(-jobs.changelog_files(spark, sf_dir) // 2)
+    j0 = job_frontier()
+    out = jobs.foreach_batch_upsert(
+        spark, sf_dir, max_files_per_trigger=per_trigger, db_suffix="_onceread"
+    )
+    j1 = job_frontier()
+    assert _cache_is_empty(spark)
+    assert out.count() == upsert_materialize_q(spark, sf_dir).count()
+
+    full_width_reduces = []
+    for jid in range(j0, j1):
+        for sid in sc.statusTracker().getJobInfo(jid).stageIds:
+            try:
+                stage = store.lastStageAttempt(sid)
+            except Py4JJavaError:  # skipped stage: never attempted
+                continue
+            if stage.shuffleReadBytes() > 0 and stage.numTasks() == width:
+                full_width_reduces.append((jid, sid))
+    assert not full_width_reduces
+
+
+def test_retry_upsert_releases_every_persisted_image(spark, sf_dir):
+    """With retries the image is persisted for the second attempt, and
+    released once the batch commits or its last attempt fails."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+    import pytest
+
+    spark.catalog.clearCache()  # earlier tests' persisted frames
+    cached_during_attempt: list[bool] = []
+
+    def flaky(batch_id: int, attempt: int) -> None:
+        cached_during_attempt.append(not _cache_is_empty(spark))
+        if attempt == 1:
+            raise RuntimeError(f"injected b{batch_id}")
+
+    jobs.foreach_batch_upsert(
+        spark, sf_dir, max_files_per_trigger=1,
+        fault_injector=flaky, max_attempts=3, db_suffix="_retryrelease",
+    ).count()
+    assert cached_during_attempt and all(cached_during_attempt)
+    assert _cache_is_empty(spark)
+
+    def always_fail(batch_id: int, attempt: int) -> None:
+        raise RuntimeError("persistent sink outage")
+
+    with pytest.raises(StreamingQueryException):
+        jobs.foreach_batch_upsert(
+            spark, sf_dir, max_files_per_trigger=1,
+            fault_injector=always_fail, max_attempts=2,
+            db_suffix="_retryrelease",
+        )
+    assert _cache_is_empty(spark)
+
+
 def test_schema_evolving_stream_upsert_widens_additively(spark, sf_dir):
     """Mid-stream schema evolution: generation-2 batches add after.ingest_region;
     state widens additively and last-write-wins holds across generations.
