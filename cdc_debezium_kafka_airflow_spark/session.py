@@ -108,20 +108,33 @@ RUNTIME_CONFS: dict[str, str] = {
     # variants in 8 runs on local[32]); with the id in the class name, each
     # variant's source differs and misses the codegen cache.
     "spark.sql.codegen.useIdInClassName": "false",
+}
+
+# Applied on top of RUNTIME_CONFS only to a session whose master is
+# local[...], where every checkpoint this repo writes sits on the machine's
+# own filesystem (tmpfs or .cache).
+LOCAL_RUNTIME_CONFS: dict[str, str] = {
     # Commit streaming checkpoint files (offsets, commits, state deltas)
     # through the FileSystem API instead of FileContext. FileContext's
     # rename asks for the target's link status, and without Hadoop's
     # native library RawLocalFileSystem answers that by forking `readlink`
     # (Hadoop 3.4.2: getFileLinkStatusInternal -> FileUtil.readLink ->
-    # Shell), a fork per checkpoint file. Every checkpoint here is on a
-    # local filesystem (tmpfs or .cache), where rename(2) is atomic either
-    # way. A deployment whose checkpoints live on HDFS or an object store
-    # should drop this line and let Spark pick its default manager.
+    # Shell), a fork per checkpoint file. On a local filesystem rename(2)
+    # is atomic either way. On HDFS or an object store this manager checks
+    # for the target and then renames, weaker than FileContext's rename
+    # without overwrite, so a cluster session keeps Spark's default.
     "spark.sql.streaming.checkpointFileManagerClass": (
         "org.apache.spark.sql.execution.streaming.checkpointing."
         "FileSystemBasedCheckpointFileManager"
     ),
 }
+
+
+def _is_local(spark: SparkSession) -> bool:
+    try:
+        return spark.sparkContext.master.startswith("local")
+    except Exception:  # spark-connect sessions have no accessible context
+        return False
 
 
 # Static conf: read once, when the JVM's code generator first compiles, so
@@ -159,7 +172,8 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable tuning to an existing session (driver-owned)."""
     _ship_package(spark)
     _check_codegen_cache(spark)
-    for k, v in RUNTIME_CONFS.items():
+    confs = RUNTIME_CONFS | (LOCAL_RUNTIME_CONFS if _is_local(spark) else {})
+    for k, v in confs.items():
         try:
             spark.conf.set(k, v)
         except Exception:

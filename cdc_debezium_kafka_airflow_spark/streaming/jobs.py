@@ -52,10 +52,11 @@ def temp_checkpoint_dir() -> str:
     worker state at fast local SSD, keep only the *resumable* production
     checkpoints on durable storage. Callers must remove the dir when done.
 
-    Files here are committed by ``FileSystemBasedCheckpointFileManager``
-    (``session.RUNTIME_CONFS``): a plain rename, atomic on a local
-    filesystem, with no forked ``readlink`` per file as the default
-    FileContext manager needs without Hadoop's native library."""
+    A local[...] session commits files here through
+    ``FileSystemBasedCheckpointFileManager`` (``session.LOCAL_RUNTIME_CONFS``):
+    a plain rename, atomic on a local filesystem, with no forked ``readlink``
+    per file as the default FileContext manager needs without Hadoop's
+    native library."""
     import tempfile
 
     base = "/dev/shm/spark_graft_ck"
@@ -1049,9 +1050,13 @@ def foreach_batch_upsert(
         finally:
             conn.close()
 
-    def collapse(batch: DataFrame) -> DataFrame:
-        # the batch's per-key latest image
-        return (
+    def merge_batch(batch: DataFrame, batch_id: int) -> None:
+        # the batch's per-key latest image. It is read once, by the write,
+        # so it is not persisted: AQE coalesces the collapse's shuffle and
+        # the write opens one connection per coalesced partition, not one
+        # per spark.sql.shuffle.partitions. A retry attempt recomputes it
+        # from the replayable micro-batch.
+        flat = (
             batch.groupBy("table_name", "key_id")
             .agg(
                 F.max_by(F.struct("is_delete", "after"), "offset").alias("last"),
@@ -1066,8 +1071,6 @@ def foreach_batch_upsert(
                 F.col("last.after.*"),
             )
         )
-
-    def merge(flat: DataFrame, batch_id: int) -> None:
         if not created["done"]:
             _write(flat, "CDC_TARGET")
             try:
@@ -1087,38 +1090,14 @@ def foreach_batch_upsert(
             fault_injector(batch_id, attempts[batch_id])
         _exec_sql(merge_sql)
 
-    if max_attempts == 1:
-        # the image is read once, by the write: no cache, so AQE coalesces
-        # the collapse's shuffle and the write opens one connection per
-        # coalesced partition, not one per spark.sql.shuffle.partitions
-        def body(batch: DataFrame, batch_id: int) -> None:
-            merge(collapse(batch), batch_id)
-
-    else:
-        # a retry reads the image again, so persist it once per batch and
-        # release it once the batch commits or is abandoned after the last
-        # attempt: a permanently-failed batch must not leak executor
-        # storage on a long-running stream.
-        cached: dict[int, DataFrame] = {}
-
-        def attempt(batch: DataFrame, batch_id: int) -> None:
-            if batch_id not in cached:
-                cached[batch_id] = collapse(batch).persist()
-            merge(cached[batch_id], batch_id)
-
-        retrying = retrying_foreach_batch(
-            attempt, max_attempts=max_attempts, attempt_log=attempt_log
-        )
-
-        def body(batch: DataFrame, batch_id: int) -> None:
-            try:
-                retrying(batch, batch_id)
-            finally:
-                image = cached.pop(batch_id, None)
-                if image is not None:
-                    image.unpersist()
-
     unwrapped = unwrap(split_dlq(parse_envelope(changelog_stream(spark, sf_dir, max_files_per_trigger)))[0])
+    body = (
+        merge_batch
+        if max_attempts == 1
+        else retrying_foreach_batch(
+            merge_batch, max_attempts=max_attempts, attempt_log=attempt_log
+        )
+    )
 
     import shutil
 

@@ -343,6 +343,34 @@ def test_checkpoints_commit_through_filesystem_manager(spark, sf_dir, tmp_path):
     assert _checkpoint_manager(fresh, str(tmp_path)) == fs_manager
 
 
+def test_cluster_session_keeps_default_checkpoint_manager():
+    """Only a local[...] session gets the FileSystem-based manager: on HDFS
+    or an object store its check-then-rename commit is weaker than
+    FileContext's rename without overwrite."""
+    import types
+
+    from cdc_debezium_kafka_airflow_spark import session as session_mod
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    for master, gets_manager in [
+        ("yarn", False), ("spark://head:7077", False), ("local[4]", True),
+    ]:
+        values: dict[str, str] = {}
+        conf = types.SimpleNamespace(
+            get=lambda k: str(session_mod.CODEGEN_CACHE_ENTRIES),
+            set=values.__setitem__,
+        )
+        ctx = types.SimpleNamespace(
+            master=master, applicationId=f"app-ckpt-{master}",
+            addPyFile=lambda path: None,
+        )
+        session_mod.apply_runtime_confs(
+            types.SimpleNamespace(conf=conf, sparkContext=ctx)
+        )
+        assert session_mod.RUNTIME_CONFS.items() <= values.items()
+        assert (key in values) is gets_manager, master
+
+
 def _cache_is_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
@@ -383,39 +411,6 @@ def test_single_attempt_upsert_caches_nothing_and_coalesces(spark, sf_dir):
             if stage.shuffleReadBytes() > 0 and stage.numTasks() == width:
                 full_width_reduces.append((jid, sid))
     assert not full_width_reduces
-
-
-def test_retry_upsert_releases_every_persisted_image(spark, sf_dir):
-    """With retries the image is persisted for the second attempt, and
-    released once the batch commits or its last attempt fails."""
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-    import pytest
-
-    spark.catalog.clearCache()  # earlier tests' persisted frames
-    cached_during_attempt: list[bool] = []
-
-    def flaky(batch_id: int, attempt: int) -> None:
-        cached_during_attempt.append(not _cache_is_empty(spark))
-        if attempt == 1:
-            raise RuntimeError(f"injected b{batch_id}")
-
-    jobs.foreach_batch_upsert(
-        spark, sf_dir, max_files_per_trigger=1,
-        fault_injector=flaky, max_attempts=3, db_suffix="_retryrelease",
-    ).count()
-    assert cached_during_attempt and all(cached_during_attempt)
-    assert _cache_is_empty(spark)
-
-    def always_fail(batch_id: int, attempt: int) -> None:
-        raise RuntimeError("persistent sink outage")
-
-    with pytest.raises(StreamingQueryException):
-        jobs.foreach_batch_upsert(
-            spark, sf_dir, max_files_per_trigger=1,
-            fault_injector=always_fail, max_attempts=2,
-            db_suffix="_retryrelease",
-        )
-    assert _cache_is_empty(spark)
 
 
 def test_schema_evolving_stream_upsert_widens_additively(spark, sf_dir):
