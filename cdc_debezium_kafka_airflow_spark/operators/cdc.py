@@ -114,6 +114,29 @@ def unwrap(main: DataFrame) -> DataFrame:
     )
 
 
+def latest_images(unwrapped: DataFrame) -> DataFrame:
+    """Latest image per (table_name, key_id) by log ``offset``: ``last`` is
+    the winning (is_delete, after) struct, ``last_offset`` its offset.
+
+    The one latest-image aggregate of the package: the batch upsert, the
+    state-store stream and the database sinks all collapse through it.
+    The expressions and their order are the state-store layout that
+    ``jobs.state_store_audit`` reads back (``value.max``,
+    ``value.valueWithExtremumOrdering``)."""
+    return unwrapped.groupBy("table_name", "key_id").agg(
+        F.max_by(F.struct("is_delete", "after"), "offset").alias("last"),
+        F.max("offset").alias("last_offset"),
+    )
+
+
+def live_images(latest: DataFrame) -> DataFrame:
+    """``latest_images`` minus the keys whose latest record is a delete,
+    flattened to table_name, last_offset and the ``after`` columns."""
+    return latest.filter(~F.col("last.is_delete")).select(
+        "table_name", "last_offset", "last.after.*"
+    )
+
+
 def upsert_materialize(unwrapped: DataFrame) -> DataFrame:
     """The core CDC operator: changelog -> current warehouse state.
 
@@ -127,16 +150,7 @@ def upsert_materialize(unwrapped: DataFrame) -> DataFrame:
     skew handling applies; there is no sort and no per-key row explosion, so
     the plan survives 100x data growth.
     """
-    latest = unwrapped.groupBy("table_name", "key_id").agg(
-        F.max_by(F.struct(F.col("is_delete"), F.col("after")), F.col("offset")).alias(
-            "last"
-        ),
-        F.max("offset").alias("last_offset"),
-    )
-    return (
-        latest.filter(~F.col("last.is_delete"))
-        .select("table_name", "last_offset", "last.after.*")
-    )
+    return live_images(latest_images(unwrapped))
 
 
 def scd2_history(unwrapped: DataFrame) -> DataFrame:

@@ -955,9 +955,7 @@ def snk_avro_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         AvroDataSource,
         EVENTS_AVRO_SCHEMA,
     )
-    from cdc_debezium_kafka_airflow_spark.streaming.jobs import (
-        temp_checkpoint_dir,
-    )
+    from cdc_debezium_kafka_airflow_spark.streaming.jobs import drain
 
     from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
         cache_is_fresh,
@@ -984,19 +982,11 @@ def snk_avro_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "2")
         .parquet(os.path.join(src, "*.parquet"))
     )
-    ck = temp_checkpoint_dir()
-    try:
-        q_ = (
-            stream.writeStream.format("avro_py")
-            .option("path", out)
-            .option("avro_schema", _json.dumps(EVENTS_AVRO_SCHEMA))
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q_.awaitTermination()
-    finally:
-        shutil.rmtree(ck, ignore_errors=True)
+    drain(
+        stream.writeStream.format("avro_py")
+        .option("path", out)
+        .option("avro_schema", _json.dumps(EVENTS_AVRO_SCHEMA))
+    )
     back = spark.read.format("avro_py").option("path", out).load()
     return back.groupBy("event_type").agg(
         F.count("*").alias("n_events"),

@@ -221,7 +221,9 @@ def stream_foreachbatch_upsert_pg(spark: SparkSession, sf_dir: str) -> DataFrame
     driving the SQL, not just a rendered string. Same protocol, guard,
     and oracle as the Derby MERGE twin ``stream_foreachbatch_upsert``."""
     t(spark, sf_dir, "events")
-    return jobs.foreach_batch_upsert_dbapi(spark, sf_dir)
+    return jobs.foreach_batch_upsert(
+        spark, sf_dir, max_files_per_trigger=8, engine="duckdb"
+    )
 
 
 @q(

@@ -204,7 +204,8 @@ def _sweep_scratch(base: str) -> None:
 
 def process_scoped_db_path(name: str) -> str:
     """``.cache/derby_scratch/pid_{pid}/{name}`` — unique per live process
-    (embedded Derby takes an exclusive boot lock per database directory)."""
+    (embedded Derby takes an exclusive boot lock per database directory;
+    a DuckDB sink file is emptied when its sink starts)."""
     _sweep_scratch(os.path.join(_REPO_ROOT, ".cache", "derby_scratch"))
     return os.path.join(
         _REPO_ROOT, ".cache", "derby_scratch", f"pid_{os.getpid()}", name

@@ -1,19 +1,27 @@
-"""JDBC upsert dialects for the CDC sink.
+"""The CDC database sinks' staged-upsert protocol: one protocol, two
+stores, two dialects.
 
 The reference sink is Kafka Connect's JDBC sink in upsert mode against
 Postgres (``insert.mode=upsert`` + ``pk.mode=record_key``, reference
 register-postgres-sink.json:15-17); Connect renders the statement per
 database dialect — ``INSERT ... ON CONFLICT ... DO UPDATE`` on Postgres,
-``MERGE`` on engines that have it. This module is that dispatch for our
-foreachBatch sink: one protocol (stage table -> set-based upsert with a
-``last_offset`` idempotency guard), one statement renderer per dialect.
+``MERGE`` on engines that have it. ``streaming/jobs.foreach_batch_upsert``
+runs that protocol once per micro-batch: collapse to the latest image per
+key, stage it, then one set-based upsert with a ``last_offset``
+idempotency guard.
 
-BOTH dialects are exercised end-to-end: Derby MERGE over JDBC
-(foreach_batch_upsert — the embedded JDBC engine shipped with Spark), and
-the Postgres ON CONFLICT statement executed VERBATIM against a live DuckDB
-over DB-API (foreach_batch_upsert_dbapi — DuckDB shares Postgres's ON
-CONFLICT dialect; no Postgres server exists in this harness, and the
-statement is the exact production string a deployment would run).
+- Two stores, one seam (stage, execute, read, close) over a foreign
+  transport: ``DerbyStore`` is embedded Apache Derby over JDBC (the
+  engine shipped with Spark); ``DuckDbStore`` is a DuckDB file over
+  DB-API, staged through Arrow->pandas (the harness stand-in for the JDBC
+  wire to a served Postgres).
+- Two dialects: ``DerbyMergeDialect`` renders ``MERGE INTO``;
+  ``PostgresOnConflictDialect`` renders the Postgres ``ON CONFLICT``
+  statement, which runs verbatim on DuckDB (same dialect: unique-index
+  conflict target, EXCLUDED pseudo-row, DO UPDATE ... WHERE guard). Each
+  store carries the dialect it speaks.
+- The streaming SCD2 history sink (``jobs.foreach_batch_scd2``) uses the
+  DuckDB store with the ``SCD2_*`` statements below.
 
 Shared semantics every dialect must preserve:
   - conflict key = (join_hash, table_name, key_id): the numeric surrogate
@@ -25,6 +33,8 @@ Shared semantics every dialect must preserve:
 """
 
 from __future__ import annotations
+
+import os
 
 
 class UpsertDialect:
@@ -142,3 +152,129 @@ class PostgresOnConflictDialect(UpsertDialect):
         # drivers that stringify without the SQLState
         s = str(exc)
         return "42P07" in s or "already exists" in s
+
+
+class DerbyStore:
+    """Embedded Derby at ``path`` over JDBC. Staging is Spark's JDBC writer
+    in truncate-overwrite mode: an existing table is TRUNCATEd and reused,
+    not dropped and re-created per micro-batch, so the database and its
+    tables persist across runs of one process."""
+
+    dialect = DerbyMergeDialect()
+
+    def __init__(self, spark, path: str) -> None:
+        self.spark = spark
+        self.url = f"jdbc:derby:{path};create=true"
+        self.props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
+
+    def stage(self, df, table: str) -> None:
+        df.write.option("truncate", "true").jdbc(
+            self.url, table, mode="overwrite", properties=self.props
+        )
+
+    def execute(self, sql: str) -> None:
+        conn = self.spark._jvm.java.sql.DriverManager.getConnection(self.url)
+        try:
+            st = conn.createStatement()
+            st.executeUpdate(sql)
+            st.close()
+        finally:
+            conn.close()
+
+    def read(self, sql: str, schema: str):
+        """The rows of ``sql`` as a lazy Spark JDBC scan typed ``schema``."""
+        return (
+            self.spark.read.option("customSchema", schema)
+            .jdbc(self.url, f"({sql}) AS q", properties=self.props)
+        )
+
+    def close(self) -> None:
+        pass  # every statement opens and closes its own connection
+
+
+class DuckDbStore:
+    """A DuckDB file at ``path`` over DB-API, emptied when opened. Staging
+    moves the frame through the driver (``toPandas``; volume is bounded by
+    the micro-batch) into ``CREATE OR REPLACE TABLE``."""
+
+    dialect = PostgresOnConflictDialect()
+
+    def __init__(self, spark, path: str) -> None:
+        import duckdb
+
+        for suffix in ("", ".wal"):
+            try:
+                os.remove(path + suffix)
+            except OSError:
+                pass
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        self.spark = spark
+        self.con = duckdb.connect(path)
+
+    def stage(self, df, table: str) -> None:
+        self.con.register("stage_df", df.toPandas())
+        try:
+            self.con.execute(
+                f"CREATE OR REPLACE TABLE {table} AS SELECT * FROM stage_df"
+            )
+        finally:
+            self.con.unregister("stage_df")
+
+    def execute(self, sql: str) -> None:
+        self.con.execute(sql)
+
+    def read(self, sql: str, schema: str):
+        """The rows of ``sql``, fetched now, as a Spark frame typed ``schema``."""
+        return self.spark.createDataFrame(self.con.execute(sql).fetch_df(), schema)
+
+    def close(self) -> None:
+        self.con.close()
+
+
+#: The streaming SCD2 history table (``jobs.foreach_batch_scd2``): one row
+#: per op, delete markers included; the unique key makes re-staged ops
+#: no-ops.
+SCD2_DDL = """
+    CREATE TABLE SCD2_HISTORY (
+      join_hash BIGINT, table_name VARCHAR, key_id BIGINT,
+      valid_from_offset BIGINT, is_delete BOOLEAN,
+      valid_to_offset BIGINT, is_current BOOLEAN,
+      event_id BIGINT, ts TIMESTAMP, user_id BIGINT,
+      event_type VARCHAR, value DOUBLE, props VARCHAR);
+    CREATE UNIQUE INDEX SCD2_KEY ON SCD2_HISTORY
+      (join_hash, table_name, key_id, valid_from_offset)
+"""
+
+#: ACCUMULATE: every staged op lands once; a replayed op is a no-op.
+SCD2_INSERT_SQL = """
+    INSERT INTO SCD2_HISTORY
+    SELECT join_hash, table_name, key_id, valid_from_offset,
+           is_delete, NULL, FALSE,
+           event_id, ts, user_id, event_type, value, props
+    FROM SCD2_STAGE
+    ON CONFLICT DO NOTHING
+"""
+
+#: REPAIR: recompute the validity-interval chain of the keys the batch
+#: touched. The UPDATE joins on rowid (computed and applied within ONE
+#: statement, so rowids are stable): measured 15x over the 4-column key
+#: equality join (2.7s -> 0.18s for the sf0.1 protocol); the changed-row
+#: guard reads the pre-update values captured in r.
+SCD2_REPAIR_SQL = """
+    UPDATE SCD2_HISTORY h
+    SET valid_to_offset = r.valid_to_offset, is_current = r.is_current
+    FROM (
+      SELECT rowid AS rid,
+             lead(valid_from_offset) OVER w - 1 AS valid_to_offset,
+             (lead(valid_from_offset) OVER w IS NULL
+              AND NOT is_delete) AS is_current,
+             valid_to_offset AS old_to, is_current AS old_cur
+      FROM SCD2_HISTORY
+      WHERE join_hash IN (SELECT DISTINCT join_hash FROM SCD2_STAGE)
+      WINDOW w AS (PARTITION BY join_hash, table_name, key_id
+                   ORDER BY valid_from_offset)
+    ) r
+    WHERE h.rowid = r.rid
+      AND (r.old_to IS DISTINCT FROM r.valid_to_offset
+           OR r.old_cur IS DISTINCT FROM r.is_current)
+"""

@@ -99,25 +99,25 @@ def test_cache_lock_reentrant_within_process(tmp_path):
 
 def test_derby_scratch_paths_distinct_per_process():
     """Two processes asking for the same logical db name get disjoint
-    directories — Derby's exclusive per-directory boot lock can't collide."""
-    worker = f"""
-    import sys
-    sys.path.insert(0, {REPO!r})
-    from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
-        process_scoped_db_path)
-    print(process_scoped_db_path("derby_sink_v2_sf0.01"))
-    """
-    a, b = _run_worker(worker), _run_worker(worker)
-    assert a.returncode == 0 and b.returncode == 0, (a.stderr, b.stderr)
-    pa, pb = a.stdout.strip(), b.stdout.strip()
-    assert pa != pb
-    assert pa != process_scoped_db_path_local()
-    # and this process's own path is stable across calls
-    assert process_scoped_db_path_local() == process_scoped_db_path_local()
-
-
-def process_scoped_db_path_local() -> str:
-    return cache_util.process_scoped_db_path("derby_sink_v2_sf0.01")
+    paths — Derby's exclusive per-directory boot lock can't collide, and
+    a DuckDB sink file (emptied when opened) can't be wiped by another
+    process."""
+    for name in ("derby_sink_v2_sf0.01", "duckdb_sink_sf0.01.db"):
+        worker = f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
+            process_scoped_db_path)
+        print(process_scoped_db_path({name!r}))
+        """
+        a, b = _run_worker(worker), _run_worker(worker)
+        assert a.returncode == 0 and b.returncode == 0, (a.stderr, b.stderr)
+        pa, pb = a.stdout.strip(), b.stdout.strip()
+        assert pa != pb
+        own = cache_util.process_scoped_db_path(name)
+        assert pa != own
+        # and this process's own path is stable across calls
+        assert cache_util.process_scoped_db_path(name) == own
 
 
 def test_dead_pid_scratch_dirs_are_swept(tmp_path, monkeypatch):

@@ -8,6 +8,9 @@ reference deployment's ON CONFLICT upsert (register-postgres-sink.json:15).
 import pytest
 
 from cdc_debezium_kafka_airflow_spark.streaming.dialects import (
+    SCD2_DDL,
+    SCD2_INSERT_SQL,
+    SCD2_REPAIR_SQL,
     DerbyMergeDialect,
     PostgresOnConflictDialect,
     UpsertDialect,
@@ -140,47 +143,21 @@ def test_postgres_dialect_drives_live_duckdb():
 
 
 def test_scd2_repair_protocol_out_of_order_batches():
-    """The streaming SCD2 sink's accumulate+repair SQL (jobs.foreach_batch_
-    scd2) must converge to the whole-log SCD2 result under ARBITRARY
-    batch order and replays. Planted scenario: one key's ops arrive as
-    [later version], [replay], [earlier version + delete], [re-insert] —
-    the late batch must splice in and repair its predecessor's valid_to
-    in the same statement."""
+    """The streaming SCD2 sink's accumulate+repair SQL (the production
+    ``SCD2_*`` statements of jobs.foreach_batch_scd2) must converge to the
+    whole-log SCD2 result under ARBITRARY batch order and replays. Planted
+    scenario: one key's ops arrive as [later version], [replay], [earlier
+    version + delete], [re-insert] — the late batch must splice in and
+    repair its predecessor's valid_to in the same statement."""
     import duckdb
 
     con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE SCD2_HISTORY (join_hash BIGINT, table_name VARCHAR, "
-        "key_id BIGINT, valid_from_offset BIGINT, is_delete BOOLEAN, "
-        "valid_to_offset BIGINT, is_current BOOLEAN, payload VARCHAR)"
+    con.execute(SCD2_DDL)
+    # the stage carries the history's columns minus the two it derives
+    stage_cols = (
+        "join_hash, table_name, key_id, valid_from_offset, is_delete, "
+        "event_id, ts, user_id, event_type, value, props"
     )
-    con.execute(
-        "CREATE UNIQUE INDEX SCD2_KEY ON SCD2_HISTORY "
-        "(join_hash, table_name, key_id, valid_from_offset)"
-    )
-    insert_sql = (
-        "INSERT INTO SCD2_HISTORY SELECT join_hash, table_name, key_id, "
-        "valid_from_offset, is_delete, NULL, FALSE, payload FROM SCD2_STAGE "
-        "ON CONFLICT DO NOTHING"
-    )
-    repair_sql = """
-        UPDATE SCD2_HISTORY h
-        SET valid_to_offset = r.valid_to_offset, is_current = r.is_current
-        FROM (
-          SELECT rowid AS rid,
-                 lead(valid_from_offset) OVER w - 1 AS valid_to_offset,
-                 (lead(valid_from_offset) OVER w IS NULL
-                  AND NOT is_delete) AS is_current,
-                 valid_to_offset AS old_to, is_current AS old_cur
-          FROM SCD2_HISTORY
-          WHERE join_hash IN (SELECT DISTINCT join_hash FROM SCD2_STAGE)
-          WINDOW w AS (PARTITION BY join_hash, table_name, key_id
-                       ORDER BY valid_from_offset)
-        ) r
-        WHERE h.rowid = r.rid
-          AND (r.old_to IS DISTINCT FROM r.valid_to_offset
-               OR r.old_cur IS DISTINCT FROM r.is_current)
-    """
     # ops for key (t,1): v@10, v@20, d@30, v@40 (re-insert, current)
     # and key (t,2): v@15, d@25 (deleted key, no current row)
     batches = [
@@ -191,17 +168,19 @@ def test_scd2_repair_protocol_out_of_order_batches():
         [(1, "t", 1, 20, False, "k1-v20")],  # later still: splice mid-chain
     ]
     for rows in batches:
-        con.execute("DROP TABLE IF EXISTS SCD2_STAGE")
         con.execute(
-            "CREATE TABLE SCD2_STAGE (join_hash BIGINT, table_name VARCHAR, "
-            "key_id BIGINT, valid_from_offset BIGINT, is_delete BOOLEAN, "
-            "payload VARCHAR)"
+            f"CREATE OR REPLACE TABLE SCD2_STAGE AS SELECT {stage_cols} "
+            "FROM SCD2_HISTORY LIMIT 0"
         )
+        # the planted payload rides in event_type
         con.executemany(
-            "INSERT INTO SCD2_STAGE VALUES (?, ?, ?, ?, ?, ?)", rows
+            "INSERT INTO SCD2_STAGE (join_hash, table_name, key_id, "
+            "valid_from_offset, is_delete, event_type) "
+            "VALUES (?, ?, ?, ?, ?, ?)",
+            rows,
         )
-        con.execute(insert_sql)
-        con.execute(repair_sql)
+        con.execute(SCD2_INSERT_SQL)
+        con.execute(SCD2_REPAIR_SQL)
     got = con.execute(
         "SELECT key_id, valid_from_offset, valid_to_offset, is_current "
         "FROM SCD2_HISTORY WHERE NOT is_delete ORDER BY key_id, "

@@ -46,19 +46,6 @@ def test_multibatch_stateful_pandas_upsert_equals_batch(spark, sf_dir):
     assert batch_state.exceptAll(st).count() == 0
 
 
-def test_transform_with_state_upsert_equals_batch(spark, sf_dir):
-    """Spark 4 transformWithStateInPandas variant (typed ValueState handle,
-    RocksDB provider) must equal the batch materialization. Skips where the
-    protobuf package (the TWS state-server protocol) is unavailable."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    tws_state = jobs.stateful_upsert_transform_with_state(spark, sf_dir)
-    batch_state = upsert_materialize_q(spark, sf_dir)
-    assert tws_state.exceptAll(batch_state).count() == 0
-    assert batch_state.exceptAll(tws_state).count() == 0
-
-
 def test_pydatasource_stream_upsert_multibatch_equals_batch(spark, sf_dir):
     """The custom Python streaming source must (a) actually deliver the
     changelog across MULTIPLE micro-batches (bounded offset advance) and
@@ -291,6 +278,37 @@ def test_retry_absorbs_transient_faults_and_matches_batch(spark, sf_dir):
         ).collect()
     }
     assert got == want
+
+
+def test_duckdb_upsert_first_batch_failure_surfaces(spark, sf_dir, monkeypatch):
+    """A failure in micro-batch 0, before the target table exists, must
+    surface as the stream's own error (not as a missing-table error from
+    reading the target back), and the store must still be closed."""
+    import pytest
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from cdc_debezium_kafka_airflow_spark.streaming.dialects import DuckDbStore
+
+    orig_stage, orig_close = DuckDbStore.stage, DuckDbStore.close
+    closed: list = []
+
+    def failing_stage(self, df, table):
+        if table == "CDC_TARGET":
+            raise RuntimeError("injected batch-0 stage failure")
+        orig_stage(self, df, table)
+
+    def recording_close(self):
+        closed.append(self)
+        orig_close(self)
+
+    monkeypatch.setattr(DuckDbStore, "stage", failing_stage)
+    monkeypatch.setattr(DuckDbStore, "close", recording_close)
+    with pytest.raises(StreamingQueryException) as err:
+        jobs.foreach_batch_upsert(
+            spark, sf_dir, engine="duckdb", db_suffix="_failfirst"
+        )
+    assert "injected batch-0 stage failure" in str(err.value)
+    assert len(closed) == 1
 
 
 def test_retry_exhaustion_propagates(spark, sf_dir):
