@@ -14,9 +14,9 @@ from cdc_debezium_kafka_airflow_spark.queries.common import t
 from cdc_debezium_kafka_airflow_spark.queries.cdc_queries import MAT_CTE, _unwrapped
 from cdc_debezium_kafka_airflow_spark.operators.cdc import upsert_materialize
 from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
-    cache_is_fresh,
-    source_fingerprint,
-    write_fingerprint,
+    cache_path,
+    derived_input,
+    process_scoped_scratch,
 )
 
 QUERIES = {}
@@ -31,11 +31,6 @@ def q(name: str, oracle: str | None):
         return fn
 
     return deco
-
-
-def _cache_dir(sf_dir: str, kind: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join("/root/repo/.cache", f"{kind}_{tag}")
 
 
 EVENTS_DDL = (
@@ -57,13 +52,12 @@ def src_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines source: events written once as .jsonl (µs timestamps),
     read back with an explicit schema — schema-on-read typed parsing, the
     second-most-common lake format after parquet."""
-    path = _cache_dir(sf_dir, "events_jsonl")
-    fp = source_fingerprint(sf_dir, "events")
-    if not cache_is_fresh(path, fp):
-        t(spark, sf_dir, "events").write.mode("overwrite").option(
+    path = derived_input(
+        sf_dir, "events", "events_jsonl",
+        lambda path: t(spark, sf_dir, "events").write.option(
             "timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
-        ).json(path)
-        write_fingerprint(path, fp)
+        ).json(path),
+    )
     df = (
         spark.read.schema(EVENTS_DDL)
         .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
@@ -89,13 +83,12 @@ def src_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV source with header + explicit schema + µs timestamp format —
     the quoting/escaping round-trip is exercised by the JSON `props` column
     (embedded quotes and commas)."""
-    path = _cache_dir(sf_dir, "events_csv")
-    fp = source_fingerprint(sf_dir, "events")
-    if not cache_is_fresh(path, fp):
-        t(spark, sf_dir, "events").write.mode("overwrite").option(
+    path = derived_input(
+        sf_dir, "events", "events_csv",
+        lambda path: t(spark, sf_dir, "events").write.option(
             "header", "true"
-        ).option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").csv(path)
-        write_fingerprint(path, fp)
+        ).option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").csv(path),
+    )
     df = (
         spark.read.schema(EVENTS_DDL)
         .option("header", "true")
@@ -124,7 +117,7 @@ def snk_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake analog of the reference's per-table Postgres mirrors), then read
     back and profiled per partition. Reading a single partition later is a
     directory prune, not a scan+filter."""
-    path = _cache_dir(sf_dir, "warehouse")
+    path = cache_path(sf_dir, "warehouse")
     state = upsert_materialize(_unwrapped(spark, sf_dir))
     state.write.mode("overwrite").partitionBy("table_name").parquet(path)
     back = spark.read.parquet(path)
@@ -195,11 +188,10 @@ def src_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC source: events written once as ORC (vectorized columnar like
     parquet, with its own predicate-pushdown/indexes), read back through
     Spark's native ORC reader — the third lake format after parquet/JSON."""
-    path = _cache_dir(sf_dir, "events_orc")
-    fp = source_fingerprint(sf_dir, "events")
-    if not cache_is_fresh(path, fp):
-        t(spark, sf_dir, "events").write.mode("overwrite").orc(path)
-        write_fingerprint(path, fp)
+    path = derived_input(
+        sf_dir, "events", "events_orc",
+        lambda path: t(spark, sf_dir, "events").write.orc(path),
+    )
     df = spark.read.orc(path)
     return df.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
@@ -229,7 +221,7 @@ def snk_compacted_warehouse(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the nightly job that folds them."""
     import os
 
-    path = _cache_dir(sf_dir, "warehouse_compacted")
+    path = cache_path(sf_dir, "warehouse_compacted")
     state = upsert_materialize(_unwrapped(spark, sf_dir))
     (
         state.repartition(F.col("table_name"))
@@ -296,7 +288,7 @@ def ctl_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     both map-side partitioned); the only driver-side state is the date
     diff, bounded by the calendar, exactly like Airflow's own run ledger.
     """
-    path = _cache_dir(sf_dir, "backfill_warehouse")
+    path = cache_path(sf_dir, "backfill_warehouse")
     ev = t(spark, sf_dir, "events").select(
         F.col("ts").cast("date").alias("d"), "value"
     )
@@ -386,7 +378,7 @@ def snk_sorted_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     (test_sorted_export_layout) proves the file ranges are disjoint by
     reading the parquet footers.
     """
-    path = _cache_dir(sf_dir, "sorted_export")
+    path = cache_path(sf_dir, "sorted_export")
     orders = t(spark, sf_dir, "orders")
     (
         orders.repartitionByRange(8, "o_orderdate", "o_orderkey")
@@ -432,24 +424,23 @@ def join_dpp_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     o_orderpriority; the dim (priority -> SLA tier) is a real parquet
     table so the tier filter cannot constant-fold into a static prune.
     """
-    fact_path = _cache_dir(sf_dir, "dpp_fact")
-    dim_path = _cache_dir(sf_dir, "dpp_dim")
-    fp = source_fingerprint(sf_dir, "orders")
-    if not cache_is_fresh(fact_path, fp):
-        t(spark, sf_dir, "orders").write.mode("overwrite").partitionBy(
+    fact_path = derived_input(
+        sf_dir, "orders", "dpp_fact",
+        lambda path: t(spark, sf_dir, "orders").write.partitionBy(
             "o_orderpriority"
-        ).parquet(fact_path)
-        write_fingerprint(fact_path, fp)
-    if not cache_is_fresh(dim_path, fp):
-        t(spark, sf_dir, "orders").select(
+        ).parquet(path),
+    )
+    dim_path = derived_input(
+        sf_dir, "orders", "dpp_dim",
+        lambda path: t(spark, sf_dir, "orders").select(
             F.col("o_orderpriority").alias("prio")
         ).distinct().withColumn(
             "tier",
             F.when(
                 F.col("prio").isin("1-URGENT", "2-HIGH"), "fast"
             ).otherwise("slow"),
-        ).write.mode("overwrite").parquet(dim_path)
-        write_fingerprint(dim_path, fp)
+        ).write.parquet(path),
+    )
     fact = spark.read.parquet(fact_path)
     dim = spark.read.parquet(dim_path).where(F.col("tier") == "fast")
     return (
@@ -505,7 +496,7 @@ def snk_zorder_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-file footers bound BOTH dimensions (vs a 1-D sort which bounds
     only one).
     """
-    path = _cache_dir(sf_dir, "zorder_export")
+    path = cache_path(sf_dir, "zorder_export")
     orders = t(spark, sf_dir, "orders")
     bounds = orders.agg(
         F.min("o_custkey").alias("cmin"),
@@ -580,7 +571,7 @@ def snk_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_audit_publish,
     )
 
-    root = _cache_dir(sf_dir, "wap_orders")
+    root = cache_path(sf_dir, "wap_orders")
     orders = t(spark, sf_dir, "orders")
 
     ok1 = write_audit_publish(orders, root, "v1", "o_orderkey")
@@ -628,7 +619,7 @@ def ddl_warehouse_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t(spark, sf_dir, "orders")
     tag = os.path.basename(os.path.normpath(sf_dir))
     tbl = f"wh_orders_{tag.replace('.', '_')}"
-    loc = _cache_dir(sf_dir, "ddl_warehouse")
+    loc = cache_path(sf_dir, "ddl_warehouse")
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     shutil.rmtree(loc, ignore_errors=True)
     spark.sql(
@@ -692,7 +683,7 @@ def ddl_default_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t(spark, sf_dir, "orders")
     tag = os.path.basename(os.path.normpath(sf_dir))
     tbl = f"wh_default_{tag.replace('.', '_')}"
-    loc = _cache_dir(sf_dir, "ddl_default")
+    loc = cache_path(sf_dir, "ddl_default")
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     shutil.rmtree(loc, ignore_errors=True)
     spark.sql(
@@ -798,7 +789,7 @@ def snk_bloom_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the filters physically exist (file-size delta)."""
     import shutil
 
-    path = _cache_dir(sf_dir, "bloom_orders")
+    path = cache_path(sf_dir, "bloom_orders")
     shutil.rmtree(path, ignore_errors=True)
     orders = t(spark, sf_dir, "orders")
     (
@@ -840,7 +831,7 @@ def fn_metadata_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic compaction contract the oracle can check."""
     import shutil
 
-    path = _cache_dir(sf_dir, "meta_orders")
+    path = cache_path(sf_dir, "meta_orders")
     shutil.rmtree(path, ignore_errors=True)
     orders = t(spark, sf_dir, "orders")
     (
@@ -890,7 +881,6 @@ def src_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     API. Scale: the container's block structure supports split reads; this
     connector partitions per FILE (documented), sized by writer tasks."""
     import json as _json
-    import shutil
 
     from cdc_debezium_kafka_airflow_spark.sources.avro_py import (
         AvroDataSource,
@@ -898,22 +888,19 @@ def src_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     spark.dataSource.register(AvroDataSource)
-    path = _cache_dir(sf_dir, "events_avro")
     # ":8f": 8 writer tasks -> 8 container files -> 8 parallel decode
     # tasks on the read side (r13, guide §6 — the connector partitions
     # per file, so a single-file store serialized the whole decode on
     # one task)
-    fp = source_fingerprint(sf_dir, "events") + ":8f"
-    if not cache_is_fresh(path, fp):
-        shutil.rmtree(path, ignore_errors=True)
-        t(spark, sf_dir, "events").repartition(8).write.format(
+    path = derived_input(
+        sf_dir, "events", "events_avro",
+        lambda path: t(spark, sf_dir, "events").repartition(8).write.format(
             "avro_py"
-        ).option(
-            "path", path
-        ).option(
+        ).option("path", path).option(
             "avro_schema", _json.dumps(EVENTS_AVRO_SCHEMA)
-        ).mode("append").save()
-        write_fingerprint(path, fp)
+        ).mode("append").save(),
+        ":8f",
+    )
     df = spark.read.format("avro_py").option("path", path).load()
     return df.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
@@ -957,24 +944,16 @@ def snk_avro_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from cdc_debezium_kafka_airflow_spark.streaming.jobs import drain
 
-    from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
-        cache_is_fresh,
-        source_fingerprint,
-        write_fingerprint,
-    )
-
     spark.dataSource.register(AvroDataSource)
+    # the 4-file replay source is a derived input; only the archive output
+    # is rebuilt per run
+    src = derived_input(
+        sf_dir, "events", "avro_stream_src",
+        lambda path: t(spark, sf_dir, "events")
+        .repartition(4).write.parquet(path),
+    )
     tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join("/root/repo/.cache", f"avro_stream_{tag}")
-    src = os.path.join(base, "src")
-    out = os.path.join(base, "out")
-    # the 4-file replay source is a derived cache (same pattern as the
-    # other replay dirs); only the archive output is rebuilt per run
-    fp = source_fingerprint(sf_dir, "events")
-    if not cache_is_fresh(src, fp):
-        shutil.rmtree(base, ignore_errors=True)
-        t(spark, sf_dir, "events").repartition(4).write.parquet(src)
-        write_fingerprint(src, fp)
+    out = process_scoped_scratch(f"avro_stream_{tag}")
     shutil.rmtree(out, ignore_errors=True)
     schema = spark.read.parquet(src).schema
     stream = (
@@ -1054,8 +1033,8 @@ def snk_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vid", F.col("nvec").alias("vec"))
     assigned = assigner(v).select("vid", "vec", "cell")
 
-    frag_dir = _cache_dir(sf_dir, "index_frag")
-    compact_dir = _cache_dir(sf_dir, "index_compact")
+    frag_dir = cache_path(sf_dir, "index_frag")
+    compact_dir = cache_path(sf_dir, "index_compact")
     import shutil
 
     shutil.rmtree(frag_dir, ignore_errors=True)
@@ -1154,20 +1133,16 @@ def src_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit schema. Completes the built-in lake/interchange format
     matrix: parquet / JSON / CSV / ORC / XML + JDBC + the Python
     DataSource connectors (avro_py, cdc_changelog, dlq_jsonl)."""
-    path = _cache_dir(sf_dir, "events_xml")
-    fp = source_fingerprint(sf_dir, "events")
     ts_fmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-    if not cache_is_fresh(path, fp):
-        (
-            t(spark, sf_dir, "events")
-            .write.mode("overwrite")
-            .format("xml")
-            .option("rootTag", "events")
-            .option("rowTag", "event")
-            .option("timestampFormat", ts_fmt)
-            .save(path)
-        )
-        write_fingerprint(path, fp)
+    path = derived_input(
+        sf_dir, "events", "events_xml",
+        lambda path: t(spark, sf_dir, "events")
+        .write.format("xml")
+        .option("rootTag", "events")
+        .option("rowTag", "event")
+        .option("timestampFormat", ts_fmt)
+        .save(path),
+    )
     df = (
         spark.read.format("xml")
         .schema(EVENTS_DDL)
@@ -1227,13 +1202,8 @@ def src_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
         render_bmp,
     )
 
-    path = _cache_dir(sf_dir, "media_bmp")
-    fp = source_fingerprint(sf_dir, "documents")
-    if not cache_is_fresh(path, fp):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-        os.makedirs(path, exist_ok=True)
+    def export(path: str) -> None:
+        os.makedirs(path)
         imgs = (
             t(spark, sf_dir, "documents")
             .filter(F.col("doc_id") % 3 == 0)
@@ -1254,7 +1224,8 @@ def src_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
             ) as fh:
                 fh.write(render_bmp(r.doc_id))
         open(os.path.join(path, "_SUCCESS"), "w").close()
-        write_fingerprint(path, fp)
+
+    path = derived_input(sf_dir, "documents", "media_bmp", export)
 
     bin_df = (
         spark.read.format("binaryFile")

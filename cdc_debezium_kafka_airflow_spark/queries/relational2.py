@@ -745,44 +745,39 @@ def _bucketed_table(
     repeated large-scale joins: both sides pre-hashed on the join key at
     write time, so every subsequent join is shuffle-free."""
     import os
-    import shutil
 
     from cdc_debezium_kafka_airflow_spark.queries.common import t as _t
-    from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
-        cache_is_fresh,
-        source_fingerprint,
-        write_fingerprint,
-    )
+    from cdc_debezium_kafka_airflow_spark.sources.cache_util import derived_input
 
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     tbl = f"bkt_{source}_{tag}"
-    loc = os.path.join("/root/repo/spark-warehouse", tbl)
-    fp = source_fingerprint(sf_dir, source)
     df = _t(spark, sf_dir, source).select(*cols)
-    if cache_is_fresh(loc, fp):
-        if not spark.catalog.tableExists(tbl):
-            ddl_cols = ", ".join(
-                f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-            )
-            spark.sql(
-                f"CREATE TABLE {tbl} ({ddl_cols}) USING PARQUET "
-                f"CLUSTERED BY ({key}) SORTED BY ({key}) "
-                f"INTO {n_buckets} BUCKETS LOCATION '{loc}'"
-            )
-    else:
+
+    def build(path: str) -> None:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(loc, ignore_errors=True)
         (
             df.repartition(n_buckets, F.col(key))
             .write.bucketBy(n_buckets, key)
             .sortBy(key)
             .format("parquet")
-            .option("path", loc)
+            .option("path", path)
             .mode("overwrite")
             .saveAsTable(tbl)
         )
-        # saveAsTable writes its own _SUCCESS; add the fingerprint beside it
-        write_fingerprint(loc, fp)
+
+    # saveAsTable writes its own _SUCCESS; the fingerprint goes beside it
+    loc = derived_input(
+        sf_dir, source, f"bkt_{source}", build, under="spark-warehouse"
+    )
+    if not spark.catalog.tableExists(tbl):
+        ddl_cols = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
+        )
+        spark.sql(
+            f"CREATE TABLE {tbl} ({ddl_cols}) USING PARQUET "
+            f"CLUSTERED BY ({key}) SORTED BY ({key}) "
+            f"INTO {n_buckets} BUCKETS LOCATION '{loc}'"
+        )
     return tbl
 
 

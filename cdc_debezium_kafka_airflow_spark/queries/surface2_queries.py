@@ -469,6 +469,9 @@ def snk_pydatasource_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
         parse_envelope,
         split_dlq,
     )
+    from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
+        process_scoped_scratch,
+    )
     from cdc_debezium_kafka_airflow_spark.sources.cdc_fixture import (
         build_changelog,
     )
@@ -479,7 +482,7 @@ def snk_pydatasource_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
         split_dlq(parse_envelope(build_changelog(t(spark, sf_dir, "events"))))[1]
     )
     tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join("/root/repo/.cache", f"dlq_jsonl_{tag}")
+    path = process_scoped_scratch(f"dlq_jsonl_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     dlq.write.format("dlq_jsonl").option("path", path).mode("append").save()
     return spark.read.schema("payload_json string").json(
@@ -516,9 +519,8 @@ def snk_pydatasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         split_dlq,
     )
     from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
-        cache_is_fresh,
-        source_fingerprint,
-        write_fingerprint,
+        derived_input,
+        process_scoped_scratch,
     )
     from cdc_debezium_kafka_airflow_spark.sources.cdc_fixture import (
         build_changelog,
@@ -529,33 +531,28 @@ def snk_pydatasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     spark.dataSource.register(DlqJsonSink)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join("/root/repo/.cache", f"dlq_stream_{tag}")
-    src = os.path.join(base, "src")
-    out = os.path.join(base, "out")
-    ck = os.path.join(base, "ck")
-    # The DLQ remnant is a deterministic derivation of events — cache it
-    # with the same fingerprint protocol as the changelog replay dir
-    # (streaming/jobs.py) so repeated runs pay only for the part this
-    # query actually demonstrates: the Python stream-writer protocol.
-    fp = source_fingerprint(sf_dir, "events")
-    if not cache_is_fresh(src, fp):
-        shutil.rmtree(base, ignore_errors=True)
-        dlq = hoist_field(
+    # The DLQ remnant is a deterministic derivation of events — a derived
+    # input like the changelog replay log, so repeated runs pay only for
+    # the part this query actually demonstrates: the Python stream-writer
+    # protocol. repartition, NOT coalesce: coalesce(4) would collapse the
+    # whole changelog-build/parse stage (1M-row JSON serialize+parse at
+    # sf0.1) onto 4 tasks; repartition keeps that stage at full
+    # parallelism and shuffles only the ~1e-3-selectivity DLQ remnant
+    # into 4 files.
+    src = derived_input(
+        sf_dir, "events", "dlq_stream_src",
+        lambda path: hoist_field(
             split_dlq(
                 parse_envelope(build_changelog(t(spark, sf_dir, "events")))
             )[1]
-        )
-        # repartition, NOT coalesce: coalesce(4) would collapse the whole
-        # changelog-build/parse stage (1M-row JSON serialize+parse at
-        # sf0.1) onto 4 tasks; repartition keeps that stage at full
-        # parallelism and shuffles only the ~1e-3-selectivity DLQ remnant
-        # into 4 files.
-        dlq.repartition(4).write.parquet(src)
-        write_fingerprint(src, fp)
+        ).repartition(4).write.parquet(path),
+    )
     # the streaming leg (writer protocol under test) always runs fresh
-    shutil.rmtree(out, ignore_errors=True)
-    shutil.rmtree(ck, ignore_errors=True)
+    tag = os.path.basename(os.path.normpath(sf_dir))
+    base = process_scoped_scratch(f"dlq_stream_{tag}")
+    out = os.path.join(base, "out")
+    ck = os.path.join(base, "ck")
+    shutil.rmtree(base, ignore_errors=True)
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(
         os.path.join(src, "*.parquet")

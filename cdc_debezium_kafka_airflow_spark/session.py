@@ -57,9 +57,10 @@ def _ship_package(spark: SparkSession) -> None:
     key = session_key(spark)
     if key in _PYFILES_SHIPPED:
         return
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pkg_dir = os.path.join(pkg_root, "cdc_debezium_kafka_airflow_spark")
-    cache_dir = os.path.join(pkg_root, ".cache")
+    from cdc_debezium_kafka_airflow_spark.sources.cache_util import REPO_ROOT
+
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    cache_dir = os.path.join(REPO_ROOT, ".cache")
     os.makedirs(cache_dir, exist_ok=True)
     zip_path = os.path.join(cache_dir, "engine_pkg.zip")
     src_mtime = max(
@@ -78,12 +79,15 @@ def _ship_package(spark: SparkSession) -> None:
                 for f in fs:
                     if f.endswith(".py"):
                         full = os.path.join(dp, f)
-                        zf.write(full, os.path.relpath(full, pkg_root))
+                        zf.write(full, os.path.relpath(full, REPO_ROOT))
         os.replace(tmp, zip_path)
     try:
         spark.sparkContext.addPyFile(zip_path)
-    except Exception:
-        pass  # e.g. spark-connect sessions without an accessible context
+    except Exception as exc:  # e.g. spark-connect sessions have no context
+        print(
+            f"SHIP-PACKAGE-SKIPPED: {type(exc).__name__}: {exc}",
+            file=sys.stderr,
+        )
     _PYFILES_SHIPPED.add(key)
 
 # Runtime-settable confs applied to ANY session that runs our queries --

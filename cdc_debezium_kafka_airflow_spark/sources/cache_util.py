@@ -1,28 +1,35 @@
-"""Fingerprinted on-disk caches for fixture-derived materializations.
+"""Fingerprinted on-disk inputs derived from the fixtures.
 
 Several queries materialize a deterministic derivation of a source table
 (serialized changelog replay log, JSONL/CSV exports, bucketed warehouse)
-under ``/root/repo/.cache``. A bare ``_SUCCESS`` marker is not enough to
-trust such a cache: if the source fixture changes, or two different sf_dirs
-share a basename, stale data would silently be replayed and compared against
-oracles computed from the live fixture. Each cache therefore records the
-source file's identity (absolute path + mtime + size) and is rebuilt when it
-no longer matches.
+under the repository's ``.cache``. A bare ``_SUCCESS`` marker is not enough
+to trust such a directory: if the source fixture changes, or two different
+sf_dirs share a basename, stale data would silently be replayed and
+compared against oracles computed from the live fixture. Each one therefore
+records the source file's identity (absolute path + mtime + size) and is
+rebuilt when it no longer matches. ``derived_input`` is the one
+check -> build -> publish step every such input goes through.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import threading
+from typing import Callable
 
 _FP_NAME = "_FINGERPRINT"
+
+#: The checkout this package lives in; every path below resolves under it.
+REPO_ROOT = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 # Bump whenever the CODE that derives any cached materialization changes
 # semantics (not just when the source fixture changes): round 2 proved the
 # source-only fingerprint insufficient — a JSONL cache written through a
 # broken ts reader stayed "fresh" because the fixture bytes hadn't moved.
-CACHE_CODE_VERSION = "v5"  # v5: semdedup decision log carries the
-# assignment `cell` beside the final block `cid`
+CACHE_CODE_VERSION = "v5"
 
 
 def source_fingerprint(sf_dir: str, table: str = "events") -> str:
@@ -40,10 +47,9 @@ def source_fingerprint(sf_dir: str, table: str = "events") -> str:
 # process publishes via write_fingerprint() — so a concurrent process
 # blocks in its own freshness check until the build lands, re-checks, and
 # reads the finished cache instead of rebuilding over it. flock releases
-# on process death; an abandoned build in a SURVIVING process (the build
-# raised, the caller caught it and moved on without publishing) keeps its
-# lock, so waiters use a bounded wait and then degrade to lock-free
-# behavior rather than hang (_LOCK_WAIT_SEC).
+# on process death, and ``derived_input`` releases it when its build
+# raises; waiters still use a bounded wait (_LOCK_WAIT_SEC) and then
+# degrade to lock-free behavior rather than hang.
 _HELD_LOCKS: dict[str, object] = {}
 _HELD_MU = threading.Lock()
 
@@ -64,13 +70,13 @@ def _check_fresh(cache_dir: str, fingerprint: str) -> bool:
         return fh.read() == fingerprint
 
 
-#: Bounded wait for a peer's in-flight build. A peer that ABANDONS a build
-#: (its build raised, it caught the error and moved on without publishing)
-#: keeps its flock until process exit — an unbounded LOCK_EX here would
-#: turn that into an indefinite cross-process hang. After the deadline the
-#: waiter proceeds WITHOUT the lock (pre-lock behavior: worst case a
-#: redundant concurrent rebuild), which is strictly better than hanging.
-_LOCK_WAIT_SEC = float(os.environ.get("SPARK_GRAFT_CACHE_LOCK_WAIT", "300"))
+#: Bounded wait for a peer's in-flight build. ``derived_input`` releases
+#: the lock when its build raises, but a peer that builds through
+#: ``cache_is_fresh`` directly and abandons the build keeps its flock until
+#: process exit — an unbounded LOCK_EX here would turn that into an
+#: indefinite cross-process hang. After the deadline the waiter proceeds
+#: WITHOUT the lock (worst case a redundant concurrent rebuild).
+_LOCK_WAIT_SEC = 300.0
 
 
 def _flock_bounded(fh, deadline_sec: float) -> bool:
@@ -122,19 +128,55 @@ def write_fingerprint(cache_dir: str, fingerprint: str) -> None:
     with open(tmp, "w") as fh:
         fh.write(fingerprint)
     os.replace(tmp, os.path.join(cache_dir, _FP_NAME))
+    _release_lock(cache_dir)
+
+
+def _release_lock(cache_dir: str) -> None:
     with _HELD_MU:
         lock_fh = _HELD_LOCKS.pop(os.path.abspath(cache_dir), None)
     if lock_fh is not None:
-        lock_fh.close()
+        lock_fh.close()  # closing the fd drops the flock
 
 
-# ---------------------------------------------------------------------------
-# (Removed, round 13: the on-disk trained-model artifact store. It made the
-# first IVF/PQ training of a FRESH process free, which excluded real query
-# work from the driver's timed bench region — the r12 verdict's "gaming-
-# adjacent" finding. Trained models now live only in the in-process memos
-# in operators/similarity.py, which bench.py clears between timed queries.)
-# ---------------------------------------------------------------------------
+def cache_path(
+    sf_dir: str, name: str, suffix: str = "", under: str = ".cache"
+) -> str:
+    """``<repo>/<under>/<name>_<tier><suffix>``, the tier being the fixture
+    directory's basename (``sf0.01``)."""
+    tier = os.path.basename(os.path.normpath(sf_dir))
+    return os.path.join(REPO_ROOT, under, f"{name}_{tier}{suffix}")
+
+
+def derived_input(
+    sf_dir: str,
+    table: str,
+    name: str,
+    build: Callable[[str], None],
+    version: str = "",
+    *,
+    suffix: str = "",
+    under: str = ".cache",
+) -> str:
+    """The directory ``cache_path(sf_dir, name, suffix, under)``, built by
+    ``build(path)`` unless its fingerprint — ``sf_dir``'s ``table`` plus
+    ``version`` (a layout tag such as ``":late5"``) — is current.
+
+    ``build`` writes a fresh directory (any stale one is removed first)
+    and must leave a ``_SUCCESS`` marker in it; the fingerprint is
+    published after it returns. Concurrent processes serialize on the
+    directory's lock (``cache_is_fresh``); a build that raises releases
+    the lock before the error propagates, so peers do not wait it out."""
+    path = cache_path(sf_dir, name, suffix, under)
+    fp = source_fingerprint(sf_dir, table) + version
+    if not cache_is_fresh(path, fp):
+        try:
+            shutil.rmtree(path, ignore_errors=True)
+            build(path)
+            write_fingerprint(path, fp)
+        except BaseException:
+            _release_lock(path)
+            raise
+    return path
 
 
 def process_scoped_scratch(name: str) -> str:
@@ -146,9 +188,9 @@ def process_scoped_scratch(name: str) -> str:
     harness processes from clobbering each other's in-flight build. Dead
     PIDs' dirs are swept with the same age-gated liveness rule as the
     Derby scratch."""
-    _sweep_scratch(os.path.join(_REPO_ROOT, ".cache", "run_scratch"))
+    _sweep_scratch(os.path.join(REPO_ROOT, ".cache", "run_scratch"))
     return os.path.join(
-        _REPO_ROOT, ".cache", "run_scratch", f"pid_{os.getpid()}", name
+        REPO_ROOT, ".cache", "run_scratch", f"pid_{os.getpid()}", name
     )
 
 
@@ -163,9 +205,6 @@ def process_scoped_scratch(name: str) -> str:
 # result; it only removes the cross-process boot-lock collision.
 # ---------------------------------------------------------------------------
 
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
 _SWEPT_BASES: set[str] = set()
 
 
@@ -180,7 +219,6 @@ def _sweep_scratch(base: str) -> None:
     if base in _SWEPT_BASES:
         return
     _SWEPT_BASES.add(base)
-    import shutil
     import time
 
     cutoff = time.time() - 3600
@@ -206,7 +244,7 @@ def process_scoped_db_path(name: str) -> str:
     """``.cache/derby_scratch/pid_{pid}/{name}`` — unique per live process
     (embedded Derby takes an exclusive boot lock per database directory;
     a DuckDB sink file is emptied when its sink starts)."""
-    _sweep_scratch(os.path.join(_REPO_ROOT, ".cache", "derby_scratch"))
+    _sweep_scratch(os.path.join(REPO_ROOT, ".cache", "derby_scratch"))
     return os.path.join(
-        _REPO_ROOT, ".cache", "derby_scratch", f"pid_{os.getpid()}", name
+        REPO_ROOT, ".cache", "derby_scratch", f"pid_{os.getpid()}", name
     )

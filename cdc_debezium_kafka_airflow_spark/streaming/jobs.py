@@ -27,6 +27,10 @@ from itertools import count
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
+    derived_input,
+    process_scoped_scratch,
+)
 from cdc_debezium_kafka_airflow_spark.sources.tables import load_table, normalize_ts
 from cdc_debezium_kafka_airflow_spark.sources.cdc_fixture import build_changelog
 from cdc_debezium_kafka_airflow_spark.operators.cdc import (
@@ -140,20 +144,30 @@ def changelog_dir(spark: SparkSession, sf_dir: str) -> str:
     from_json/filter (no cache boundary exists in a streaming plan to stop
     it). The log is an input, fingerprinted on the events store; its file
     count is the ``defaultParallelism`` of the session that built it."""
-    from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
-        cache_is_fresh,
-        source_fingerprint,
-        write_fingerprint,
+    return derived_input(
+        sf_dir, "events", "changelog",
+        lambda path: build_changelog(
+            load_table(spark, sf_dir, "events")
+        ).write.parquet(path),
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    replay_dir = os.path.join("/root/repo/.cache", f"changelog_{tag}")
-    fp = source_fingerprint(sf_dir, "events")
-    if not cache_is_fresh(replay_dir, fp):
-        batch = build_changelog(load_table(spark, sf_dir, "events"))
-        batch.write.mode("overwrite").parquet(replay_dir)
-        write_fingerprint(replay_dir, fp)
-    return replay_dir
+
+def write_slices(
+    path: str, df: DataFrame, conds: list, files_per_slice: int
+) -> None:
+    """Write ``df`` filtered by each of ``conds`` as one slice of
+    ``files_per_slice`` files, in order, so later slices get later
+    modification times: the file stream source replays them in that
+    order (one slice per trigger with ``maxFilesPerTrigger`` set to
+    ``files_per_slice``)."""
+    for i, cond in enumerate(conds):
+        part = df.filter(cond)
+        part = (
+            part.coalesce(1)
+            if files_per_slice == 1
+            else part.repartition(files_per_slice)
+        )
+        part.write.mode("overwrite" if i == 0 else "append").parquet(path)
 
 
 def changelog_files(spark: SparkSession, sf_dir: str) -> int:
@@ -334,7 +348,7 @@ def stateful_restart_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_debezium_kafka_airflow_spark.sources.tables import load_table
 
     tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join("/root/repo/.cache", f"stateful_restart_{tag}")
+    base = process_scoped_scratch(f"stateful_restart_{tag}")
     shutil.rmtree(base, ignore_errors=True)
     src_dir = os.path.join(base, "source")
     ckpt = os.path.join(base, "checkpoint")
@@ -398,7 +412,7 @@ def dual_sink_medallion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_debezium_kafka_airflow_spark.sources.tables import load_table
 
     tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join("/root/repo/.cache", f"dual_sink_{tag}")
+    base = process_scoped_scratch(f"dual_sink_{tag}")
     shutil.rmtree(base, ignore_errors=True)
     src_dir = os.path.join(base, "source")
     bronze = os.path.join(base, "bronze")
@@ -577,34 +591,20 @@ def state_store_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of polling a Connect REST endpoint, an operator can query the
     actual keyed state a streaming job holds (every live (table, key) and
     whether its latest image is a delete) without touching the job. The
-    checkpoint is fingerprint-cached like the changelog replay log, so
-    repeated audits reuse the committed state.
+    stream runs on every call; its checkpoint is per-process scratch that
+    outlives the call (the returned frame reads it lazily) and is removed
+    when the next audit starts.
     """
-    from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
-        cache_is_fresh,
-        source_fingerprint,
-        write_fingerprint,
-    )
+    import shutil
 
     tag = os.path.basename(os.path.normpath(sf_dir))
-    ck = os.path.join("/root/repo/.cache", f"upsert_ck_{tag}")
-    fp = source_fingerprint(sf_dir, "events")
-    if not cache_is_fresh(ck, fp):
-        import shutil
-
-        shutil.rmtree(ck, ignore_errors=True)
-        name = f"memsink_{next(_MEMSINK_IDS)}"
-        q = (
-            latest_images(unwrapped_stream(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        write_fingerprint(ck, fp)
+    ck = process_scoped_scratch(f"upsert_ck_{tag}")
+    shutil.rmtree(ck, ignore_errors=True)
+    latest_images(unwrapped_stream(spark, sf_dir)).writeStream.format(
+        "noop"
+    ).outputMode("complete").option("checkpointLocation", ck).trigger(
+        availableNow=True
+    ).start().awaitTermination()
     state = spark.read.format("statestore").load(ck)
     # the value side is the aggregation BUFFER: max_by keeps
     # (valueWithExtremumOrdering=the image struct, extremumOrdering=offset)
@@ -1072,24 +1072,12 @@ def two_gen_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     even user_id else 'us'). Shared by the mid-stream schema-evolution job
     and the schema-compatibility introspection (cdc_schema_compat)."""
     from cdc_debezium_kafka_airflow_spark.schemas import ENVELOPE_SCHEMA
-    from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
-        cache_is_fresh,
-        source_fingerprint,
-        write_fingerprint,
-    )
-    from cdc_debezium_kafka_airflow_spark.sources.cdc_fixture import (
-        JSON_TS_OPTS,
-        build_changelog,
-    )
-    from cdc_debezium_kafka_airflow_spark.sources.tables import load_table
+    from cdc_debezium_kafka_airflow_spark.sources.cdc_fixture import JSON_TS_OPTS
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    replay_dir = os.path.join("/root/repo/.cache", f"changelog_2gen_{tag}")
-    fp = source_fingerprint(sf_dir, "events")
-    if not cache_is_fresh(replay_dir, fp):
+    def build(path: str) -> None:
         events = load_table(spark, sf_dir, "events")
         g1 = build_changelog(events.filter(F.col("event_id") % 2 == 0))
-        g1.coalesce(4).write.mode("overwrite").parquet(replay_dir)
+        g1.coalesce(4).write.parquet(path)
         # generation 2: widen payload.after with ingest_region, re-serialize.
         # Tombstones (value null) and malformed (from_json -> null) keep
         # their original value byte-for-byte.
@@ -1113,9 +1101,9 @@ def two_gen_replay_dir(spark: SparkSession, sf_dir: str) -> str:
         )
         # second write job => later file mtimes => FileStreamSource schedules
         # generation 2 after generation 1 (the mid-stream part of the demo)
-        g2.coalesce(4).write.mode("append").parquet(replay_dir)
-        write_fingerprint(replay_dir, fp)
-    return replay_dir
+        g2.coalesce(4).write.mode("append").parquet(path)
+
+    return derived_input(sf_dir, "events", "changelog_2gen", build)
 
 
 def schema_evolving_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1247,23 +1235,19 @@ def streaming_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_ivf_centroids,
     )
     from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
-        cache_is_fresh,
         source_fingerprint,
-        write_fingerprint,
     )
-    from cdc_debezium_kafka_airflow_spark.sources.tables import load_table
 
     tag = os.path.basename(os.path.normpath(sf_dir))
-    fp = source_fingerprint(sf_dir, "embeddings")
+    fp = source_fingerprint(sf_dir, "embeddings")  # the model memo's key
 
     # replay source: the corpus as 8 files so the file stream delivers
     # multiple micro-batches (the fixture itself is one file)
-    replay_dir = os.path.join("/root/repo/.cache", f"emb_replay_{tag}")
-    if not cache_is_fresh(replay_dir, fp):
-        load_table(spark, sf_dir, "embeddings").repartition(8).write.mode(
-            "overwrite"
-        ).parquet(replay_dir)
-        write_fingerprint(replay_dir, fp)
+    replay_dir = derived_input(
+        sf_dir, "embeddings", "emb_replay",
+        lambda path: load_table(spark, sf_dir, "embeddings")
+        .repartition(8).write.parquet(path),
+    )
 
     corpus = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cvec")
@@ -1294,7 +1278,7 @@ def streaming_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return assigner(v).select("vec_id", "cell")
 
-    index_dir = os.path.join("/root/repo/.cache", f"ann_index_{tag}")
+    index_dir = process_scoped_scratch(f"ann_index_{tag}")
     shutil.rmtree(index_dir, ignore_errors=True)
 
     file_schema = spark.read.parquet(replay_dir).schema
@@ -1362,6 +1346,15 @@ def streaming_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _emb_batch_replay_dir(sf_dir: str, batch_df: DataFrame) -> str:
+    """The daily embedding batch (``vec_id % 10 == 9``) as a 4-file replay
+    source, so the file stream delivers it in several micro-batches."""
+    return derived_input(
+        sf_dir, "embeddings", "emb_batch_replay",
+        lambda path: batch_df.repartition(4).write.parquet(path),
+    )
+
+
 def streaming_index_append_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The semantic-dedup -> ANN-index lifecycle over ONE shared stored
     artifact (round-4 verdict item 6): the corpus kept-set
@@ -1393,14 +1386,11 @@ def streaming_index_append_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_ivf_centroids,
     )
     from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
-        cache_is_fresh,
         source_fingerprint,
-        write_fingerprint,
     )
     from cdc_debezium_kafka_airflow_spark.sources.semdedup_cache import (
         corpus_kept_set,
     )
-    from cdc_debezium_kafka_airflow_spark.sources.tables import load_table
 
     tag = os.path.basename(os.path.normpath(sf_dir))
     fp = source_fingerprint(sf_dir, "embeddings")
@@ -1414,18 +1404,14 @@ def streaming_index_append_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_clusters=8, threshold=0.35, cache_key=ck,
     )
 
-    # batch replay source (4 files -> multiple micro-batches), cached
-    replay_dir = os.path.join("/root/repo/.cache", f"emb_batch_replay_{tag}")
-    if not cache_is_fresh(replay_dir, fp):
-        batch_df.repartition(4).write.mode("overwrite").parquet(replay_dir)
-        write_fingerprint(replay_dir, fp)
+    replay_dir = _emb_batch_replay_dir(sf_dir, batch_df)
 
     # SEED: file-level clone of the kept-set artifact — the index starts
     # as the deduped corpus with zero Spark jobs run. The clone lands
     # under src=seed so the streamed batches' src=batch{N} subtrees (the
     # r11 replay-idempotent layout) sit beside it at ONE partition depth
     # — mixed depths would break Spark's partition discovery.
-    index_dir = os.path.join("/root/repo/.cache", f"ann_index_dedup_{tag}")
+    index_dir = process_scoped_scratch(f"ann_index_dedup_{tag}")
     shutil.rmtree(index_dir, ignore_errors=True)
     os.makedirs(index_dir)
     shutil.copytree(kept_dir, os.path.join(index_dir, "src=seed"))
@@ -1568,14 +1554,11 @@ def stream_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         semdedup_verdict_audit,
     )
     from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
-        cache_is_fresh,
         source_fingerprint,
-        write_fingerprint,
     )
     from cdc_debezium_kafka_airflow_spark.sources.semdedup_cache import (
         corpus_kept_set,
     )
-    from cdc_debezium_kafka_airflow_spark.sources.tables import load_table
 
     th = 0.35
     tag = os.path.basename(os.path.normpath(sf_dir))
@@ -1590,12 +1573,9 @@ def stream_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_clusters=8, threshold=th, cache_key=ck,
     )
 
-    replay_dir = os.path.join("/root/repo/.cache", f"emb_batch_replay_{tag}")
-    if not cache_is_fresh(replay_dir, fp):
-        batch_df.repartition(4).write.mode("overwrite").parquet(replay_dir)
-        write_fingerprint(replay_dir, fp)
+    replay_dir = _emb_batch_replay_dir(sf_dir, batch_df)
 
-    out_dir = os.path.join("/root/repo/.cache", f"semdedup_ingest_{tag}")
+    out_dir = process_scoped_scratch(f"semdedup_ingest_{tag}")
     acc_dir = os.path.join(out_dir, "accepted")
     ver_dir = os.path.join(out_dir, "verdicts")
     shutil.rmtree(out_dir, ignore_errors=True)
@@ -1752,21 +1732,12 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval_b = F.broadcast(eval_sh)
 
     # full-text replay source (the quota job's replay projects text away)
-    from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
-        cache_is_fresh,
-        source_fingerprint,
-        write_fingerprint,
+    replay_dir = derived_input(
+        sf_dir, "documents", "docs_text_replay",
+        lambda path: load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text").repartition(4).write.parquet(path),
     )
-    from cdc_debezium_kafka_airflow_spark.sources.tables import load_table
-
-    replay_dir = os.path.join("/root/repo/.cache", f"docs_text_replay_{tag}")
-    fp = source_fingerprint(sf_dir, "documents")
-    if not cache_is_fresh(replay_dir, fp):
-        load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text"
-        ).repartition(4).write.mode("overwrite").parquet(replay_dir)
-        write_fingerprint(replay_dir, fp)
-    out_dir = os.path.join("/root/repo/.cache", f"stream_decon_{tag}")
+    out_dir = process_scoped_scratch(f"stream_decon_{tag}")
     shutil.rmtree(out_dir, ignore_errors=True)
 
     def decon_batch(batch: DataFrame, batch_id: int) -> None:
@@ -1811,52 +1782,45 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def documents_range_replay_dir(
-    spark: SparkSession, sf_dir: str, n_files: int = 2
+def id_range_replay_dir(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    id_col: str,
+    cols: tuple[str, ...],
+    n_files: int,
+    name: str,
 ) -> str:
-    """Fingerprint-cached documents replay split into ``n_files`` doc_id
-    RANGES written in ascending order (later ranges get later mtimes), so
-    the file-stream source delivers micro-batches in global doc_id order —
-    the deterministic arrival order the quota job's oracle needs.
+    """Fingerprint-cached replay of ``table``'s ``cols`` split into
+    ``n_files`` ``id_col`` RANGES written in ascending order (later ranges
+    get later mtimes), so a file-per-trigger stream delivers micro-batches
+    in global id order. ``n_files`` is part of the directory name: two
+    callers with different split counts must not share a directory, or the
+    second silently replays the first's split (ADVICE r08 #4)."""
 
-    Default is TWO ranges: the minimal replay that still falsifies
-    cross-batch quota state (every domain spans both ranges, so batch 2's
-    admissions depend on batch 1's carried counters; was 4 — two extra
-    applyInPandasWithState triggers per run that proved nothing more)."""
-    from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
-        cache_is_fresh,
-        source_fingerprint,
-        write_fingerprint,
-    )
-    from cdc_debezium_kafka_airflow_spark.sources.tables import load_table
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    # n_files in the cache tag + empty-table guard: same hardening as
-    # events_idrange_replay_dir (ADVICE r08 #4 applied to its sibling).
-    replay_dir = os.path.join(
-        "/root/repo/.cache", f"docs_range_{tag}_{n_files}"
-    )
-    fp = source_fingerprint(sf_dir, "documents")
-    if not cache_is_fresh(replay_dir, fp):
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "source"
-        )
-        hi_row = docs.agg(F.max("doc_id")).first()[0]
+    def build(path: str) -> None:
+        df = load_table(spark, sf_dir, table).select(*cols)
+        hi_row = df.agg(F.max(id_col)).first()[0]
         if hi_row is None:
             raise ValueError(
-                f"documents table at {sf_dir} is empty: cannot build a "
-                "doc_id-range replay split"
+                f"{table} table at {sf_dir} is empty: cannot build an "
+                f"{id_col}-range replay split"
             )
         hi = hi_row + 1
         step = max(hi // n_files, 1)
-        for i in range(n_files):
-            lo, up = i * step, (i + 1) * step if i < n_files - 1 else hi
-            mode = "overwrite" if i == 0 else "append"
-            docs.filter(
-                (F.col("doc_id") >= lo) & (F.col("doc_id") < up)
-            ).coalesce(1).write.mode(mode).parquet(replay_dir)
-        write_fingerprint(replay_dir, fp)
-    return replay_dir
+        bounds = [i * step for i in range(n_files)] + [hi]
+        write_slices(
+            path, df,
+            [
+                (F.col(id_col) >= lo) & (F.col(id_col) < up)
+                for lo, up in zip(bounds, bounds[1:])
+            ],
+            1,
+        )
+
+    return derived_input(
+        sf_dir, table, name, build, suffix=f"_{n_files}"
+    )
 
 
 def stream_domain_quota(
@@ -1876,7 +1840,13 @@ def stream_domain_quota(
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    replay = documents_range_replay_dir(spark, sf_dir)
+    # TWO doc_id ranges: the minimal replay that still falsifies
+    # cross-batch quota state (every domain spans both ranges, so batch 2's
+    # admissions depend on batch 1's carried counters)
+    replay = id_range_replay_dir(
+        spark, sf_dir, "documents", "doc_id", ("doc_id", "source"), 2,
+        "docs_range",
+    )
     schema = spark.read.parquet(replay).schema
     stream = (
         spark.readStream.schema(schema)
@@ -1976,37 +1946,26 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form (watermark = exact max(ts) of the seen prefix minus 2 days),
     so the DuckDB oracle reproduces the dropped cohort and the
     emitted-window cut exactly."""
-    import shutil
-
-    from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
-        cache_is_fresh,
-        source_fingerprint,
-        write_fingerprint,
-    )
-    from cdc_debezium_kafka_airflow_spark.sources.tables import load_table
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    replay_dir = os.path.join("/root/repo/.cache", f"events_late_{tag}")
+    d09, d14, d15, d16 = "2024-01-09", "2024-01-14", "2024-01-15", "2024-01-16"
+    ts = F.col("ts")
+    slices = [
+        (ts < d09) | ((ts >= d14) & (ts < d15)),
+        (ts >= d15) & (ts < d16),  # filler batch
+        (ts >= d09) & (ts < d14),  # the late cohort
+        ts >= d16,
+    ]
     # ":late5" = replay layout version; a layout change must invalidate
     # even when the source fixture hasn't moved
-    fp = source_fingerprint(sf_dir, "events") + ":late5"
-    if not cache_is_fresh(replay_dir, fp):
-        shutil.rmtree(replay_dir, ignore_errors=True)
-        e = load_table(spark, sf_dir, "events").select("ts", "event_type")
-        d09, d14, d15, d16 = (
-            "2024-01-09", "2024-01-14", "2024-01-15", "2024-01-16",
-        )
-        parts = [
-            (F.col("ts") < d09)
-            | ((F.col("ts") >= d14) & (F.col("ts") < d15)),
-            (F.col("ts") >= d15) & (F.col("ts") < d16),  # filler batch
-            (F.col("ts") >= d09) & (F.col("ts") < d14),  # the late cohort
-            F.col("ts") >= d16,
-        ]
-        for i, cond in enumerate(parts):
-            mode = "overwrite" if i == 0 else "append"
-            e.filter(cond).coalesce(1).write.mode(mode).parquet(replay_dir)
-        write_fingerprint(replay_dir, fp)
+    replay_dir = derived_input(
+        sf_dir, "events", "events_late",
+        lambda path: write_slices(
+            path,
+            load_table(spark, sf_dir, "events").select("ts", "event_type"),
+            slices,
+            1,
+        ),
+        ":late5",
+    )
 
     schema = spark.read.parquet(replay_dir).schema
     stream = (
@@ -2044,7 +2003,7 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_debezium_kafka_airflow_spark.sources.tables import load_table
 
     tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join("/root/repo/.cache", f"ckpt_recovery_{tag}")
+    base = process_scoped_scratch(f"ckpt_recovery_{tag}")
     shutil.rmtree(base, ignore_errors=True)
     src_dir = os.path.join(base, "source")
     ckpt = os.path.join(base, "checkpoint")
@@ -2101,7 +2060,7 @@ def stream_dim_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_debezium_kafka_airflow_spark.sources.tables import load_table
 
     tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join("/root/repo/.cache", f"dim_refresh_{tag}")
+    base = process_scoped_scratch(f"dim_refresh_{tag}")
     shutil.rmtree(base, ignore_errors=True)
     src_dir = os.path.join(base, "source")
     dim_dir = os.path.join(base, "dim")
@@ -2418,20 +2377,10 @@ def stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     last_ts + gap <= final watermark (max event ts - delay); later sessions
     stay in state forever — exactly what the oracle reproduces.
     """
-    import shutil
-
     import pandas as pd
 
     from pyspark.sql.streaming.state import GroupStateTimeout
-    from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
-        cache_is_fresh,
-        source_fingerprint,
-        write_fingerprint,
-    )
-    from cdc_debezium_kafka_airflow_spark.sources.tables import load_table
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    replay_dir = os.path.join("/root/repo/.cache", f"events_sess_{tag}")
     # 8 files per chronological slice + maxFilesPerTrigger=8 — the same
     # replay discipline as txn_consistent_stream: each trigger still
     # consumes exactly ONE slice (identical micro-batch boundaries, so
@@ -2446,23 +2395,23 @@ def stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     # transition once more for ~1 s of replay overhead. Slice width (10 d)
     # stays far above the 12 h gap, so the cross-close consistency argument
     # in the docstring is unchanged.
-    fp = source_fingerprint(sf_dir, "events") + ":sess3x8"
-    if not cache_is_fresh(replay_dir, fp):
-        shutil.rmtree(replay_dir, ignore_errors=True)
-        e = load_table(spark, sf_dir, "events").select(
-            "ts", "user_id", "event_id"
-        )
-        bounds = [
-            ("2024-01-01", "2024-01-11"),
-            ("2024-01-11", "2024-01-22"),
-            ("2024-01-22", "2024-02-01"),
-        ]
-        for i, (lo, hi) in enumerate(bounds):
-            mode = "overwrite" if i == 0 else "append"
-            e.filter((F.col("ts") >= lo) & (F.col("ts") < hi)).repartition(
-                8
-            ).write.mode(mode).parquet(replay_dir)
-        write_fingerprint(replay_dir, fp)
+    bounds = [
+        ("2024-01-01", "2024-01-11"),
+        ("2024-01-11", "2024-01-22"),
+        ("2024-01-22", "2024-02-01"),
+    ]
+    replay_dir = derived_input(
+        sf_dir, "events", "events_sess",
+        lambda path: write_slices(
+            path,
+            load_table(spark, sf_dir, "events").select(
+                "ts", "user_id", "event_id"
+            ),
+            [(F.col("ts") >= lo) & (F.col("ts") < hi) for lo, hi in bounds],
+            8,
+        ),
+        ":sess3x8",
+    )
 
     schema = spark.read.parquet(replay_dir).schema
     stream = (
@@ -2602,15 +2551,6 @@ def txn_consistent_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_debezium_kafka_airflow_spark.operators.cdc import (
         upsert_materialize,
     )
-    from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
-        cache_is_fresh,
-        source_fingerprint,
-        write_fingerprint,
-    )
-    from cdc_debezium_kafka_airflow_spark.sources.tables import load_table
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    replay_dir = os.path.join("/root/repo/.cache", f"changelog_chrono_{tag}")
     # 8 files per chronological tercile + maxFilesPerTrigger=8: each trigger
     # consumes exactly one tercile, and the tercile parses on 8 cores instead
     # of one (a single coalesce(1) file made every micro-batch's JSON parse
@@ -2623,22 +2563,25 @@ def txn_consistent_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exercise it twice — the minimal count that still falsifies both the
     # buffer-drain and the buffer-refill paths (4 slices re-ran the same
     # transition a third time for ~1 s/run of pure replay overhead).
-    fp = source_fingerprint(sf_dir, "events") + ":chrono3x8"
-    if not cache_is_fresh(replay_dir, fp):
-        shutil.rmtree(replay_dir, ignore_errors=True)
+    def build(path: str) -> None:
         batch = build_changelog(load_table(spark, sf_dir, "events"))
         mx = batch.agg(F.max("offset").alias("m")).collect()[0].m
         if mx is None:  # empty source: one empty slice, not a None // 3
-            batch.limit(0).write.mode("overwrite").parquet(replay_dir)
-        else:
-            bounds = [0, mx // 3, (2 * mx) // 3, mx + 1]
-            for i in range(3):
-                mode = "overwrite" if i == 0 else "append"
-                batch.filter(
-                    (F.col("offset") >= bounds[i])
-                    & (F.col("offset") < bounds[i + 1])
-                ).repartition(8).write.mode(mode).parquet(replay_dir)
-        write_fingerprint(replay_dir, fp)
+            batch.limit(0).write.parquet(path)
+            return
+        bounds = [0, mx // 3, (2 * mx) // 3, mx + 1]
+        write_slices(
+            path, batch,
+            [
+                (F.col("offset") >= lo) & (F.col("offset") < hi)
+                for lo, hi in zip(bounds, bounds[1:])
+            ],
+            8,
+        )
+
+    replay_dir = derived_input(
+        sf_dir, "events", "changelog_chrono", build, ":chrono3x8"
+    )
 
     stream = (
         spark.readStream.schema(CHANGELOG_DDL)
@@ -2792,51 +2735,6 @@ def streaming_ab_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(g, "complete", parts="8")
 
 
-def events_idrange_replay_dir(
-    spark: SparkSession, sf_dir: str, n_files: int = 3
-) -> str:
-    """Fingerprint-cached events replay split into event_id RANGES (each
-    file spans ALL days), so a file-per-trigger stream delivers
-    micro-batches whose per-day bitmaps are genuinely PARTIAL — the
-    input that makes cross-batch bitmap mergeability a real claim
-    instead of a single-batch tautology."""
-    from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
-        cache_is_fresh,
-        source_fingerprint,
-        write_fingerprint,
-    )
-    from cdc_debezium_kafka_airflow_spark.sources.tables import load_table
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    # Cache tag carries n_files: two callers with different split counts
-    # must not share a directory, or the second silently replays the
-    # first's split (ADVICE r08 #4).
-    replay_dir = os.path.join(
-        "/root/repo/.cache", f"events_idrange_{tag}_{n_files}"
-    )
-    fp = source_fingerprint(sf_dir, "events")
-    if not cache_is_fresh(replay_dir, fp):
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id", "ts", "user_id"
-        )
-        hi_row = ev.agg(F.max("event_id")).first()[0]
-        if hi_row is None:
-            raise ValueError(
-                f"events table at {sf_dir} is empty: cannot build an "
-                "event_id-range replay split"
-            )
-        hi = hi_row + 1
-        step = max(hi // n_files, 1)
-        for i in range(n_files):
-            lo, up = i * step, (i + 1) * step if i < n_files - 1 else hi
-            mode = "overwrite" if i == 0 else "append"
-            ev.filter(
-                (F.col("event_id") >= lo) & (F.col("event_id") < up)
-            ).coalesce(1).write.mode(mode).parquet(replay_dir)
-        write_fingerprint(replay_dir, fp)
-    return replay_dir
-
-
 def stream_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of win_rolling_distinct: trailing-7-day exact
     distinct users maintained INCREMENTALLY as micro-batches arrive.
@@ -2858,7 +2756,12 @@ def stream_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     query, over a frame that never grows with event volume."""
     import pandas as pd
 
-    replay = events_idrange_replay_dir(spark, sf_dir)
+    # event_id ranges: each file spans ALL days, so every micro-batch's
+    # per-day bitmaps are genuinely partial
+    replay = id_range_replay_dir(
+        spark, sf_dir, "events", "event_id", ("event_id", "ts", "user_id"), 3,
+        "events_idrange",
+    )
     file_schema = spark.read.parquet(replay).schema
     stream = normalize_ts(
         spark.readStream.schema(file_schema)

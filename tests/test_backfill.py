@@ -17,9 +17,9 @@ def _part_files(path: str, day: str) -> dict[str, float]:
 
 def test_backfill_flags_and_dynamic_overwrite_is_partition_scoped(spark, sf_dir):
     from cdc_debezium_kafka_airflow_spark.queries.format_queries import (
-        _cache_dir,
         ctl_backfill,
     )
+    from cdc_debezium_kafka_airflow_spark.sources.cache_util import cache_path
 
     out = ctl_backfill(spark, sf_dir).collect()
     days = sorted(r.day_str for r in out)
@@ -33,7 +33,7 @@ def test_backfill_flags_and_dynamic_overwrite_is_partition_scoped(spark, sf_dir)
 
     # dynamic partition overwrite must be partition-scoped: rewriting ONE
     # late day leaves every other partition's files untouched
-    path = _cache_dir(sf_dir, "backfill_warehouse")
+    path = cache_path(sf_dir, "backfill_warehouse")
     before_first = _part_files(path, days[0])
     before_last = _part_files(path, days[-1])
     assert before_first and before_last
@@ -78,12 +78,12 @@ def test_sorted_export_layout_has_disjoint_file_ranges(spark, sf_dir):
     import pyarrow.parquet as pq
 
     from cdc_debezium_kafka_airflow_spark.queries.format_queries import (
-        _cache_dir,
         snk_sorted_export,
     )
+    from cdc_debezium_kafka_airflow_spark.sources.cache_util import cache_path
 
     snk_sorted_export(spark, sf_dir).collect()  # ensure written
-    path = _cache_dir(sf_dir, "sorted_export")
+    path = cache_path(sf_dir, "sorted_export")
     ranges = []
     for f in glob.glob(os.path.join(path, "*.parquet")):
         md = pq.ParquetFile(f).metadata
@@ -124,12 +124,12 @@ def test_zorder_export_bounds_both_dims(spark, sf_dir):
     import pyarrow.parquet as pq
 
     from cdc_debezium_kafka_airflow_spark.queries.format_queries import (
-        _cache_dir,
         snk_zorder_export,
     )
+    from cdc_debezium_kafka_airflow_spark.sources.cache_util import cache_path
 
     snk_zorder_export(spark, sf_dir).collect()  # ensure written
-    path = _cache_dir(sf_dir, "zorder_export")
+    path = cache_path(sf_dir, "zorder_export")
     per_file = []
     for f in glob.glob(os.path.join(path, "*.parquet")):
         md = pq.ParquetFile(f).metadata
@@ -201,13 +201,13 @@ def test_bloom_parquet_bigger_than_plain(spark, sf_dir):
 
     from cdc_debezium_kafka_airflow_spark.queries.common import t as load
     from cdc_debezium_kafka_airflow_spark.queries.format_queries import (
-        _cache_dir,
         snk_bloom_parquet,
     )
+    from cdc_debezium_kafka_airflow_spark.sources.cache_util import cache_path
 
     snk_bloom_parquet(spark, sf_dir).collect()
-    bloom_path = _cache_dir(sf_dir, "bloom_orders")
-    plain_path = _cache_dir(sf_dir, "bloom_orders_plain")
+    bloom_path = cache_path(sf_dir, "bloom_orders")
+    plain_path = cache_path(sf_dir, "bloom_orders_plain")
     shutil.rmtree(plain_path, ignore_errors=True)
     load(spark, sf_dir, "orders").write.parquet(plain_path)
 

@@ -11,10 +11,17 @@ the instrumentation.
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
-TOOL = ["python", "/root/repo/tools/compare_bench.py"]
+TOOL = [
+    "python",
+    os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tools", "compare_bench.py",
+    ),
+]
 
 
 def _write(tmp_path, name: str, payload: dict) -> str:

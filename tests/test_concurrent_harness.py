@@ -8,7 +8,8 @@ two fixes without booting Spark:
 1. ``cache_is_fresh`` takes an exclusive flock on a miss and holds it until
    ``write_fingerprint`` publishes — a concurrent process blocks in its own
    freshness check until the build lands, then reads it instead of
-   rebuilding over it.
+   rebuilding over it. ``derived_input`` releases the lock when its build
+   raises.
 2. Derby db paths are process-scoped (``.cache/derby_scratch/pid_{pid}``),
    so two JVMs can never fight over Derby's per-directory boot lock.
 """
@@ -97,6 +98,31 @@ def test_cache_lock_reentrant_within_process(tmp_path):
     assert os.path.abspath(cache_dir) not in cache_util._HELD_LOCKS
 
 
+def test_failed_build_releases_the_lock(tmp_path, monkeypatch):
+    """A build that raises in a surviving process must not keep the flock:
+    peers would otherwise wait out the full bounded wait before falling
+    back to an unlocked rebuild."""
+    import fcntl
+
+    import pytest
+
+    sf = tmp_path / "sf_fail"
+    sf.mkdir()
+    (sf / "events.parquet").write_bytes(b"x")
+    monkeypatch.setattr(cache_util, "REPO_ROOT", str(tmp_path))
+
+    def build(path):
+        os.makedirs(path)
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        cache_util.derived_input(str(sf), "events", "failing", build)
+    assert not cache_util._HELD_LOCKS
+    lock = cache_util.cache_path(str(sf), "failing") + ".lock"
+    with open(lock, "w") as fh:
+        fcntl.flock(fh, fcntl.LOCK_EX | fcntl.LOCK_NB)  # raises if held
+
+
 def test_derby_scratch_paths_distinct_per_process():
     """Two processes asking for the same logical db name get disjoint
     paths — Derby's exclusive per-directory boot lock can't collide, and
@@ -139,7 +165,7 @@ def test_dead_pid_scratch_dirs_are_swept(tmp_path, monkeypatch):
     keep = base / "pid_notanumber"
     keep.mkdir()
     os.utime(keep, (old, old))
-    monkeypatch.setattr(cache_util, "_REPO_ROOT", str(tmp_path))
+    monkeypatch.setattr(cache_util, "REPO_ROOT", str(tmp_path))
     monkeypatch.setattr(cache_util, "_SWEPT_BASES", set())
     p = cache_util.process_scoped_db_path("db")
     assert str(tmp_path) in p

@@ -36,6 +36,7 @@ NEW query/oracle pair before trusting a green local run):
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 import pytest
@@ -94,7 +95,8 @@ def test_query_matches_oracle(name, spark, sf_dir, con):
 def test_every_query_documented_in_coverage():
     """COVERAGE.md is the judge-facing inventory — every queries() entry
     must appear there (and no stale names)."""
-    text = open("/root/repo/COVERAGE.md").read()
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    text = open(os.path.join(root, "COVERAGE.md")).read()
     missing = [name for name in QUERIES if f"`{name}`" not in text]
     assert not missing, f"queries missing from COVERAGE.md: {missing}"
 

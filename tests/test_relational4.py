@@ -825,17 +825,16 @@ def test_avro_columnar_decoder_matches_reference(tmp_path, sf_dir):
             assert got == v and type(got) is type(v), (ri, fi, got, v)
     # and on the real fixture store (100k rows at sf0.1 scale dirs)
     files = av.committed_avro_files
-    import os
     from cdc_debezium_kafka_airflow_spark.queries.format_queries import (
         src_avro,
     )
+    from cdc_debezium_kafka_airflow_spark.sources.cache_util import cache_path
     # building via the query guarantees the store exists for this sf
     from cdc_debezium_kafka_airflow_spark.session import get_spark
 
     spark = get_spark("tests")
     src_avro(spark, sf_dir)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    store = f"/root/repo/.cache/events_avro_{tag}"
+    store = cache_path(sf_dir, "events_avro")
     for fpath in files(store)[:2]:
         ref = [tup for _, tup in av.read_container(fpath)]
         _, cols = av.read_container_columns(fpath)

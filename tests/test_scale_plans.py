@@ -123,11 +123,11 @@ def test_partitioned_warehouse_prunes_partitions(spark, sf_dir):
     directory prune (PartitionFilters), not a full scan + filter."""
     from cdc_debezium_kafka_airflow_spark.queries.format_queries import (
         snk_partitioned_parquet,
-        _cache_dir,
     )
+    from cdc_debezium_kafka_airflow_spark.sources.cache_util import cache_path
 
     snk_partitioned_parquet(spark, sf_dir).collect()  # ensure written
-    back = spark.read.parquet(_cache_dir(sf_dir, "warehouse")).filter(
+    back = spark.read.parquet(cache_path(sf_dir, "warehouse")).filter(
         "table_name = 'ventas'"
     )
     back.collect()

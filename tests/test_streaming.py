@@ -479,8 +479,11 @@ def test_dual_sink_batch_replay_is_idempotent(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from cdc_debezium_kafka_airflow_spark.queries.common import t as load
+    from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
+        process_scoped_scratch,
+    )
 
-    base = "/root/repo/.cache/dual_sink_replay_test"
+    base = process_scoped_scratch("dual_sink_replay_test")
     shutil.rmtree(base, ignore_errors=True)
     bronze = os.path.join(base, "bronze")
     silver = os.path.join(base, "silver")
