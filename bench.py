@@ -1,312 +1,160 @@
-"""Benchmark harness: run every queries() entry at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark sweep: run every queries() entry, or the names given, on the
+fixture tier in $SPARK_GRAFT_SF_DIR (default: the sf0.1 tier) on
+local[$SPARK_GRAFT_CPUS].
 
-Output contract: the LAST stdout line is ONE compact JSON headline
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
-"sf": ...} small enough to survive a tail-buffered log capture. The full
-per-query timing map is written to BENCH_local.json next to this script
-(and echoed to stderr for humans).
+    SPARK_GRAFT_SF_DIR=<tier dir, e.g. .../sf0.01> python bench.py [names...]
 
-Timing = full query wall time (plan + execute + collect to driver), after a
-one-query warmup to amortize JVM/codegen startup. Each query runs once —
-these are end-to-end numbers, not microbenchmarks.
+Protocol: after a one-query warmup (JVM, codegen, parquet footers), every
+query runs REPEATS times, each run a full materialization through the noop
+sink (plan + execute). Between runs the session's persisted frames and
+trained-model memos are dropped, so no run reuses another's work. A run is
+measured with perfbench's instruments: wall time, CPU seconds of the driver
+plus the JVM and every process below it (``run.tree_cpu_s``), and the jobs
+it scheduled, read from the status store (``tracing.SparkStatus``), whose
+submit/complete times split the wall time into pre-job, in-job, gap and
+post-job time (``stats.job_split``).
+
+Output contract: the last two stdout lines are JSON. The second-to-last is
+the per-query map (``metric: per_query_wall_seconds``: ``queries`` = median
+wall seconds, ``n_jobs``); the last is the compact headline (metric, value =
+sum of per-query medians, unit, sf, n_queries, n_errors), kept small so a
+tail-buffered capture still parses it. BENCH_local.json next to this script
+carries the headline, the ``queries`` map and one row per query (see
+``summarize``); stderr carries one human-readable line per query.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+_path = list(sys.path)
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+from run import tree_cpu_s  # noqa: E402
+from stats import job_split, median  # noqa: E402
+from tracing import SparkStatus  # noqa: E402
+
+# perfbench/run.py also puts its directory first on sys.path, where its
+# `tests` package would shadow the repo's; its modules are loaded, so drop it
+sys.path[:] = _path
+
+#: runs per query; odd, so the median run is one of the runs
+REPEATS = 3
 
 
-_LOADAVG_AT_START = os.getloadavg()[0] if hasattr(os, "getloadavg") else 0.0
+def run_record(start: float, end: float, cpu: float, jobs: list[dict]) -> dict:
+    """One run's figures from its wall-clock interval, its CPU seconds and
+    its jobs as ``SparkStatus.new_jobs`` returns them. A job still running
+    at ``end`` counts as running until then."""
+    intervals = [(j["submit"], j["complete"] if j["complete"] is not None else end)
+                 for j in jobs]
+    return {"wall": end - start, "cpu": cpu, "n_jobs": len(jobs),
+            "split": job_split(start, end, intervals)}
 
 
-def make_job_frontier(tracker, start: int = 0):
-    """Returns advance() -> int: the smallest job id NOT yet known to the
-    status tracker, monotone across calls. Spark allocates job ids
-    sequentially per SparkContext, so the advance of this frontier
-    across a query's run is the number of jobs it scheduled.
-
-    Eviction guard (ADVICE r11): ids are probed upward and the walk
-    stops at the first None — but the status store only retains
-    spark.ui.retainedJobs entries (raised to 200k in session.py), so if
-    more jobs than that ran since the last probe, the frontier's own id
-    is evicted (None) while HIGHER live ids exist, and a naive walk
-    would stick at zero advance forever. After the linear walk stops,
-    gallop upward in doubling steps to detect such a gap and resume
-    from the first live id past it. The retained ids form one
-    contiguous window [F-R, F) (F = next id, R = retention); any window
-    wider than its own start offset contains a power of two, so the
-    gallop is GUARANTEED to find it whenever the gap <= R — i.e. unless
-    a single query schedules more than 2R = 400k jobs between probes,
-    two orders of magnitude above a full 344-query sweep. Factored out
-    of main() so the gallop is unit-testable against a stub tracker."""
-    frontier = [start]
-
-    def advance() -> int:
-        i = frontier[0]
-        while True:
-            while tracker.getJobInfo(i) is not None:
-                i += 1
-            for shift in range(25):  # bridges gaps up to 2^24 (~16M ids)
-                if tracker.getJobInfo(i + (1 << shift)) is not None:
-                    i += 1 << shift
-                    break
-            else:
-                break
-        frontier[0] = i
-        return i
-
-    return advance
+def summarize(runs: list[dict]) -> dict:
+    """A query's BENCH_local.json row: median and minimum wall seconds,
+    median CPU seconds, and the job count and pre-job / in-job / gap /
+    post-job seconds of the median run, which sum to its wall time."""
+    mid = sorted(runs, key=lambda r: r["wall"])[len(runs) // 2]
+    return {
+        "wall_median_s": round(mid["wall"], 4),
+        "wall_min_s": round(min(r["wall"] for r in runs), 4),
+        "cpu_median_s": round(median([r["cpu"] for r in runs]), 4),
+        "n_jobs": mid["n_jobs"],
+    } | {f"{k}_s": round(v, 4) for k, v in mid["split"].items()}
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("names", nargs="*", help="queries to run (default: all)")
+    args = ap.parse_args()
+    loadavg_at_start = os.getloadavg()[0]  # before this process adds its own load
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
     import __spark_entry__ as entrymod
     from cdc_debezium_kafka_airflow_spark.operators.similarity import clear_model_memos
     from cdc_debezium_kafka_airflow_spark.session import get_spark
 
+    qs = entrymod.queries()
+    unknown = [n for n in args.names if n not in qs]
+    if unknown:
+        ap.error(f"unknown queries: {', '.join(unknown)}")
+    names = sorted(args.names or qs)
+
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
-
-    # warmup: JVM, codegen, parquet footer caches
+    jvm_pid = int(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
     qs["q1_pricing_summary"](spark, sf_dir).collect()
+    status = SparkStatus(spark)  # job ids from here on belong to the sweep
 
-    # Host per-job scheduler floor, measured INSIDE this run (PLANS.md
-    # "Host per-job floor": it varies 5 ms -> 220 ms BY BOOT on this host
-    # and uniformly taxes job-count-heavy queries ~0.2 s x n_jobs on bad
-    # boots). Recording it in the artifact lets a reader normalize this
-    # run against floors committed under a faster boot instead of
-    # re-deriving the probe by hand.
-    _rdd = spark.sparkContext.parallelize(range(4), 4)
-    _rdd.count()
-    _floor_t0 = time.perf_counter()
-    for _ in range(20):
-        _rdd.count()
-    host_job_floor_ms = round(
-        (time.perf_counter() - _floor_t0) / 20 * 1000, 1
-    )
-
-    # Round 13: the untimed shared-cache warmup is GONE, with the on-disk
-    # shingle/semdedup/model-artifact caches it primed (r12 verdict,
-    # "What's wrong" #3): every query now computes its derivations from
-    # the parquet inputs inside its own timed run. All numbers are COLD
-    # end-to-end numbers; cross-query amortization no longer exists.
-
-    # --- per-query scheduled-job counts (round-11, judge task #3).
-    # Spark job ids are allocated sequentially per SparkContext, so the
-    # count of jobs a query scheduled is the advance of the max-known
-    # job id across its run. Probing upward through statusTracker()
-    # (getJobInfo -> None above the frontier) needs no listener and —
-    # unlike job-group tagging — also counts jobs launched from
-    # STREAMING query threads, which do not inherit the caller's local
-    # properties. With n_jobs in the artifact, floor tax is arithmetic:
-    # floor_tax_sec(query) ~= n_jobs * host_job_floor_ms / 1000, which
-    # is what tools/compare_bench.py subtracts before calling a mover a
-    # regression (the whole r10 adjudication hand-counted these).
-    _advance_job_frontier = make_job_frontier(
-        spark.sparkContext.statusTracker()
-    )
-
-    _advance_job_frontier()  # absorb warmup jobs
-    n_jobs: dict[str, int] = {}
-
-    def run_once(name: str) -> float:
-        before = _advance_job_frontier()
-        start = time.perf_counter()
-        df = qs[name](spark, sf_dir)
-        # noop sink: full materialization of every row/column, no
-        # driver-side collect bottleneck in the measurement
-        df.write.format("noop").mode("overwrite").save()
-        elapsed = time.perf_counter() - start
-        nj = _advance_job_frontier() - before
-        # min-fold mirrors the kept-min timing semantics: re-runs that
-        # skip work via warm artifact caches represent steady state
-        n_jobs[name] = min(n_jobs.get(name, nj), nj)
-        # isolate queries: drop persisted intermediates so long-tail GC from
-        # one query's caches doesn't pollute the next query's timing, and
-        # drop in-process trained-model memos so every timed run pays its
-        # own training (round 13 — no cross-query model amortization)
-        spark.catalog.clearCache()
+    def run_once(name: str) -> dict:
+        # /proc is read outside the timed window; it costs the driver a few ms
+        jvm0 = tree_cpu_s(jvm_pid)
+        py0 = time.process_time()
+        t0 = time.perf_counter()
+        epoch0 = time.time() - t0  # the status store stamps wall-clock time
         try:
+            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            t1 = time.perf_counter()
+            cpu = time.process_time() - py0 + tree_cpu_s(jvm_pid) - jvm0
+        finally:
+            jobs = status.new_jobs()
+            spark.catalog.clearCache()
             clear_model_memos()
-        except Exception as e:
-            print(f"BENCH-ERROR clear_model_memos: {e!r}", file=sys.stderr, flush=True)
-        return elapsed
+        return run_record(epoch0 + t0, epoch0 + t1, cpu, jobs)
 
+    rows: dict[str, dict] = {}
     timings: dict[str, float] = {}
-    for name in sorted(qs):
+    for name in names:
         try:
-            t1 = run_once(name)
-            # steady-state: re-run non-trivial queries once and take the min
-            # (single-shot numbers on a shared box swing 1.5-2x)
-            if t1 > 1.0:
-                t2 = run_once(name)
-                best = min(t1, t2)
-                # a periodic co-tenant burst (observed: an external probe
-                # process every ~15 min) can inflate BOTH back-to-back
-                # runs of a contiguous alphabetical block; when the two
-                # samples disagree >1.5x the measurement is unstable —
-                # buy one more sample and keep the min
-                if best > 1.0 and max(t1, t2) > 1.5 * best:
-                    best = min(best, run_once(name))
-                timings[name] = round(best, 3)
-            else:
-                timings[name] = round(t1, 3)
-        except Exception as exc:  # never lose the whole bench to one query
-            print(f"BENCH-ERROR {name}: {exc}", file=sys.stderr)
+            row = summarize([run_once(name) for _ in range(REPEATS)])
+        except Exception as exc:  # never lose the whole sweep to one query
+            print(f"BENCH-ERROR {name}: {exc}", file=sys.stderr, flush=True)
             timings[name] = -1.0
+            continue
+        rows[name] = row
+        timings[name] = row["wall_median_s"]
+        print(f"{name}: wall {row['wall_median_s']:.3f}s (min {row['wall_min_s']:.3f}) "
+              f"cpu {row['cpu_median_s']:.2f}s jobs {row['n_jobs']} "
+              f"pre {row['pre_job_s']:.3f} in {row['in_job_s']:.3f} "
+              f"gap {row['gap_s']:.3f} post {row['post_job_s']:.3f}",
+              file=sys.stderr, flush=True)
 
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = None
-
-    # --- adjudication pass (round-8, judge task #1): host load can fake
-    # regressions (r07 started at loadavg 6.5, was stamped "idle" under
-    # the old 25%-of-cores threshold, and produced 14 phantom >1.4x
-    # movers). Compare every timing against the committed best-known time
-    # for this sf (BENCH_BEST.json); any query >1.4x over its best gets up
-    # to two fresh runs and keeps the min. A real regression stays slow
-    # through the re-runs; a load artifact recovers. `reruns` in the
-    # artifact records how much adjudication happened.
-    best_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_BEST.json"
-    )
-    best_known: dict[str, float] = {}
-    _best_by_sf: dict[str, dict[str, float]] = {}
-    try:
-        with open(best_path) as fh:
-            _b = json.load(fh)
-        if "by_sf" in _b:
-            _best_by_sf = _b["by_sf"]
-        elif _b.get("sf") is not None:  # legacy single-sf layout
-            _best_by_sf = {str(_b["sf"]): _b.get("queries", {})}
-        best_known = {
-            k: float(v) for k, v in _best_by_sf.get(str(sf), {}).items()
-        }
-    except Exception:
-        pass
-    reruns: dict[str, int] = {}
-    for name in sorted(timings):
-        base = best_known.get(name, 0.0)
-        t_first = timings[name]
-        # only adjudicate non-trivial queries: <0.25 s timings are within
-        # scheduler jitter of each other and never move a triage decision
-        if base <= 0 or t_first <= 0.25 or t_first <= 1.4 * base:
-            continue
-        best, n = t_first, 0
-        while n < 2 and best > 1.4 * base:
-            try:
-                best = min(best, run_once(name))
-            except Exception as exc:
-                print(f"BENCH-RERUN-ERROR {name}: {exc}", file=sys.stderr)
-                break
-            n += 1
-        timings[name] = round(best, 3)
-        reruns[name] = n
-    # fold this run's (adjudicated) numbers back into the best-known file
-    # so next round's adjudication has a baseline that only ever tightens
-    # per-sf buckets: a local sf0.01 iteration must never clobber the
-    # driver-scale sf0.1 baseline (and vice versa)
-    new_best = dict(best_known)
-    for name, v in timings.items():
-        if v >= 0 and (name not in new_best or v < new_best[name]):
-            new_best[name] = v
-    _best_by_sf[str(sf)] = new_best
-    try:
-        with open(best_path, "w") as fh:
-            json.dump(
-                {"by_sf": _best_by_sf}, fh, indent=1, sort_keys=True
-            )
-    except Exception as exc:
-        print(f"BENCH-BEST-WRITE-ERROR: {exc}", file=sys.stderr)
-
-    total = round(sum(v for v in timings.values() if v >= 0), 3)
-    # Round-over-round comparability (round-5 lesson: numbers taken beside
-    # a concurrent Spark session inflate ~1.2-2x): record whether the box
-    # was otherwise busy when the bench STARTED, so a regression triage
-    # can discount load drift without re-deriving it from prose. The
-    # 1-minute loadavg predates this process's own burn. Round-8 lesson:
-    # the old 25%-of-cores threshold stamped a loadavg-6.5 run "idle" on
-    # 32 CPUs and 14 I/O-bound queries came back >1.4x inflated — even a
-    # couple of busy cores steal exactly the wall-clock these single-shot
-    # numbers measure, so anything above ~2 runnable tasks is CONCURRENT.
-    load_state = os.environ.get("SPARK_GRAFT_LOAD_STATE")
-    if load_state not in ("idle", "concurrent"):
-        load_state = "concurrent" if _LOADAVG_AT_START > 2.0 else "idle"
-    full = {
-        "metric": "total_query_wall_seconds",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-        "load_state": load_state,
-        "loadavg_at_start": round(_LOADAVG_AT_START, 2),
-        "host_job_floor_ms": host_job_floor_ms,
-        # per-query adjudication re-run counts (see the pass above);
-        # {} on a clean run — any entry here means the first sample was
-        # >1.4x the committed best-known time and was re-measured
-        "reruns": reruns,
-        # scheduled Spark jobs per query (min across runs): multiply by
-        # host_job_floor_ms to get this boot's scheduler floor tax
-        "n_jobs": n_jobs,
-    }
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_local.json"
-    )
-    with open(detail_path, "w") as fh:
-        json.dump(full, fh, indent=1, sort_keys=True)
-    print(json.dumps(full), file=sys.stderr)
-    # Per-query map on STDOUT (round-12 verdict task #2): the driver's
-    # round-over-round adjudication and scaling block need per-query
-    # timings, and its capture reads the process output tail — a file
-    # (BENCH_local.json) is not enough. Emitted as its OWN compact line
-    # IMMEDIATELY BEFORE the headline rather than folded into it: the
-    # recorded tail in BENCH_r12.json is 2000 chars, so a headline
-    # carrying a ~9 KB map could be truncated mid-JSON and lose even the
-    # total if the capture buffer is that small. This layout degrades
-    # gracefully — a small buffer still sees the intact tiny headline as
-    # the last line; a normal buffer sees both lines.
-    per_query_line = {
-        "metric": "per_query_wall_seconds",
-        "unit": "sec",
-        "sf": sf,
-        "queries": timings,
-        "n_jobs": n_jobs,
-    }
-    print(json.dumps(per_query_line, sort_keys=True,
-                     separators=(",", ":")))
-    # keep the LAST machine-read line tiny: a tail-buffered log capture
-    # must never truncate it mid-JSON
+    n_jobs = {name: row["n_jobs"] for name, row in rows.items()}
     headline = {
         "metric": "total_query_wall_seconds",
-        "value": total,
+        "value": round(sum(v for v in timings.values() if v >= 0), 3),
         "unit": "sec",
         "sf": sf,
         "n_queries": len(timings),
         "n_errors": sum(1 for v in timings.values() if v < 0),
-        "load_state": load_state,
-        "n_reruns": sum(reruns.values()),
-        "host_job_floor_ms": host_job_floor_ms,
-        # total scheduler-floor tax this boot paid across all queries:
-        # sum(n_jobs) * host_job_floor_ms — the part of `value` that is
-        # the HOST's per-job floor, not plan work
-        "total_jobs": sum(n_jobs.values()),
-        "floor_tax_sec": round(
-            sum(n_jobs.values()) * host_job_floor_ms / 1000.0, 1
-        ),
-        "queries_file": "BENCH_local.json",
-        # the full per-query map is the immediately preceding stdout line
-        # (metric: per_query_wall_seconds) and BENCH_local.json
-        "per_query_stdout_metric": "per_query_wall_seconds",
     }
-    print(json.dumps(headline))
+    with open(os.path.join(ROOT, "BENCH_local.json"), "w") as fh:
+        json.dump(headline | {
+            "repeats": REPEATS,
+            "loadavg_at_start": round(loadavg_at_start, 2),
+            "queries": timings,
+            "rows": rows,
+        }, fh, indent=1, sort_keys=True)
+    # The per-query map is its own line before the headline: a capture that
+    # keeps only a short tail must still see the whole headline.
+    print(json.dumps({"metric": "per_query_wall_seconds", "unit": "sec", "sf": sf,
+                      "queries": timings, "n_jobs": n_jobs},
+                     sort_keys=True, separators=(",", ":")))
+    print(json.dumps(headline | {
+        "queries_file": "BENCH_local.json",
+        "per_query_stdout_metric": "per_query_wall_seconds",
+    }))
 
 
 if __name__ == "__main__":

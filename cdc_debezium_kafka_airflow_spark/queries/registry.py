@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,6 +26,7 @@ from cdc_debezium_kafka_airflow_spark.queries import (
     surface_queries,
     surface2_queries,
 )
+from cdc_debezium_kafka_airflow_spark.sources.cache_util import REPO_ROOT
 
 _MODULES = [
     relational,
@@ -88,13 +93,7 @@ def _round_key() -> int:
     """Deterministic round counter: rounds leave one CORRECTNESS_r*.json
     each in the repo root, so ``1 + count`` is the CURRENT round. Purely a
     rotation seed — any stable integer works; 1 when none are present."""
-    import glob as _glob
-    import os as _os
-
-    root = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
-    return 1 + len(_glob.glob(_os.path.join(root, "CORRECTNESS_r*.json")))
+    return 1 + len(glob.glob(os.path.join(REPO_ROOT, "CORRECTNESS_r*.json")))
 
 
 def _row_green(row: object) -> bool:
@@ -121,21 +120,17 @@ def _already_verified() -> tuple[set[str], set[str]]:
     (ext_bpe_tokenize, r05) could not re-enter the ring until the whole
     unseen pool drained — red names now jump the queue instead. Still a
     pure function of repo state: driver and re-runs compute one window."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-
-    root = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
     green: set[str] = set()
     checked: set[str] = set()
-    for path in _glob.glob(_os.path.join(root, "CORRECTNESS_r*.json")):
+    for path in glob.glob(os.path.join(REPO_ROOT, "CORRECTNESS_r*.json")):
         try:
-            data = _json.load(open(path))
-        except Exception:
-            continue  # malformed artifact: fall back to plain rotation
-        if not isinstance(data, dict):
+            with open(path) as fh:
+                data = json.load(fh)
+            if not isinstance(data, dict):
+                raise ValueError("not a JSON object")
+        except (OSError, ValueError) as exc:
+            # malformed artifact: the rotation goes on without its rows
+            print(f"REGISTRY-CORRECTNESS-SKIPPED: {path}: {exc}", file=sys.stderr)
             continue
         for name, row in data.items():
             checked.add(name)

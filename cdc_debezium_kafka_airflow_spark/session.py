@@ -180,10 +180,13 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     for k, v in confs.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
+        except Exception as exc:
             # Non-settable on this build -> keep going; none are
             # correctness-critical except timeZone, which is settable.
-            pass
+            print(
+                f"RUNTIME-CONF-SKIPPED: {k}: {type(exc).__name__}: {exc}",
+                file=sys.stderr,
+            )
     return spark
 
 
@@ -196,13 +199,16 @@ def get_spark(app_name: str = "cdc-spark-engine") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        # bench.py's job-frontier probe (n_jobs accounting) walks
-        # statusTracker job ids; at the default retainedJobs=1000 a single
-        # job-heavy query could evict the probe's anchor and stick the
-        # frontier (ADVICE r11). UI is off, so the retained metadata is
-        # just the status store; a full 344-query bench schedules ~2.2k
-        # jobs per sweep — 200k leaves two orders of magnitude headroom.
+        # perfbench's SparkStatus (which bench.py measures through) walks
+        # statusTracker job ids upward from its last frontier and stops at
+        # the first unknown id, so an evicted frontier would stick it; it
+        # then reads each new job's stages, and past retainedStages the
+        # status store evicts SKIPPED stages first (they have no completion
+        # time), even those of the job just finished. UI is off, so the
+        # retained metadata is just the status store; a bench.py sweep
+        # (344 queries, three runs each) schedules ~7k jobs.
         .config("spark.ui.retainedJobs", "200000")
+        .config("spark.ui.retainedStages", "200000")
         .config("spark.sql.shuffle.partitions", "32")
         .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
     )

@@ -224,3 +224,17 @@ def test_red_rows_do_not_count_as_seen():
     )
     green, red = registry._already_verified()
     assert not green & red
+
+
+def test_malformed_correctness_file_is_named_and_skipped(
+    tmp_path, monkeypatch, capsys
+):
+    (tmp_path / "CORRECTNESS_r01.json").write_text(
+        '{"q": {"rows_match": true, "schema_match": true}}'
+    )
+    (tmp_path / "CORRECTNESS_r02.json").write_text('{"q": ')
+    monkeypatch.setattr(registry, "REPO_ROOT", str(tmp_path))
+    assert registry._already_verified() == ({"q"}, set())
+    err = capsys.readouterr().err
+    assert f"REGISTRY-CORRECTNESS-SKIPPED: {tmp_path / 'CORRECTNESS_r02.json'}: " in err
+    assert "CORRECTNESS_r01" not in err

@@ -389,6 +389,38 @@ def test_cluster_session_keeps_default_checkpoint_manager():
         assert (key in values) is gets_manager, master
 
 
+def test_failed_runtime_conf_is_named_and_the_rest_still_set(capsys):
+    """A conf the session refuses prints one RUNTIME-CONF-SKIPPED line on
+    stderr; every other conf is still applied."""
+    import types
+
+    from cdc_debezium_kafka_airflow_spark import session as session_mod
+
+    bad = "spark.sql.adaptive.enabled"
+    values: dict[str, str] = {}
+
+    def conf_set(k: str, v: str) -> None:
+        if k == bad:
+            raise RuntimeError("not settable here")
+        values[k] = v
+
+    conf = types.SimpleNamespace(
+        get=lambda k: str(session_mod.CODEGEN_CACHE_ENTRIES), set=conf_set
+    )
+    ctx = types.SimpleNamespace(
+        master="local[4]", applicationId="app-conf-skipped",
+        addPyFile=lambda path: None,
+    )
+    session_mod.apply_runtime_confs(
+        types.SimpleNamespace(conf=conf, sparkContext=ctx)
+    )
+    expected = session_mod.RUNTIME_CONFS | session_mod.LOCAL_RUNTIME_CONFS
+    assert values == {k: v for k, v in expected.items() if k != bad}
+    skipped = [line for line in capsys.readouterr().err.splitlines()
+               if line.startswith("RUNTIME-CONF-SKIPPED")]
+    assert skipped == [f"RUNTIME-CONF-SKIPPED: {bad}: RuntimeError: not settable here"]
+
+
 def _cache_is_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
@@ -400,14 +432,19 @@ def test_single_attempt_upsert_caches_nothing_and_coalesces(spark, sf_dir):
     image is built at that width, one Derby connection per partition)."""
     from py4j.protocol import Py4JJavaError
 
-    from bench import make_job_frontier
-
     spark.catalog.clearCache()  # earlier tests' persisted frames
     sc = spark.sparkContext
     store = sc._jsc.sc().statusStore()
-    # job ids are sequential per context; this also counts the jobs of
-    # streaming query threads
-    job_frontier = make_job_frontier(sc.statusTracker())
+    tracker = sc.statusTracker()
+
+    def job_frontier(start: int = 0) -> int:
+        # job ids are sequential per context; this also counts the jobs of
+        # streaming query threads
+        i = start
+        while tracker.getJobInfo(i) is not None:
+            i += 1
+        return i
+
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # two micro-batches: the create path and the stage + MERGE path
     per_trigger = -(-jobs.changelog_files(spark, sf_dir) // 2)
@@ -415,13 +452,13 @@ def test_single_attempt_upsert_caches_nothing_and_coalesces(spark, sf_dir):
     out = jobs.foreach_batch_upsert(
         spark, sf_dir, max_files_per_trigger=per_trigger, db_suffix="_onceread"
     )
-    j1 = job_frontier()
+    j1 = job_frontier(j0)
     assert _cache_is_empty(spark)
     assert out.count() == upsert_materialize_q(spark, sf_dir).count()
 
     full_width_reduces = []
     for jid in range(j0, j1):
-        for sid in sc.statusTracker().getJobInfo(jid).stageIds:
+        for sid in tracker.getJobInfo(jid).stageIds:
             try:
                 stage = store.lastStageAttempt(sid)
             except Py4JJavaError:  # skipped stage: never attempted

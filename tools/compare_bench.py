@@ -13,26 +13,16 @@ import json
 
 
 def load(path: str) -> tuple:
-    """Returns (per_query_map_or_None, headline_total, n_queries,
-    n_jobs_map, host_job_floor_ms). The last two are {} / None for
-    artifacts recorded before round 11 (no n_jobs) or headline-only
-    driver artifacts."""
+    """Returns (per_query_map_or_None, headline_total, n_queries); the map is
+    None for headline-only driver artifacts."""
     with open(path) as f:
         d = json.load(f)
     if "parsed" in d:  # driver-recorded BENCH_r{N}.json (headline only)
         h = d["parsed"]
-        return None, h.get("value"), h.get("n_queries"), {}, h.get(
-            "host_job_floor_ms"
-        )
+        return None, h.get("value"), h.get("n_queries")
     qs = d.get("queries", d)
     qs = {k: v for k, v in qs.items() if isinstance(v, (int, float))}
-    return (
-        qs,
-        d.get("value", sum(qs.values())),
-        len(qs),
-        d.get("n_jobs", {}),
-        d.get("host_job_floor_ms"),
-    )
+    return qs, d.get("value", sum(qs.values())), len(qs)
 
 
 def main() -> None:
@@ -41,13 +31,7 @@ def main() -> None:
     ap.add_argument("new")
     ap.add_argument("--threshold", type=float, default=1.5)
     args = ap.parse_args()
-    (old, old_total, old_n, old_jobs, old_floor), (
-        new,
-        new_total,
-        new_n,
-        new_jobs,
-        new_floor,
-    ) = (load(args.old), load(args.new))
+    (old, old_total, old_n), (new, new_total, new_n) = load(args.old), load(args.new)
     print(
         f"old: {old_n} queries {old_total:.1f}s | "
         f"new: {new_n} queries {new_total:.1f}s"
@@ -56,57 +40,11 @@ def main() -> None:
         print("(per-query map unavailable on one side — headline only)")
         return
 
-    # Floor normalization (round 11): this host's per-job scheduler
-    # floor swings 5->240 ms BY BOOT, so a job-count-heavy query can
-    # read 2-3x slower with an identical plan. When a side carries
-    # n_jobs + host_job_floor_ms, subtract its own boot's floor tax
-    # (n_jobs * floor) before comparing — what remains is plan work.
-    def adjust(qs, jobs, floor):
-        if not jobs or not floor:
-            return qs, False, []
-        adj, clamped = {}, []
-        for n, t in qs.items():
-            tax = jobs.get(n, 0) * floor / 1000.0
-            if tax >= t > 0:
-                # ADVICE r11: when the floor estimate overshoots a
-                # query's whole wall time the subtraction saturates at 0
-                # on THIS side only — which can mask a real regression or
-                # fabricate an improvement. Surface it instead of
-                # silently zeroing.
-                clamped.append(n)
-            adj[n] = max(0.0, t - tax)
-        return adj, True, clamped
-
-    old_adj, old_ok, old_clamped = adjust(old, old_jobs, old_floor)
-    new_adj, new_ok, new_clamped = adjust(new, new_jobs, new_floor)
-    floor_normalized = old_ok and new_ok
-    if floor_normalized:
-        print(
-            f"floor-normalized: old {old_floor}ms/job x "
-            f"{sum(old_jobs.values())} jobs, new {new_floor}ms/job x "
-            f"{sum(new_jobs.values())} jobs"
-        )
-        for side, names in (("old", old_clamped), ("new", new_clamped)):
-            if names:
-                print(
-                    f"  floor tax >= wall time on {side} side for "
-                    f"{len(names)} queries (adjusted value clamped to 0 — "
-                    f"treat their deltas as floor-bound, not plan-bound): "
-                    f"{', '.join(sorted(names)[:12])}"
-                    f"{' ...' if len(names) > 12 else ''}"
-                )
-    elif old_ok != new_ok:
-        print(
-            "(n_jobs on one side only — raw wall-clock comparison; "
-            "floor drift between boots is NOT subtracted)"
-        )
-    cmp_old, cmp_new = (old_adj, new_adj) if floor_normalized else (old, new)
-
     added = sorted(set(new) - set(old))
     removed = sorted(set(old) - set(new))
     common = sorted(set(old) & set(new))
 
-    deltas = [(n, cmp_old[n], cmp_new[n], cmp_new[n] - cmp_old[n]) for n in common]
+    deltas = [(n, old[n], new[n], new[n] - old[n]) for n in common]
     regressions = [
         d
         for d in deltas
@@ -114,17 +52,12 @@ def main() -> None:
     ]
     improvements = sorted(deltas, key=lambda d: d[3])[:5]
 
-    tag = " (floor-adjusted)" if floor_normalized else ""
     print(f"added ({len(added)}): {', '.join(added) or '-'}")
     print(f"removed ({len(removed)}): {', '.join(removed) or '-'}")
-    print(
-        f"\nregressions > {args.threshold}x and >0.5s{tag} "
-        f"({len(regressions)}):"
-    )
+    print(f"\nregressions > {args.threshold}x and >0.5s ({len(regressions)}):")
     for n, o, w, d in sorted(regressions, key=lambda d: -d[3]):
-        raw = f" [raw {old[n]:.2f}s -> {new[n]:.2f}s]" if floor_normalized else ""
-        print(f"  {n}: {o:.2f}s -> {w:.2f}s (+{d:.2f}s){raw}")
-    print(f"\ntop improvements{tag}:")
+        print(f"  {n}: {o:.2f}s -> {w:.2f}s (+{d:.2f}s)")
+    print("\ntop improvements:")
     for n, o, w, d in improvements:
         if d < -0.2:
             print(f"  {n}: {o:.2f}s -> {w:.2f}s ({d:.2f}s)")

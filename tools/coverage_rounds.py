@@ -22,19 +22,9 @@ BEGIN = "<!-- BEGIN driver-round ledger (tools/coverage_rounds.py) -->"
 END = "<!-- END driver-round ledger -->"
 
 
-def row_green(row: object) -> bool:
-    if not isinstance(row, dict):
-        return False
-    return bool(
-        row.get("rows_match")
-        and row.get("schema_match")
-        and row.get("hash_match") in (True, None)
-        and not row.get("err")
-    )
-
-
 def build_section() -> str:
     from cdc_debezium_kafka_airflow_spark.queries.registry import (
+        _row_green,
         get_queries,
     )
 
@@ -46,12 +36,14 @@ def build_section() -> str:
             continue
         rnd = int(m.group(1))
         try:
-            data = json.load(open(path))
-        except Exception:
+            with open(path) as fh:
+                data = json.load(fh)
+        except (OSError, ValueError) as exc:
+            print(f"REGISTRY-CORRECTNESS-SKIPPED: {path}: {exc}", file=sys.stderr)
             continue
         for name, row in data.items():
             checked_rounds.setdefault(name, []).append(rnd)
-            if row_green(row) and (
+            if _row_green(row) and (
                 name not in first_green or rnd < first_green[name]
             ):
                 first_green[name] = rnd
