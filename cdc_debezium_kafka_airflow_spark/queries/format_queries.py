@@ -1015,10 +1015,9 @@ def snk_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # memo/artifact hit populated by an earlier ANN query — cold training
     # on the raw embeddings table needs the real column names
     n_cells = 8
-    cents = train_ivf_centroids(
+    cent_rows = train_ivf_centroids(
         e, id_col="vec_id", vec_col="embedding", k=n_cells, cache_key=fp
     )
-    cent_rows = [(r["centroid_id"], r["centroid"]) for r in cents.collect()]
     assigner = nearest_cell_assigner(
         cent_rows, vec_col="vec", id_col="vid", cid_col="cell",
         d2_col="__d2",

@@ -1252,14 +1252,10 @@ def streaming_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cvec")
     )
-    cents = train_ivf_centroids(corpus, k=8, cache_key=fp)
     # the index artifact is 8 x 64 doubles — inline it as expression
     # literals so per-batch assignment is MAP-ONLY (no broadcast exchange,
-    # no min_by shuffle; see nearest_cell_expr). The collect is bounded by
-    # the centroid count, i.e. the size of the trained index, not the data.
-    cent_rows = [
-        (r["centroid_id"], r["centroid"]) for r in cents.collect()
-    ]
+    # no min_by shuffle; see nearest_cell_expr)
+    cent_rows = train_ivf_centroids(corpus, k=8, cache_key=fp)
 
     # build the assigner ONCE — at k=8 it dispatches to the literal-argmin
     # shape whose Column is a plan fragment reused across every
@@ -1419,10 +1415,9 @@ def streaming_index_append_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explicit id/vec columns (r13): same memo key as corpus_kept_set's
     # training above, so this is a memo hit in-run — but it must also
     # train correctly cold (the raw embeddings frame has vec_id/embedding)
-    cents = train_ivf_centroids(
+    cent_rows = train_ivf_centroids(
         corpus, id_col="vec_id", vec_col="embedding", k=8, cache_key=ck
     )
-    cent_rows = [(r["centroid_id"], r["centroid"]) for r in cents.collect()]
     assigner = nearest_cell_assigner(
         cent_rows, vec_col="vec", id_col="vid", cid_col="cell",
         d2_col="__d2",
