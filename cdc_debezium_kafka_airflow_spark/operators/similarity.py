@@ -179,6 +179,8 @@ def normalized(df: DataFrame, vec_col: str, out_col: str) -> DataFrame:
 
 #: rows in the bounded training sample every trained model is fit on
 SAMPLE_ROWS = 2048
+#: rows per centroid in the pool the farthest-point init seeds from
+SEED_ROWS_PER_CENTROID = 16
 #: Lloyd iterations of the spherical models (IVF cells, over-cap splits)
 KMEANS_ITERS = 3
 #: Lloyd iterations of each PQ subspace codebook
@@ -186,14 +188,16 @@ PQ_ITERS = 5
 
 
 def _nearest(x, c):
-    """Row-wise index of the nearest centroid (squared euclidean distance,
-    ties -> lowest index) — one (n,) distance column per centroid, so peak
-    memory is n x k, never n x k x dim."""
+    """Row-wise index of the nearest centroid by squared euclidean
+    distance, ties -> lowest index. One BLAS matmul: ||x - c||^2 ranks as
+    ||c||^2 - 2 x.c (||x||^2 is constant per row), so the only temporary
+    is the (n, k) score matrix."""
     import numpy as np
 
-    return np.argmin(
-        np.stack([((x - cj) ** 2).sum(axis=1) for cj in c], axis=1), axis=1
-    )
+    score = x @ c.T
+    score *= -2.0
+    score += (c * c).sum(axis=1)
+    return np.argmin(score, axis=1)
 
 
 def _kmeans(x, k: int, iters: int, spherical: bool):
@@ -201,28 +205,34 @@ def _kmeans(x, k: int, iters: int, spherical: bool):
     codebooks, over-cap cell splits): numpy Lloyd on a driver-side matrix.
 
     - Init: farthest-point traversal from row 0 (the deterministic analog
-      of kmeans++ D² sampling; ``np.argmax`` takes the first row on ties).
-      It stops early once every row coincides with a seed, so ``x`` with
-      fewer than ``k`` distinct rows yields that many distinct centroids.
-    - Each iteration assigns rows to their nearest centroid and moves each
-      centroid to its members' mean; a centroid with no members keeps its
-      previous position. ``spherical`` re-normalizes the means, so cells
-      partition the unit sphere by angle (the metric cosine ranks by).
+      of kmeans++ D² sampling; ``np.argmax`` takes the first row on ties)
+      over the seed pool, the first ``SEED_ROWS_PER_CENTROID * k`` rows of
+      ``x``. Farthest-point picks the most isolated rows, so a bounded
+      pool keeps the seeds from being the corpus's most extreme outliers
+      as ``x`` grows, and bounds the init's cost. It stops early once
+      every pool row coincides with a seed, so a pool with fewer than
+      ``k`` distinct rows yields that many distinct centroids.
+    - Each iteration assigns every row of ``x`` to its nearest centroid
+      and moves each centroid to its members' mean; a centroid with no
+      members keeps its previous position. ``spherical`` re-normalizes
+      the means, so cells partition the unit sphere by angle (the metric
+      cosine ranks by).
     - Centroids are rounded to 6 decimals after every iteration, so float
       summation order cannot make later assignments flicker.
 
-    Returns a (k', dim) array, k' = min(k, distinct rows of ``x``)."""
+    Returns a (k', dim) array, k' = min(k, distinct rows of the pool)."""
     import numpy as np
 
+    pool = x[: SEED_ROWS_PER_CENTROID * k]
     chosen = [0]
-    d2 = ((x - x[0]) ** 2).sum(axis=1)
+    d2 = ((pool - pool[0]) ** 2).sum(axis=1)
     while len(chosen) < k:
         nxt = int(np.argmax(d2))
         if d2[nxt] == 0.0:
             break
         chosen.append(nxt)
-        d2 = np.minimum(d2, ((x - x[nxt]) ** 2).sum(axis=1))
-    c = x[chosen].copy()
+        d2 = np.minimum(d2, ((pool - pool[nxt]) ** 2).sum(axis=1))
+    c = pool[chosen].copy()
     for _ in range(iters):
         assign = _nearest(x, c)
         for j in range(len(c)):
@@ -280,14 +290,16 @@ def clear_model_memos() -> None:
     _MODEL_MEMO.clear()
 
 
-def _memoized(key: tuple, train) -> list[tuple]:
-    """``train()``'s rows, memoized under ``key`` unless the corpus
-    identity (``key[1]``) is None."""
-    if key[1] is None:
+def _memoized(cache_key: str | None, key: tuple, train) -> list[tuple]:
+    """``train()``'s rows, memoized under (``cache_key``, ``key``) for the
+    rest of the run; ``cache_key=None`` (no corpus identity) trains every
+    call."""
+    if cache_key is None:
         return train()
-    if key not in _MODEL_MEMO:
-        _MODEL_MEMO[key] = train()
-    return _MODEL_MEMO[key]
+    memo_key = (cache_key, *key)
+    if memo_key not in _MODEL_MEMO:
+        _MODEL_MEMO[memo_key] = train()
+    return _MODEL_MEMO[memo_key]
 
 
 def train_ivf_centroids(
@@ -299,7 +311,8 @@ def train_ivf_centroids(
 ) -> list[tuple[int, list[float]]]:
     """Deterministic SPHERICAL k-means cells -> the model rows
     ``[(centroid_id, unit centroid)]``, ids 0..k'-1 with k' = min(k,
-    distinct corpus directions).
+    distinct directions in ``_kmeans``'s seed pool, the first
+    ``SEED_ROWS_PER_CENTROID * k`` sample rows).
 
     Spherical: vectors are unit-normalized before training and centroid
     means are re-normalized each iteration, so cell assignment minimizes
@@ -323,7 +336,7 @@ def train_ivf_centroids(
         c = _kmeans(x, k, KMEANS_ITERS, spherical=True)
         return [(i, [float(v) for v in row]) for i, row in enumerate(c)]
 
-    return _memoized(("ivf", cache_key, k), train)
+    return _memoized(cache_key, ("ivf", k), train)
 
 
 def nearest_cell_expr(
@@ -592,7 +605,7 @@ def train_pq_codebooks(
     (euclidean) on the same bounded sample IVF trains on
     (``_training_sample``). Returns the model rows ``[(sub, code,
     centroid)]`` in (sub, code) order, codes 0..k'-1 per subspace with
-    k' = min(ksub, distinct sample rows in that subspace); memoized per
+    k' = min(ksub, distinct seed-pool rows in that subspace); memoized per
     ``cache_key`` like the IVF centroids.
 
     ``normalize=False`` trains on raw input vectors — used for RESIDUAL
@@ -615,7 +628,7 @@ def train_pq_codebooks(
             )
         ]
 
-    return _memoized(("pq", cache_key, m, ksub, normalize), train)
+    return _memoized(cache_key, ("pq", m, ksub, normalize), train)
 
 
 def _pq_frame(
@@ -917,7 +930,7 @@ def _split_over_cap(mat, order_idx, cap: int, path: int, depth: int, out):
     ``mat`` is the cell's (c, dim) unit-row matrix; ``order_idx`` the row
     indices of this block in the cell's canonical (centroid_sim, vid) visit
     order. Splits are spherical ``_kmeans``, whose farthest-point init
-    starts from the first row IN THAT ORDER — a pure function of the
+    seeds from the first rows IN THAT ORDER — a pure function of the
     cell's contents, independent of physical partitioning. Recursion
     continues until every final block holds <= cap rows; at _SUB_MAX_DEPTH the
     remainder is chunked in visit order (a guaranteed-cap terminal the

@@ -814,7 +814,7 @@ def _ann_audit_frame(
 
 @q(
     "ext_sim_ivf_topk",
-    _ann_audit_oracle("IVF n_probe=2/8: measured recall 0.39-0.48, floor 35%"),
+    _ann_audit_oracle("IVF n_probe=2/8: measured recall 0.50-0.56, floor 35%"),
 )
 def ext_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained-IVF ANN top-k: deterministic spherical k-means cells
@@ -1440,7 +1440,7 @@ def _sim_inputs(spark: SparkSession, sf_dir: str):
 
 @q(
     "ext_sim_pq_topk",
-    _ann_audit_oracle("flat PQ + exact rerank: measured recall 0.69-0.81, floor 60%"),
+    _ann_audit_oracle("flat PQ + exact rerank: measured recall 0.66-0.87, floor 60%"),
 )
 def ext_sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ADC top-k + exact re-rank: 64-dim vectors
@@ -1466,7 +1466,7 @@ def ext_sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q(
     "ext_sim_ivfpq_topk",
-    _ann_audit_oracle("IVF-PQ n_probe=4/8 residual: measured recall 0.46-0.60, floor 35%"),
+    _ann_audit_oracle("IVF-PQ n_probe=4/8 residual: measured recall 0.45-0.68, floor 35%"),
 )
 def ext_sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ with residual encoding + exact re-rank — the full production
