@@ -3,16 +3,17 @@ exact, n-gram Jaccard, MinHash+LSH, SimHash, embedding-cosine (the last via
 operators.similarity.embedding_near_dups).
 
 Scale shapes:
+  shingle_docs         the one shingler every set-similarity operator reads:
+                       map-only distinct k-gram arrays per document.
   exact_dedup          one hash-aggregate shuffle on the fingerprint; at
                        100 TB the md5 collapses arbitrarily long text to 32
                        bytes *before* the shuffle.
-  ngram_jaccard_pairs  explode(shingles) -> self-equi-join on (block, shingle)
-                       -> count — classic inverted-index join; the block_col
-                       bounds the candidate blowup, and per-doc distinct
-                       shingle sets are computed map-side.
-  minhash_lsh_pairs    Spark ML MinHashLSH (banding via numHashTables);
-                       approxSimilarityJoin is an equi-join on band hash, the
-                       canonical sub-quadratic near-dup plan.
+  ngram_jaccard_pairs  prefix-filtered self-equi-join on (block, shingle) ->
+                       exact verify — the block key bounds the candidate
+                       blowup.
+  minhash_lsh_pairs    xxhash64 band signatures -> equi-join on band hash ->
+                       estimate prune -> exact verify, the canonical
+                       sub-quadratic near-dup plan.
   simhash              per-token xxhash64 -> 64 signed bit-sums in ONE hash
                        aggregation -> 16-bit band blocking -> hamming<=3 via
                        bit_count(xor). No Python in the loop.
@@ -20,10 +21,14 @@ Scale shapes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from cdc_debezium_kafka_airflow_spark.operators.text import normalize_text, ws_tokens
+from cdc_debezium_kafka_airflow_spark.operators.text import (
+    normalize_text,
+    word_grams,
+    ws_tokens,
+)
 
 
 #: verify-stage broadcast gate: a side carrying FULL shingle arrays may be
@@ -86,37 +91,71 @@ def char_shingles(col: Column, k: int = 3) -> Column:
     )
 
 
-def word_shingles(col: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles of normalized text. ~5x fewer set elements
-    than char-10 shingles on prose (one per word vs one per char), so the
-    set-similarity join moves ~5x less data for the same exactness; use when
-    token-level (not spelling-level) duplication is the target."""
-    words = F.split(col, " ")
-    n = F.greatest(F.size(words) - (k - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(words, i + j) for j in range(k)]
-            ),
-        )
+def word_shingles(toks: Column, k: int = 3) -> Column:
+    """Distinct k-word shingles of a token array (``ws_tokens`` of
+    normalized text). ~5x fewer set elements than char-10 shingles on prose
+    (one per word vs one per char), so the set-similarity join moves ~5x
+    less data for the same exactness; and word shingles stay distinctive
+    where char-3 sets saturate (every doc holding most 3-char sequences
+    makes any LSH candidate join quadratic)."""
+    return F.array_distinct(word_grams(toks, k))
+
+
+def shingle_docs(docs: DataFrame, unit: str = "word", k: int = 3) -> DataFrame:
+    """The one frame-level shingler: ``docs`` (any frame with a ``text``
+    column) with ``text`` replaced by ``bucket``, the content-hash percent
+    bucket (``sampling.content_bucket``), and ``shingles``, the distinct
+    k-word (``unit="word"``) or k-char shingles of the normalized text.
+
+    Map-only. Normalized text and its tokens are projected to columns
+    BEFORE shingling: an expression referenced inside a HOF lambda
+    re-evaluates per array element (measured: an un-projected normalize
+    25x slower, an un-projected split 3.5x at sf0.1).
+
+    Lazy: a query that reads the frame more than once persists it."""
+    from cdc_debezium_kafka_airflow_spark.operators.sampling import (
+        content_bucket,
+    )
+
+    keep = [c for c in docs.columns if c != "text"]
+    normed = docs.select(*keep, normalize_text(F.col("text")).alias("_t"))
+    if unit == "word":
+        normed = normed.select(*keep, "_t", ws_tokens(F.col("_t")).alias("_w"))
+        shingles = word_shingles(F.col("_w"), k)
+    else:
+        shingles = char_shingles(F.col("_t"), k)
+    return normed.select(
+        *keep,
+        content_bucket(F.col("_t")).alias("bucket"),
+        shingles.alias("shingles"),
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    block_col: str = "source",
-    k: int = 3,
-    threshold: float = 0.5,
-    unit: str = "char",
-    shingled: DataFrame | None = None,
+def shingled_documents(
+    spark: SparkSession, sf_dir: str, unit: str = "word", k: int = 3
 ) -> DataFrame:
-    """n-gram Jaccard near-dup pairs (id_a < id_b) within a blocking key.
+    """``shingle_docs`` over the documents fixture:
+    (doc_id, source, bucket, shingles), computed in the calling run.
 
-    jaccard = |A∩B| / (|A| + |B| - |A∪B| complement) over distinct k-char
-    (``unit="char"``) or k-word (``unit="word"``) shingles — EXACT result
+    The fixture is one parquet file, one input partition, and the
+    interpreted HOF shingling is the cost, so the rows are spread across
+    the cluster first (a 100 TB corpus arrives pre-partitioned and the
+    round-robin is a cheap rebalance)."""
+    from cdc_debezium_kafka_airflow_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text"
+    )
+    par = spark.sparkContext.defaultParallelism
+    return shingle_docs(docs.repartition(par), unit, k)
+
+
+def ngram_jaccard_pairs(shingled: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """n-gram Jaccard near-dup pairs (id_a < id_b) within a blocking key,
+    over a (doc_id, block, shingles) frame (``shingle_docs``; the caller
+    persists it, the join reads it four times).
+
+    jaccard = |A∩B| / |A∪B| over the distinct shingles — EXACT result
     for the given threshold, computed with **prefix filtering** (the
     standard exact set-similarity join):
 
@@ -133,44 +172,7 @@ def ngram_jaccard_pairs(
     construction, so candidate generation stays near-linear while returning
     the identical pair set.
     """
-    if shingled is None:
-        # materialize normalized text BEFORE shingling: expressions referenced
-        # inside a higher-order-function lambda are re-evaluated per array
-        # element, so an un-projected normalize would run its regex once per
-        # shingle (measured 25x slowdown)
-        normed = df.select(
-            F.col(id_col).alias("doc_id"),
-            F.col(block_col).alias("block"),
-            normalize_text(F.col(text_col)).alias("t"),
-        )
-        shingle_fn = word_shingles if unit == "word" else char_shingles
-        shingled = normed.select(
-            "doc_id", "block", shingle_fn(F.col("t"), k).alias("shingles")
-        )
-    else:
-        # pre-shingled input (e.g. the shared shingled_documents frame):
-        # must carry (doc_id, block, shingles); k/unit are then descriptive
-        src_cached = (
-            shingled.storageLevel.useMemory or shingled.storageLevel.useDisk
-        )
-        shingled = shingled.select("doc_id", "block", "shingles")
-        if src_cached:
-            # caller already persisted the source (e.g. ext_dedup_minhash
-            # shares ONE cache between this and the minhash pipeline) —
-            # a second persist of the projected twin would double-cache
-            return _ngram_jaccard_over(shingled, threshold)
-    # consumed by four subtrees (frequency, prefix, verification a+b) —
-    # persist one materialization instead of recomputing the shingling per
-    # consumer (at cluster scale this would be a checkpoint/cached table)
-    shingled = shingled.persist()
-    return _ngram_jaccard_over(shingled, threshold)
-
-
-def _ngram_jaccard_over(shingled: DataFrame, threshold: float) -> DataFrame:
-    """Prefix-filtered exact set-similarity join over a (doc_id, block,
-    shingles) frame the caller has already made cheap to re-scan (persisted
-    here or by the caller). Body of ``ngram_jaccard_pairs`` — see its
-    docstring for the algorithm."""
+    shingled = shingled.select("doc_id", "block", "shingles")
     exploded = shingled.select(
         "doc_id", "block", F.size("shingles").alias("set_size"),
         F.explode("shingles").alias("shingle"),
@@ -259,32 +261,13 @@ def _ngram_jaccard_over(shingled: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def word_shingles_from_tokens(toks: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles from a (pre-projected) token array.
-    Word-level shingles stay distinctive on corpora where char-level shingle
-    sets saturate (every doc containing most 3-char sequences makes
-    all-pairs jaccard high, which turns any LSH candidate join quadratic)."""
-    n = F.greatest(F.size(toks) - (k - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + j) for j in range(k)]
-            ),
-        )
-    )
-
-
 def minhash_lsh_pairs(
-    df: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    shingled: DataFrame,
     num_hash_tables: int = 5,
     max_jaccard_distance: float = 0.4,
     seed: int = 42,
     est_hashes: int = 12,
     est_margin: float = 0.3,
-    shingled: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs (shingle -> minhash -> band -> bucket-join
     -> estimate-prune -> exact verify), entirely in JVM expressions (no ML
@@ -311,31 +294,11 @@ def minhash_lsh_pairs(
     joins the packed shingle arrays as ordinary shuffle equi-joins (AQE
     broadcasts them when small), so the plan stays hash-partitioned at any
     corpus size.
+
+    Input: a (doc_id, shingles) word-3 frame (``shingle_docs``); the caller
+    persists it (read three times).
     """
-    if shingled is None:
-        # project tokens first — see ngram_jaccard_pairs on lambda
-        # re-evaluation
-        tokenized = df.select(
-            F.col(id_col).alias("doc_id"),
-            ws_tokens(normalize_text(F.col(text_col))).alias("toks"),
-        )
-        # no size()>0 guard: word_shingles_from_tokens always yields >=1
-        # element, and a post-select filter would be pushed below the
-        # projection, doubling the whole shingling expression per row
-        shingled = tokenized.select(
-            "doc_id",
-            word_shingles_from_tokens(F.col("toks"), 3).alias("shingles"),
-        ).persist()
-    else:
-        # pre-shingled word-3 input (the shared shingled_documents frame)
-        src_cached = (
-            shingled.storageLevel.useMemory or shingled.storageLevel.useDisk
-        )
-        shingled = shingled.select("doc_id", "shingles")
-        if not src_cached:
-            shingled = shingled.persist()
-        # else: caller persisted the source (ext_dedup_minhash shares one
-        # cache across this and the exact pipeline) — don't double-cache
+    shingled = shingled.select("doc_id", "shingles")
 
     def band_sig(b: int) -> Column:
         return F.array_min(
@@ -743,23 +706,10 @@ def duplicated_span_metrics(
     which emits candidate PAIRS — this is the cheaper operator when the
     question is "which text is duplicated", not "which docs match").
     """
-    from cdc_debezium_kafka_airflow_spark.operators.text import (
-        normalize_text,
-        ws_tokens,
-    )
-
     tokd = documents.select(
         "doc_id", ws_tokens(normalize_text(F.col(text_col))).alias("toks")
     )
-    n = F.greatest(F.size("toks") - (k - 1), F.lit(1))
-    grams = F.transform(
-        F.sequence(F.lit(1), n),
-        lambda i: F.md5(
-            F.concat_ws(
-                " ", *[F.element_at(F.col("toks"), i + j) for j in range(k)]
-            )
-        ),
-    )
+    grams = word_grams(F.col("toks"), k, F.md5)
     exploded = tokd.select(
         "doc_id", F.explode(F.array_distinct(grams)).alias("h")
     )
@@ -805,8 +755,9 @@ def containment_pairs(
     Threshold is an exact RATIONAL (t_num/t_den): candidate keep and the
     final cut are pure integer comparisons (t_den*|A∩B| >= t_num*|A|), so
     engine and oracle can never disagree by a rounding ulp. Input:
-    (doc_id, block, shingles) as ngram_jaccard_pairs."""
-    shingled = shingled.select("doc_id", "block", "shingles").persist()
+    (doc_id, block, shingles) as ngram_jaccard_pairs; the caller persists
+    it (read three times)."""
+    shingled = shingled.select("doc_id", "block", "shingles")
     exploded = shingled.select(
         "doc_id",
         "block",

@@ -126,18 +126,14 @@ def pack_sequences(
     )
 
 
-def decontaminate(
-    labeled: DataFrame | None = None,
-    text_norm: Column | None = None,
-    k: int = 3,
-    min_shared: int = 2,
-    shingled: DataFrame | None = None,
-) -> DataFrame:
+def decontaminate(shingled: DataFrame, min_shared: int = 2) -> DataFrame:
     """Eval-set decontamination: flag TRAIN documents that share at least
-    ``min_shared`` distinct word-``k``-gram shingles with any held-out
+    ``min_shared`` distinct word-3-gram shingles with any held-out
     (val/test) document — the overlap check run before training so
     benchmark text does not leak into the training corpus. Input is a
-    ``train_val_test_split``-labeled frame.
+    (doc_id, split, shingles) frame: ``dedup.shingle_docs`` shingles, split
+    labels as ``train_val_test_split`` assigns them; the caller persists it
+    (the train and eval legs both read it).
 
     Note the content-hash split already guarantees EXACT duplicates never
     straddle the boundary; this catches the rest — near-duplicates and
@@ -147,23 +143,8 @@ def decontaminate(
     construction, and it is collapsed to distinct (shingle, eval-doc-count)
     BEFORE the join, so the shuffle carries eval-sized data + one exploded
     pass over train; the train side aggregates straight back to doc grain.
-    No all-pairs comparison anywhere.
-
-    ``shingled``: optional pre-shingled frame (doc_id, split, shingles) —
-    e.g. the shared ``shingled_documents`` frame — used instead of re-shingling
-    ``labeled``; ``k`` is then descriptive."""
-    from cdc_debezium_kafka_airflow_spark.operators.dedup import word_shingles
-
-    if shingled is not None:
-        sh = shingled.select(
-            "doc_id", "split", F.explode("shingles").alias("sg")
-        )
-    else:
-        sh = labeled.select(
-            "doc_id",
-            "split",
-            F.explode(word_shingles(text_norm, k)).alias("sg"),
-        )
+    No all-pairs comparison anywhere."""
+    sh = shingled.select("doc_id", "split", F.explode("shingles").alias("sg"))
     eval_sh = (
         sh.filter(F.col("split") != "train")
         .groupBy("sg")

@@ -1279,8 +1279,8 @@ def semdedup_incremental(
     daily batch co-locates against exactly its cells' partitions; the only
     batch-sized shuffle is the cell co-location, and the per-cell work is
     one numpy matvec per batch member against (corpus-kept + accepted)
-    rows of that cell. That stored artifact is
-    ``sources/semdedup_cache.corpus_kept_set`` — pass it as
+    rows of that cell. That stored artifact is ``corpus_kept_set``
+    (below) — pass it as
     ``corpus_kept`` (columns vid, cell, centroid_sim, vec) and the corpus
     side is read straight from its cell partitions: no corpus re-prune,
     no corpus re-assignment, no decision-log join. ``corpus_decisions``
@@ -1415,3 +1415,86 @@ def semdedup_incremental(
     return both.groupBy("cid").applyInPandas(
         verdict_cell, "vid long, cid int, verdict string, witness_id long"
     )
+
+
+#: SemDeDup's incremental protocol over the embeddings fixture: the frozen
+#: corpus is every vector with ``vec_id % 10 != 9``, the ~10% rest is the
+#: incoming batch. The corpus kept-set, every verdict against it and the
+#: index built from it share these parameters and one centroid memo key.
+INC_CLUSTERS = 8
+INC_THRESHOLD = 0.35
+
+
+def incremental_split(
+    e: DataFrame, sf_dir: str
+) -> tuple[DataFrame, DataFrame, str]:
+    """(corpus, batch, cache_key) of the embeddings fixture frame ``e``
+    under the incremental protocol; ``cache_key`` is the corpus centroid
+    memo key, so every stage of one run trains the corpus cells once."""
+    from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
+        source_fingerprint,
+    )
+
+    return (
+        e.filter(F.col("vec_id") % 10 != 9),
+        e.filter(F.col("vec_id") % 10 == 9),
+        source_fingerprint(sf_dir, "embeddings") + ":inc90",
+    )
+
+
+def corpus_kept_set(
+    e: DataFrame, sf_dir: str, materialize: bool = True
+) -> tuple[str | None, DataFrame]:
+    """The SemDeDup kept-set of the incremental corpus (``incremental_split``
+    of the embeddings frame ``e``) materialized PARTITIONED BY the
+    assignment cell id: ONE per-cell survivor store that the incremental
+    verdict (``ext_dedup_semantic_incremental``), the streaming ANN index
+    job (its seed clone) and the streaming ingest loop all consume.
+
+    Columns: ``vid``, ``block_id`` (the decision log's final greedy
+    block), ``centroid_sim``, ``vec`` (unit-normalized); directory
+    partition column ``cell`` (assignment cell = trained centroid id).
+
+    Returns ``(store_dir, DataFrame)``, rebuilt on every call into
+    per-process scratch (``cache_util.process_scoped_scratch``): the build
+    is part of the calling query's run. ``materialize=False`` skips the
+    disk store and returns ``(None, persisted_frame)``, for consumers that
+    read the kept-set only as a DataFrame (no directory clone, no per-cell
+    partition reads)."""
+    import os
+
+    from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
+        process_scoped_scratch,
+    )
+
+    corpus, _, cache_key = incremental_split(e, sf_dir)
+    dec = semdedup(
+        corpus,
+        n_clusters=INC_CLUSTERS,
+        threshold=INC_THRESHOLD,
+        cache_key=cache_key,
+    )
+    v = normalized(
+        corpus.select(
+            F.col("vec_id").alias("vid"),
+            as_double(F.col("embedding")).alias("vec"),
+        ),
+        "vec",
+        "nvec",
+    ).select("vid", F.col("nvec").alias("vec"))
+    kept = (
+        dec.filter(F.col("kept"))
+        .select(
+            "vid",
+            F.col("cid").alias("block_id"),
+            "cell",
+            "centroid_sim",
+        )
+        .join(v, on="vid")
+    )
+    if not materialize:
+        return None, kept.persist()
+    tag = os.path.basename(os.path.normpath(sf_dir))
+    store_dir = process_scoped_scratch(f"semdedup_kept_inc90_{tag}")
+    kept.write.partitionBy("cell").mode("overwrite").parquet(store_dir)
+    return store_dir, e.sparkSession.read.parquet(store_dir)

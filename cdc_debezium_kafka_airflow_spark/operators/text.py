@@ -31,6 +31,22 @@ def ws_tokens(col: Column) -> Column:
     return F.split(col, r" ")
 
 
+def word_grams(toks: Column, k: int, gram=lambda g: g) -> Column:
+    """Every word k-gram of a token array in order, each passed through
+    ``gram`` (e.g. ``F.md5``); an array shorter than k yields its one
+    partial gram. The one gram expression of the shingle, span and
+    repetition operators. ``toks`` is referenced per element inside the
+    lambda, so a caller over raw text projects the tokens to a column
+    first when the gram array is expensive to recompute."""
+    n = F.greatest(F.size(toks) - (k - 1), F.lit(1))
+    return F.transform(
+        F.sequence(F.lit(1), n),
+        lambda i: gram(
+            F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(k)])
+        ),
+    )
+
+
 def text_metrics(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-document token/char/punctuation/stopword metrics + quality score.
 
@@ -230,19 +246,12 @@ def repetition_metrics(
     Expressions referenced inside a higher-order-function lambda re-evaluate
     PER ELEMENT, so the normalize+split is projected to a column first and
     the gram array is materialized once (persist) for its two consumers —
-    the same two rules ngram_jaccard_pairs documents (measured: skipping
+    the same two rules ``dedup.shingle_docs`` follows (measured: skipping
     them cost 32 s vs 2 s at sf0.1)."""
     tokd = documents.select(
         "doc_id", ws_tokens(normalize_text(F.col(text_col))).alias("toks")
     )
-    n = F.greatest(F.size("toks") - (k - 1), F.lit(1))
-    grams = F.transform(
-        F.sequence(F.lit(1), n),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(F.col("toks"), i + j) for j in range(k)]
-        ),
-    )
-    gramd = tokd.select("doc_id", grams.alias("_grams"))
+    gramd = tokd.select("doc_id", word_grams(F.col("toks"), k).alias("_grams"))
     base = gramd.select(
         "doc_id",
         F.size("_grams").alias("n_grams"),

@@ -17,6 +17,7 @@ from cdc_debezium_kafka_airflow_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
+    shingled_documents,
     simhash_near_pairs,
 )
 from cdc_debezium_kafka_airflow_spark.operators.similarity import (
@@ -192,16 +193,12 @@ def ext_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     set-similarity join. k=10 because this corpus's vocabulary saturates
     short shingle spaces (377 distinct 3-grams vs ~50k 10-grams) — short
     shingles make every pair ~0.6-similar and any algorithm quadratic.
-    Starts from the shared shingle derivation (``shingled_documents``, the
-    same frame the other shingle-family queries build in their own run)."""
-    from cdc_debezium_kafka_airflow_spark.sources.shingle_cache import (
-        shingled_documents,
-    )
-
+    Starts from the one shingler (``shingled_documents``)."""
+    # persisted: the prefix-filtered join reads it four times
     sh = shingled_documents(spark, sf_dir, unit="char", k=10).select(
         "doc_id", F.col("source").alias("block"), "shingles"
-    )
-    return ngram_jaccard_pairs(k=10, threshold=0.5, shingled=sh)
+    ).persist()
+    return ngram_jaccard_pairs(sh, threshold=0.5)
 
 
 @q(
@@ -254,15 +251,12 @@ def ext_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     DIFFERENT algorithm (recursive-CTE transitive closure), so a hash match
     cross-validates both the pair graph and the clustering."""
     from cdc_debezium_kafka_airflow_spark.operators.dedup import dup_clusters
-    from cdc_debezium_kafka_airflow_spark.sources.shingle_cache import (
-        shingled_documents,
-    )
 
+    # persisted: the prefix-filtered join reads it four times
     sh = shingled_documents(spark, sf_dir, unit="word", k=3).select(
         "doc_id", F.col("source").alias("block"), "shingles"
-    )
-    pairs = ngram_jaccard_pairs(k=3, threshold=0.5, unit="word", shingled=sh)
-    return dup_clusters(pairs)
+    ).persist()
+    return dup_clusters(ngram_jaccard_pairs(sh, threshold=0.5))
 
 
 @q(
@@ -344,21 +338,15 @@ def ext_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     minhash bands do not block on `source`, so cross-source pairs are in
     scope for it and the containment must be checked globally.
     """
-    from cdc_debezium_kafka_airflow_spark.sources.shingle_cache import (
-        shingled_documents,
-    )
-
-    # ONE persisted shingle frame serves BOTH pipelines (round 12): the
-    # minhash and exact legs each persisted their own projection of the
-    # same shingle frame, materializing it twice per run. Both operators
-    # skip their internal persist when the input is already cached
-    # (src_cached seam). r13: the frame is computed in-run from parquet.
+    # ONE persisted shingle frame serves BOTH pipelines: the operators
+    # persist nothing of their input, so the shingling runs once per run
+    # (pinned by tests/test_scale_plans.py)
     sh = shingled_documents(spark, sf_dir, unit="word", k=3).select(
         "doc_id", F.lit("g").alias("block"), "shingles"
     ).persist()
-    mh = minhash_lsh_pairs(shingled=sh)  # id_a/id_b/jaccard_distance (exact)
+    mh = minhash_lsh_pairs(sh)  # id_a/id_b/jaccard_distance (exact)
     # threshold 0.59 < 0.6: containment immune to round-6 boundary flips
-    exact = ngram_jaccard_pairs(k=3, threshold=0.59, unit="word", shingled=sh)
+    exact = ngram_jaccard_pairs(sh, threshold=0.59)
     exact = exact.persist()  # feeds both the left join and the recall check
     joined = mh.alias("m").join(
         exact.alias("e"), on=["id_a", "id_b"], how="left"
@@ -1350,15 +1338,10 @@ def ext_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_debezium_kafka_airflow_spark.operators.sampling import (
         decontaminate,
     )
-    from cdc_debezium_kafka_airflow_spark.sources.shingle_cache import (
-        shingled_documents,
-    )
 
     # split labels derive from the shingle frame's content-hash bucket —
     # same md5 expression as train_val_test_split, no second pass over raw
-    # text. Persisted: the operator's train and eval legs both explode it
-    # (round 13 — shingles are computed in-run, so an unpersisted frame
-    # would pay the HOF shingling once per leg).
+    # text. Persisted: the operator's train and eval legs both explode it.
     sh = shingled_documents(spark, sf_dir, unit="word", k=3).select(
         "doc_id",
         F.when(F.col("bucket") < 90, "train")
@@ -1367,7 +1350,7 @@ def ext_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("split"),
         "shingles",
     ).persist()
-    return decontaminate(shingled=sh)
+    return decontaminate(sh)
 
 
 @q(
@@ -1831,11 +1814,8 @@ def ext_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_debezium_kafka_airflow_spark.operators.sampling import (
         decontaminate_bloom,
     )
-    from cdc_debezium_kafka_airflow_spark.sources.shingle_cache import (
-        shingled_documents,
-    )
 
-    # persisted for the same two-leg reason as ext_decontaminate (r13)
+    # persisted for the same two-leg reason as ext_decontaminate
     sh = shingled_documents(spark, sf_dir, unit="word", k=3).select(
         "doc_id",
         F.when(F.col("bucket") < 90, "train")
@@ -1844,7 +1824,7 @@ def ext_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("split"),
         "shingles",
     ).persist()
-    return decontaminate_bloom(shingled=sh)
+    return decontaminate_bloom(sh)
 
 
 @q(
@@ -2888,25 +2868,18 @@ def ext_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the clusters by the recursive-closure algorithm, so the
     whole chain (pair graph -> components -> co-assignment) is
     cross-validated."""
-    from cdc_debezium_kafka_airflow_spark.operators.dedup import (
-        dup_clusters,
-        ngram_jaccard_pairs,
-    )
+    from cdc_debezium_kafka_airflow_spark.operators.dedup import dup_clusters
     from cdc_debezium_kafka_airflow_spark.operators.sampling import (
         content_bucket,
     )
     from cdc_debezium_kafka_airflow_spark.operators.text import normalize_text
-    from cdc_debezium_kafka_airflow_spark.sources.shingle_cache import (
-        shingled_documents,
-    )
 
     docs = t(spark, sf_dir, "documents")
+    # persisted: the prefix-filtered join reads it four times
     sh = shingled_documents(spark, sf_dir, unit="word", k=3).select(
         "doc_id", F.col("source").alias("block"), "shingles"
-    )
-    comp = dup_clusters(
-        ngram_jaccard_pairs(k=3, threshold=0.5, unit="word", shingled=sh)
-    )
+    ).persist()
+    comp = dup_clusters(ngram_jaccard_pairs(sh, threshold=0.5))
     full_map = docs.select("doc_id").join(comp, "doc_id", "left").select(
         "doc_id",
         F.coalesce("cluster_id", "doc_id").alias("cluster_id"),
@@ -3993,14 +3966,10 @@ def e2e_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the <=10% split); packing is parallel bounded-state cumsums per
     shard. The audit aggregates are one extra reduce per stage over
     already-materialized frames."""
-    from cdc_debezium_kafka_airflow_spark.sources.shingle_cache import (
-        shingled_documents,
-    )
-
     docs = t(spark, sf_dir, "documents")
-    # the shared shingle derivation (same frame the dedup/decontamination
-    # family starts from): doc_id, bucket, distinct word-3-gram shingles —
-    # computed in-run (r13) and folded into the persisted feats frame below
+    # the one shingler (the frame the dedup/decontamination family starts
+    # from): doc_id, bucket, distinct word-3-gram shingles — folded into
+    # the persisted feats frame below
     sc_ = shingled_documents(spark, sf_dir).select(
         "doc_id", F.col("bucket").cast("long").alias("b"), "shingles"
     )
@@ -4168,17 +4137,21 @@ def ext_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         as_double,
         dot,
         normalized,
+        semdedup,
     )
-    from cdc_debezium_kafka_airflow_spark.sources.semdedup_cache import (
-        semdedup_decision_log,
+    from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
+        source_fingerprint,
     )
 
     th = 0.35
     e = t(spark, sf_dir, "embeddings")
-    # the decision log is computed in-run (round 13: no cross-run cache);
-    # persist ONE materialization — four audit subtrees below reuse it
-    dec = semdedup_decision_log(
-        spark, sf_dir, n_clusters=8, threshold=th
+    # persist ONE materialization of the decision log — four audit
+    # subtrees below reuse it; the memo key trains the centroids once
+    dec = semdedup(
+        e,
+        n_clusters=8,
+        threshold=th,
+        cache_key=source_fingerprint(sf_dir, "embeddings"),
     ).persist()
     v = normalized(
         e.select(
@@ -4299,16 +4272,21 @@ def ext_corpus_prune_d4(spark: SparkSession, sf_dir: str) -> DataFrame:
         the emitted log — pins the keep-least-prototypical rule against
         refactor drift.
     """
-    from cdc_debezium_kafka_airflow_spark.sources.semdedup_cache import (
-        semdedup_decision_log,
+    from cdc_debezium_kafka_airflow_spark.operators.similarity import (
+        semdedup,
+    )
+    from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
+        source_fingerprint,
     )
 
     frac = 0.10
     e = t(spark, sf_dir, "embeddings")
-    # computed in-run (round 13); persisted — the kept frame and the
-    # dropped-count subtree both read it
-    dec = semdedup_decision_log(
-        spark, sf_dir, n_clusters=8, threshold=0.35
+    # persisted — the kept frame and the dropped-count subtree both read it
+    dec = semdedup(
+        e,
+        n_clusters=8,
+        threshold=0.35,
+        cache_key=source_fingerprint(sf_dir, "embeddings"),
     ).persist()
     kept = dec.filter(F.col("kept")).select("vid", "cid", "centroid_sim")
     w = Window.partitionBy("cid").orderBy(
@@ -4413,38 +4391,28 @@ def ext_dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFram
         cosine >= threshold + 1e-6 (the greedy must have caught it).
     """
     from cdc_debezium_kafka_airflow_spark.operators.similarity import (
+        INC_CLUSTERS,
+        INC_THRESHOLD,
         as_double,
+        corpus_kept_set,
+        incremental_split,
         normalized,
         semdedup_incremental,
         semdedup_verdict_audit,
     )
-    from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
-        source_fingerprint,
-    )
-    from cdc_debezium_kafka_airflow_spark.sources.semdedup_cache import (
-        corpus_kept_set,
-    )
 
-    th = 0.35
+    th = INC_THRESHOLD
     e = t(spark, sf_dir, "embeddings")
-    corpus = e.filter(F.col("vec_id") % 10 != 9)
-    batch = e.filter(F.col("vec_id") % 10 == 9)
-    ck = source_fingerprint(sf_dir, "embeddings") + ":inc90"
-    # the SHARED stored artifact (one per corpus version, partitioned by
-    # assignment cell): corpus side of the verdict AND every audit frame
-    # read it — no per-run corpus re-prune, no decision-log join, and the
-    # same store the streaming index job seeds from
-    # (stream_index_append_dedup)
-    # materialize=False (r13): this query reads the kept-set ONLY as a
-    # DataFrame (every audit frame below), so the per-run partitioned
-    # write + read-back the file-level consumers need is skipped; the
-    # persisted frame serves all subtrees
-    _, kept_art = corpus_kept_set(
-        spark, sf_dir, corpus=corpus, corpus_tag="inc90",
-        n_clusters=8, threshold=th, cache_key=ck, materialize=False,
-    )
+    corpus, batch, ck = incremental_split(e, sf_dir)
+    # the kept-set the streaming index job seeds from
+    # (stream_index_append_dedup): corpus side of the verdict AND every
+    # audit frame read it — no corpus re-prune, no decision-log join.
+    # materialize=False: this query reads the kept-set ONLY as a
+    # DataFrame, so the partitioned write + read-back the file-level
+    # consumers need is skipped; the persisted frame serves all subtrees
+    _, kept_art = corpus_kept_set(e, sf_dir, materialize=False)
     out = semdedup_incremental(
-        corpus, batch, n_clusters=8, threshold=th, cache_key=ck,
+        corpus, batch, n_clusters=INC_CLUSTERS, threshold=th, cache_key=ck,
         corpus_kept=kept_art,
     ).persist()
 

@@ -53,8 +53,7 @@ _MODULES = [
 # a ~10-name SENTINEL SPINE — one canary per §2 family (serialization, CDC
 # materialization, DLQ sink, monitoring, streaming merge sink, dedup,
 # similarity, multimodal) — and the other ~40 slots rotate through the
-# never-driver-checked remainder so driver confirmation accumulates at
-# ~40 names/round instead of 8.
+# rest of the oracle-backed names (see _compute_rotation).
 _PRIORITY = [
     # §2.A/§2.B serialization + CDC canaries
     "ser_json_schema",
@@ -141,45 +140,29 @@ def _already_verified() -> tuple[set[str], set[str]]:
 
 def _compute_rotation(
     pool: list[str],
-    green: set[str],
     red: set[str],
-    module_cov: dict[str, float],
-    name_module: dict[str, str],
     slots: int,
     round_key: int,
 ) -> list[str]:
     """Pure rotation-window selection — the entire policy in one testable
-    function of (pool, past driver results, module coverage, slot count,
-    round counter). Three branches, all pinned by tests/test_registry_order:
+    function of (pool, red names, slot count, round counter), pinned by
+    tests/test_registry_order:
 
     1. Ever-red-never-green names take GUARANTEED leading slots: a failed
-       driver row means the fix needs a fresh row NOW, not after the
-       unseen pool drains (and the ring offset must not skip them).
-    2. Never-checked names drain next, in ascending order of their
-       MODULE's historical driver coverage (VERDICT r08 task #1) — a flat
-       alphabetical ring let heavily-covered ext_* crowd out streaming.
-       No offset needed: names that turn green leave the unseen set, so
-       the head advances by itself each round.
-    3. Ring top-up (ADVICE r09): when slots remain — the pool is fully
-       drained OR the unseen pool was non-empty but SMALLER than the open
-       slots (the 0 < unseen < slots state r11 entered) — an offset ring
-       over the WHOLE pool, keyed by the round counter, backfills.
-       Skip-and-continue: a ring entry colliding with an already-placed
-       name is skipped and the next entry backfills, else the window
-       underfills by up to len(rotation) names.
+       driver row means the fix needs a fresh row NOW (and the ring
+       offset must not skip them).
+    2. An offset ring over the WHOLE pool, keyed by the round counter,
+       fills the remaining slots, so successive rounds re-confirm
+       different names. Skip-and-continue: a ring entry colliding with a
+       red name already placed is skipped and the next entry backfills,
+       else the window underfills.
+
+    Every oracle-backed name has been driver-checked at least once, and
+    the query surface is frozen, so no never-checked name is left to
+    drain ahead of the ring.
     """
     rotation: list[str] = sorted(k for k in pool if k in red)[:slots]
     slots_left = slots - len(rotation)
-    unseen = sorted(
-        (k for k in pool if k not in green and k not in red),
-        key=lambda k: (module_cov[name_module[k]], name_module[k], k),
-    )
-    for cand in unseen:
-        if slots_left <= 0:
-            break
-        if cand not in rotation:
-            rotation.append(cand)
-            slots_left -= 1
     if slots_left and pool:
         off = ((round_key - 1) * slots) % len(pool)
         i = 0
@@ -203,22 +186,9 @@ def _compute_rotation(
 _rotation_pool = sorted(
     k for k in _ALL_QUERIES if k not in set(_PRIORITY) and k in ORACLES
 )
-_green, _red = _already_verified()
-_module_cov: dict[str, float] = {}
-_name_module: dict[str, str] = {}
-for _m in _MODULES:
-    _mnames = [n for n in _m.QUERIES if n in ORACLES]
-    _module_cov[_m.__name__] = (
-        sum(1 for n in _mnames if n in _green) / len(_mnames) if _mnames else 1.0
-    )
-    for _n in _mnames:
-        _name_module[_n] = _m.__name__
 ROTATION: list[str] = _compute_rotation(
     _rotation_pool,
-    _green,
-    _red,
-    _module_cov,
-    _name_module,
+    _already_verified()[1],
     max(0, VERIFIED_WINDOW - len(_PRIORITY)),
     _round_key(),
 )

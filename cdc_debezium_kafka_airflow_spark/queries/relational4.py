@@ -1352,16 +1352,16 @@ def ext_dedup_minhash_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair collides in some band, so the candidate set degenerates toward
     N^2 exact verifies — measured unbounded at sf0.1's 5000 docs. The
     query therefore runs the API demo on a deterministic doc_id stratum;
-    the NATIVE operator (operators/dedup.py:201, multi-row bands + an
+    the NATIVE operator (dedup.minhash_lsh_pairs, multi-row bands + an
     estimate-vector prune before any shingle array moves) handles the
     same corpus in full and remains the 100 TB path. That contrast is
     itself the documented lesson."""
-    from cdc_debezium_kafka_airflow_spark.sources.shingle_cache import (
+    from cdc_debezium_kafka_airflow_spark.operators.dedup import (
         shingled_documents,
     )
 
     # persisted: the size probe, the mllib leg and the exact-dup reference
-    # all read it (r13 — shingles are computed in-run, not read from disk)
+    # all read it
     sc_ = shingled_documents(spark, sf_dir).select(
         "doc_id", "shingles"
     ).persist()

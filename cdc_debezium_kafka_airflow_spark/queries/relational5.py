@@ -1451,6 +1451,7 @@ def ext_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from cdc_debezium_kafka_airflow_spark.operators.text import (
         normalize_text,
+        ws_tokens,
     )
 
     # widen ahead of the normalize+shingle projection: the expensive HOF
@@ -1464,13 +1465,15 @@ def ext_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         normalize_text(F.col("text")).alias("tx"),
     )
+    # tokens projected to a column: the gram lambda re-reads them per
+    # element (see dedup.shingle_docs)
+    d = d.select("doc_id", "source", "tx", ws_tokens(F.col("tx")).alias("w"))
     toks = d.select(
         "doc_id",
         "source",
         (content_bucket(F.col("tx")) >= 90).alias("is_test"),
-        word_shingles(F.col("tx"), 2).alias("bgs"),
-        F.size(F.filter(F.split(F.col("tx"), " "), lambda x: x != ""))
-        .alias("nw"),
+        word_shingles(F.col("w"), 2).alias("bgs"),
+        F.size(F.filter(F.col("w"), lambda x: x != "")).alias("nw"),
     ).filter(F.col("nw") >= 2)
     bg = toks.select(
         "source", "is_test", F.explode_outer("bgs").alias("sg")

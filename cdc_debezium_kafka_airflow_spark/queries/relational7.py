@@ -1471,18 +1471,19 @@ def ext_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined against FULL postings (the asymmetric-threshold trade; prefix
     shingles are rare by construction so fan-out is Σ df(prefix), never
     |block|²), exact array_intersect verify on candidates only. Starts
-    from the shared shingle derivation (``shingled_documents``). Oracle: the naive
+    from the one shingler (``shingled_documents``). Oracle: the naive
     quadratic in-SQL twin, tractable at oracle scale."""
     from cdc_debezium_kafka_airflow_spark.operators.dedup import (
         containment_pairs,
     )
-    from cdc_debezium_kafka_airflow_spark.sources.shingle_cache import (
+    from cdc_debezium_kafka_airflow_spark.operators.dedup import (
         shingled_documents,
     )
 
+    # persisted: the containment join reads it three times
     sh = shingled_documents(spark, sf_dir, unit="word", k=3).select(
         "doc_id", F.col("source").alias("block"), "shingles"
-    )
+    ).persist()
     return containment_pairs(sh, t_num=1, t_den=2)
 
 

@@ -451,7 +451,7 @@ def stream_scd2_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_index_append_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic-dedup -> ANN-index lifecycle over ONE shared stored
-    artifact: the corpus kept-set (semdedup_cache.corpus_kept_set,
+    artifact: the corpus kept-set (similarity.corpus_kept_set,
     partitioned by assignment cell — the same artifact, same cache key,
     ext_dedup_semantic_incremental verdicts against) file-level SEEDS the
     index store with zero recompute; the daily batch then streams in,

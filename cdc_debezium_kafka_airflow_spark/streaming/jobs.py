@@ -24,7 +24,7 @@ from __future__ import annotations
 import os
 from itertools import count
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
@@ -1212,6 +1212,15 @@ def schema_evolving_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
+def _one_row(spark: SparkSession, **cols: Column) -> DataFrame:
+    """A one-row frame of driver-side audit values, built JVM-side from
+    literals over a one-partition range: ``createDataFrame`` of a Python
+    list would run a Python-worker job when the frame is consumed."""
+    return spark.range(0, 1, 1, 1).select(
+        *[c.alias(name) for name, c in cols.items()]
+    )
+
+
 def streaming_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ANN index maintenance: embeddings arrive as a stream and
     each micro-batch is assigned to its IVF cell (broadcast centroids —
@@ -1336,9 +1345,10 @@ def streaming_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()[0]
     )
-    return spark.createDataFrame(
-        [(audit.n_indexed, audit.n_mismatch == 0)],
-        "n_indexed long, equals_batch_assignment boolean",
+    return _one_row(
+        spark,
+        n_indexed=F.lit(audit.n_indexed).cast("long"),
+        equals_batch_assignment=F.lit(audit.n_mismatch == 0),
     )
 
 
@@ -1354,8 +1364,8 @@ def _emb_batch_replay_dir(sf_dir: str, batch_df: DataFrame) -> str:
 def streaming_index_append_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The semantic-dedup -> ANN-index lifecycle over ONE shared stored
     artifact (round-4 verdict item 6): the corpus kept-set
-    (``semdedup_cache.corpus_kept_set`` — the SAME artifact, same cache
-    key, that ``ext_dedup_semantic_incremental`` verdicts against) SEEDS
+    (``similarity.corpus_kept_set`` — the SAME artifact, same memo key,
+    that ``ext_dedup_semantic_incremental`` verdicts against) SEEDS
     the cell-partitioned index store by a FILE-LEVEL clone — zero
     recompute, partition layout preserved because the artifact is already
     partitioned by assignment cell — and the daily embedding batch
@@ -1376,29 +1386,19 @@ def streaming_index_append_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from cdc_debezium_kafka_airflow_spark.operators.similarity import (
+        INC_CLUSTERS,
         as_double,
+        corpus_kept_set,
+        incremental_split,
         nearest_cell_assigner,
         normalized,
         train_ivf_centroids,
     )
-    from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
-        source_fingerprint,
-    )
-    from cdc_debezium_kafka_airflow_spark.sources.semdedup_cache import (
-        corpus_kept_set,
-    )
 
     tag = os.path.basename(os.path.normpath(sf_dir))
-    fp = source_fingerprint(sf_dir, "embeddings")
-    ck = fp + ":inc90"
     e = load_table(spark, sf_dir, "embeddings")
-    corpus = e.filter(F.col("vec_id") % 10 != 9)
-    batch_df = e.filter(F.col("vec_id") % 10 == 9)
-
-    kept_dir, kept_art = corpus_kept_set(
-        spark, sf_dir, corpus=corpus, corpus_tag="inc90",
-        n_clusters=8, threshold=0.35, cache_key=ck,
-    )
+    corpus, batch_df, ck = incremental_split(e, sf_dir)
+    kept_dir, kept_art = corpus_kept_set(e, sf_dir)
 
     replay_dir = _emb_batch_replay_dir(sf_dir, batch_df)
 
@@ -1412,11 +1412,12 @@ def streaming_index_append_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(index_dir)
     shutil.copytree(kept_dir, os.path.join(index_dir, "src=seed"))
 
-    # explicit id/vec columns (r13): same memo key as corpus_kept_set's
+    # explicit id/vec columns: same memo key as corpus_kept_set's
     # training above, so this is a memo hit in-run — but it must also
     # train correctly cold (the raw embeddings frame has vec_id/embedding)
     cent_rows = train_ivf_centroids(
-        corpus, id_col="vec_id", vec_col="embedding", k=8, cache_key=ck
+        corpus, id_col="vec_id", vec_col="embedding", k=INC_CLUSTERS,
+        cache_key=ck,
     )
     assigner = nearest_cell_assigner(
         cent_rows, vec_col="vec", id_col="vid", cid_col="cell",
@@ -1508,23 +1509,20 @@ def streaming_index_append_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()[0]
     )
-    return spark.createDataFrame(
-        [
-            (
-                int(row.n_appended or 0),
-                (row.seed_bad or 0) == 0 and (row.orphan or 0) == 0,
-                (row.append_bad or 0) == 0,
-            )
-        ],
-        "n_appended long, seed_matches_artifact boolean, "
-        "append_matches_assignment boolean",
+    return _one_row(
+        spark,
+        n_appended=F.lit(int(row.n_appended or 0)).cast("long"),
+        seed_matches_artifact=F.lit(
+            (row.seed_bad or 0) == 0 and (row.orphan or 0) == 0
+        ),
+        append_matches_assignment=F.lit((row.append_bad or 0) == 0),
     )
 
 
 def stream_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING SemDeDup ingestion — the THIRD consumer of the shared
     kept-set artifact: embedding micro-batches are verdicted against the
-    frozen corpus kept-set (``semdedup_cache.corpus_kept_set`` — the same
+    frozen corpus kept-set (``similarity.corpus_kept_set`` — the same
     store the batch incremental query audits against and the index job
     seeds from) PLUS the vectors this stream has itself accepted so far,
     which append to a growing accepted-store between micro-batches. This
@@ -1543,30 +1541,21 @@ def stream_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from cdc_debezium_kafka_airflow_spark.operators.similarity import (
+        INC_CLUSTERS,
+        INC_THRESHOLD,
         as_double,
+        corpus_kept_set,
+        incremental_split,
         normalized,
         semdedup_incremental,
         semdedup_verdict_audit,
     )
-    from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
-        source_fingerprint,
-    )
-    from cdc_debezium_kafka_airflow_spark.sources.semdedup_cache import (
-        corpus_kept_set,
-    )
 
-    th = 0.35
+    th = INC_THRESHOLD
     tag = os.path.basename(os.path.normpath(sf_dir))
-    fp = source_fingerprint(sf_dir, "embeddings")
-    ck = fp + ":inc90"
     e = load_table(spark, sf_dir, "embeddings")
-    corpus = e.filter(F.col("vec_id") % 10 != 9)
-    batch_df = e.filter(F.col("vec_id") % 10 == 9)
-
-    _, kept_art = corpus_kept_set(
-        spark, sf_dir, corpus=corpus, corpus_tag="inc90",
-        n_clusters=8, threshold=th, cache_key=ck,
-    )
+    corpus, batch_df, ck = incremental_split(e, sf_dir)
+    _, kept_art = corpus_kept_set(e, sf_dir)
 
     replay_dir = _emb_batch_replay_dir(sf_dir, batch_df)
 
@@ -1598,7 +1587,7 @@ def stream_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             frontier = kept_art
         out = semdedup_incremental(
-            corpus, mb, n_clusters=8, threshold=th, cache_key=ck,
+            corpus, mb, n_clusters=INC_CLUSTERS, threshold=th, cache_key=ck,
             corpus_kept=frontier,
         ).persist()
         # batch-id-versioned overwrite: re-delivery replaces, never
@@ -1680,13 +1669,13 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING eval-set decontamination — the runtime-filter pattern
     applied at ingest time: a 100 TB training corpus doesn't get
     decontaminated in one batch job, it is SCREENED AS IT ARRIVES. The
-    benchmark-sized eval shingle set is built once (from the shingle cache)
+    benchmark-sized eval shingle set is built once (``shingled_documents``)
     into a broadcast Bloom bitset (``build_shingle_bloom_udf`` — shared
     with the batch twin ``ext_decontaminate_bloom``); each micro-batch of
-    incoming documents is normalized, content-hash split (only train docs
-    proceed), shingled map-side, Bloom-prefiltered map-side, and only the
-    survivors hit the exact eval equi-join; per-doc contamination verdicts
-    append to the result store.
+    incoming documents is shingled by the same ``shingle_docs``,
+    content-hash split (only train docs proceed), Bloom-prefiltered
+    map-side, and only the survivors hit the exact eval equi-join; per-doc
+    contamination verdicts append to the result store.
 
     Per-doc aggregation is micro-batch-local (a document arrives whole),
     so the streamed result is IDENTICAL to the batch operator's — the
@@ -1697,25 +1686,19 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from cdc_debezium_kafka_airflow_spark.operators.dedup import (
-        word_shingles,
+        shingle_docs,
+        shingled_documents,
     )
     from cdc_debezium_kafka_airflow_spark.operators.sampling import (
         build_shingle_bloom_udf,
-        content_bucket,
-    )
-    from cdc_debezium_kafka_airflow_spark.operators.text import (
-        normalize_text,
-    )
-    from cdc_debezium_kafka_airflow_spark.sources.shingle_cache import (
-        shingled_documents,
     )
 
     tag = os.path.basename(os.path.normpath(sf_dir))
 
     # static side, built once per run: eval shingle counts + the Bloom
     # bitset. eval_sh is persisted — the bloom build collects it and the
-    # per-batch joins broadcast it (r13: shingles compute in-run, so an
-    # unpersisted frame would re-shingle the corpus per consumer).
+    # per-batch joins broadcast it; unpersisted, every consumer would
+    # re-shingle the corpus.
     sh_all = shingled_documents(spark, sf_dir, unit="word", k=3)
     eval_sh = (
         sh_all.filter(F.col("bucket") >= 90)
@@ -1736,12 +1719,10 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(out_dir, ignore_errors=True)
 
     def decon_batch(batch: DataFrame, batch_id: int) -> None:
-        normed = batch.select(
-            "doc_id", normalize_text(F.col("text")).alias("t")
-        )
-        train = normed.filter(content_bucket(F.col("t")) < 90)
-        sh = train.select(
-            "doc_id", F.explode(word_shingles(F.col("t"), 3)).alias("sg")
+        sh = (
+            shingle_docs(batch.select("doc_id", "text"), unit="word", k=3)
+            .filter(F.col("bucket") < 90)
+            .select("doc_id", F.explode("shingles").alias("sg"))
         )
         cand = (
             sh.withColumn("_h1", h1c(F.col("sg")))

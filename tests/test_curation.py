@@ -64,7 +64,7 @@ def test_bloom_prefilter_shrinks_and_matches(spark, sf_dir):
         decontaminate,
         decontaminate_bloom,
     )
-    from cdc_debezium_kafka_airflow_spark.sources.shingle_cache import (
+    from cdc_debezium_kafka_airflow_spark.operators.dedup import (
         shingled_documents,
     )
 
@@ -76,8 +76,8 @@ def test_bloom_prefilter_shrinks_and_matches(spark, sf_dir):
         .alias("split"),
         "shingles",
     )
-    plain = sorted(map(tuple, decontaminate(shingled=sh).collect()))
-    bloom = sorted(map(tuple, decontaminate_bloom(shingled=sh).collect()))
+    plain = sorted(map(tuple, decontaminate(sh).collect()))
+    bloom = sorted(map(tuple, decontaminate_bloom(sh).collect()))
     assert bloom == plain
     assert len(plain) > 0
 

@@ -11,6 +11,7 @@ from cdc_debezium_kafka_airflow_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
+    shingle_docs,
     simhash,
     simhash_near_pairs,
 )
@@ -27,6 +28,14 @@ def _docs_with_planted_dups(spark, sf_dir, n=20):
     return d.unionByName(dups)
 
 
+def _blocked(docs, unit, k):
+    """(doc_id, block = source, shingles) through the one shingler,
+    persisted like the queries do (the pair joins re-read it)."""
+    return shingle_docs(docs, unit, k).select(
+        "doc_id", F.col("source").alias("block"), "shingles"
+    ).persist()
+
+
 def test_exact_dedup_finds_planted_dups(spark, sf_dir):
     docs = _docs_with_planted_dups(spark, sf_dir)
     out = exact_dedup(docs)
@@ -37,7 +46,9 @@ def test_exact_dedup_finds_planted_dups(spark, sf_dir):
 
 def test_minhash_lsh_finds_planted_dups(spark, sf_dir):
     docs = _docs_with_planted_dups(spark, sf_dir)
-    pairs = minhash_lsh_pairs(docs, max_jaccard_distance=0.2)
+    pairs = minhash_lsh_pairs(
+        shingle_docs(docs, "word", 3).persist(), max_jaccard_distance=0.2
+    )
     found = {
         (r.id_a, r.id_b)
         for r in pairs.collect()
@@ -66,7 +77,7 @@ def test_simhash_is_64bit_stable(spark, sf_dir):
 
 def test_ngram_jaccard_planted_dups_score_one(spark, sf_dir):
     docs = _docs_with_planted_dups(spark, sf_dir, n=5)
-    pairs = ngram_jaccard_pairs(docs, threshold=0.99)
+    pairs = ngram_jaccard_pairs(_blocked(docs, "char", 3), threshold=0.99)
     planted = pairs.filter(F.col("id_b") == F.col("id_a") + 1_000_000)
     assert planted.count() == 5
     assert all(r.jaccard == 1.0 for r in planted.collect())
@@ -82,7 +93,7 @@ def test_dup_clusters_label_propagation(spark, sf_dir):
         d.unionByName(first5.withColumn("doc_id", F.col("doc_id") + 1_000_000))
         .unionByName(first5.withColumn("doc_id", F.col("doc_id") + 2_000_000))
     )
-    pairs = ngram_jaccard_pairs(docs, k=10, threshold=0.9)
+    pairs = ngram_jaccard_pairs(_blocked(docs, "char", 10), threshold=0.9)
     clusters = {r.doc_id: r.cluster_id for r in dup_clusters(pairs).collect()}
     for base in range(5):
         assert clusters.get(base + 1_000_000) == clusters.get(base + 2_000_000)
@@ -263,14 +274,11 @@ def test_auto_bits_formula_bounds():
 def test_dup_clusters_driver_and_distributed_paths_agree(spark, sf_dir):
     """The hybrid's two execution paths (driver union-find vs iterative
     label propagation) must produce identical labelings."""
-    from cdc_debezium_kafka_airflow_spark.operators.dedup import (
-        dup_clusters,
-        ngram_jaccard_pairs,
-    )
+    from cdc_debezium_kafka_airflow_spark.operators.dedup import dup_clusters
     from cdc_debezium_kafka_airflow_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(docs, k=3, threshold=0.5, unit="word")
+    pairs = ngram_jaccard_pairs(_blocked(docs, "word", 3), threshold=0.5)
     fast = {tuple(r) for r in dup_clusters(pairs).collect()}
     dist = {tuple(r) for r in dup_clusters(pairs, driver_edge_threshold=0).collect()}
     assert fast == dist and len(fast) > 0
@@ -794,41 +802,34 @@ def test_corpus_kept_set_artifact_two_consumers(spark, sf_dir):
     the same store without a semantics change."""
     import os
 
-    from pyspark.sql import functions as F
-
     from cdc_debezium_kafka_airflow_spark.operators.similarity import (
-        semdedup_incremental,
-    )
-    from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
-        source_fingerprint,
-    )
-    from cdc_debezium_kafka_airflow_spark.sources.semdedup_cache import (
+        INC_CLUSTERS,
+        INC_THRESHOLD,
         corpus_kept_set,
+        incremental_split,
+        semdedup_incremental,
     )
     from cdc_debezium_kafka_airflow_spark.sources.tables import load_table
 
     e = load_table(spark, sf_dir, "embeddings")
-    corpus = e.filter(F.col("vec_id") % 10 != 9)
-    batch = e.filter(F.col("vec_id") % 10 == 9)
-    ck = source_fingerprint(sf_dir, "embeddings") + ":inc90"
-    kept_dir, kept_art = corpus_kept_set(
-        spark, sf_dir, corpus=corpus, corpus_tag="inc90",
-        n_clusters=8, threshold=0.35, cache_key=ck,
-    )
+    corpus, batch, ck = incremental_split(e, sf_dir)
+    kept_dir, kept_art = corpus_kept_set(e, sf_dir)
     # layout: hive-partitioned by assignment cell
     cells = [d for d in os.listdir(kept_dir) if d.startswith("cell=")]
     assert len(cells) >= 2
     via_artifact = sorted(
         (r["vid"], r["cid"], r["verdict"], r["witness_id"])
         for r in semdedup_incremental(
-            corpus, batch, n_clusters=8, threshold=0.35, cache_key=ck,
+            corpus, batch, n_clusters=INC_CLUSTERS, threshold=INC_THRESHOLD,
+            cache_key=ck,
             corpus_kept=kept_art,
         ).collect()
     )
     via_derive = sorted(
         (r["vid"], r["cid"], r["verdict"], r["witness_id"])
         for r in semdedup_incremental(
-            corpus, batch, n_clusters=8, threshold=0.35, cache_key=ck,
+            corpus, batch, n_clusters=INC_CLUSTERS, threshold=INC_THRESHOLD,
+            cache_key=ck,
         ).collect()
     )
     assert via_artifact == via_derive and len(via_artifact) == batch.count()

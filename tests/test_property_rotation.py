@@ -1,7 +1,7 @@
 """Property-based checks for registry._compute_rotation: for ARBITRARY
-(pool, green, red, slots, round_key) states the selection must satisfy the
+(pool, red, slots, round_key) states the selection must satisfy the
 window invariants the external driver contract depends on — full fill,
-no duplicates, red-jumps-queue, unseen-before-ring, and determinism.
+no duplicates, red-jumps-queue, and determinism.
 These complement the branch-pinning cases in test_registry_order.py with
 fuzzed states (the r11 red test was exactly an unmodeled state)."""
 
@@ -17,48 +17,24 @@ from cdc_debezium_kafka_airflow_spark.queries.registry import _compute_rotation
 def rotation_state(draw):
     n = draw(st.integers(min_value=0, max_value=40))
     pool = [f"q{i:02d}" for i in range(n)]
-    # each name: 0 = unseen, 1 = green, 2 = red (checked, never passed)
-    states = draw(st.lists(st.integers(0, 2), min_size=n, max_size=n))
-    green = {p for p, s in zip(pool, states) if s == 1}
-    red = {p for p, s in zip(pool, states) if s == 2}
-    n_mod = draw(st.integers(min_value=1, max_value=4))
-    name_module = {p: f"m{draw(st.integers(0, n_mod - 1))}" for p in pool}
-    mods = {}
-    for p in pool:
-        mods.setdefault(name_module[p], []).append(p)
-    module_cov = {
-        m: sum(1 for p in ps if p in green) / len(ps) for m, ps in mods.items()
-    }
+    red_flags = draw(st.lists(st.booleans(), min_size=n, max_size=n))
+    red = {p for p, r in zip(pool, red_flags) if r}
     slots = draw(st.integers(min_value=0, max_value=50))
     round_key = draw(st.integers(min_value=1, max_value=30))
-    return pool, green, red, module_cov, name_module, slots, round_key
+    return pool, red, slots, round_key
 
 
 @given(rotation_state())
 @settings(max_examples=300, deadline=None)
 def test_rotation_invariants(state):
-    pool, green, red, module_cov, name_module, slots, round_key = state
-    got = _compute_rotation(
-        pool, green, red, module_cov, name_module, slots, round_key
-    )
+    pool, red, slots, round_key = state
+    got = _compute_rotation(pool, red, slots, round_key)
     # window fills to min(slots, pool) and never duplicates or invents names
     assert len(got) == min(slots, len(pool))
     assert len(set(got)) == len(got)
     assert set(got) <= set(pool)
     # deterministic: same state -> same window
-    assert got == _compute_rotation(
-        pool, green, red, module_cov, name_module, slots, round_key
-    )
+    assert got == _compute_rotation(pool, red, slots, round_key)
     # red names lead, in sorted order, up to capacity
     expected_red = sorted(p for p in pool if p in red)[:slots]
     assert got[: len(expected_red)] == expected_red
-    # every unseen name is seated before any green (ring) name re-checks
-    unseen = {p for p in pool if p not in green and p not in red}
-    n_unseen_seats = min(len(unseen), max(0, slots - len(expected_red)))
-    assert len(unseen & set(got)) == n_unseen_seats
-    if len(unseen) >= slots:
-        assert not set(got) & green
-    # unseen block is ordered by ascending module coverage
-    unseen_block = got[len(expected_red) : len(expected_red) + n_unseen_seats]
-    covs = [module_cov[name_module[p]] for p in unseen_block]
-    assert covs == sorted(covs)

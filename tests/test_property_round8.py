@@ -624,20 +624,18 @@ def test_containment_catches_truncation_not_reverse(spark):
 
     from cdc_debezium_kafka_airflow_spark.operators.dedup import (
         containment_pairs,
-        word_shingles,
+        shingle_docs,
     )
 
     words = [f"w{i:03d}" for i in range(60)]
     full = " ".join(words)
     third = " ".join(words[:20])
     other = " ".join(f"z{i:03d}" for i in range(40))
-    df = spark.createDataFrame(
-        [(1, full), (2, third), (3, other)], "doc_id long, text string"
-    ).select(
-        "doc_id",
-        F.lit("b").alias("block"),
-        word_shingles(F.col("text"), 3).alias("shingles"),
-    )
+    df = shingle_docs(
+        spark.createDataFrame(
+            [(1, full), (2, third), (3, other)], "doc_id long, text string"
+        )
+    ).select("doc_id", F.lit("b").alias("block"), "shingles")
     pairs = {
         (r.id_contained, r.id_container): r
         for r in containment_pairs(df, t_num=1, t_den=2).collect()

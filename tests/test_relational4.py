@@ -692,13 +692,9 @@ def test_mllib_minhash_semantics(spark, sf_dir):
     docs = spark.createDataFrame(
         [(1, base), (2, base), (3, near), (4, other)], "doc_id long, text string"
     )
-    from cdc_debezium_kafka_airflow_spark.operators.dedup import word_shingles
-    from cdc_debezium_kafka_airflow_spark.operators.text import normalize_text
-    from pyspark.sql import functions as F2
+    from cdc_debezium_kafka_airflow_spark.operators.dedup import shingle_docs
 
-    sh = docs.select(
-        "doc_id", word_shingles(normalize_text(F2.col("text"))).alias("shingles")
-    )
+    sh = shingle_docs(docs).select("doc_id", "shingles")
     pairs = {(r.doc_a, r.doc_b): r.jaccard_dist
              for r in mllib_minhash_pairs(sh, 0.95).collect()}
     assert pairs[(1, 2)] == 0.0                   # exact dup

@@ -189,6 +189,7 @@ def test_mix_is_map_only_and_packing_shuffles_once(spark, sf_dir):
 def test_decontaminate_flags_planted_near_copy(spark, sf_dir):
     """A train doc that is a near-copy of a held-out doc (one word appended)
     must be flagged; flagged docs are always train-split members."""
+    from cdc_debezium_kafka_airflow_spark.operators.dedup import shingle_docs
     from cdc_debezium_kafka_airflow_spark.operators.sampling import (
         decontaminate,
         train_val_test_split,
@@ -217,7 +218,9 @@ def test_decontaminate_flags_planted_near_copy(spark, sf_dir):
         "doc_id long, text string, lang string, source string, n_chars long",
     )
     flagged = decontaminate(
-        train_val_test_split(docs.unionByName(planted), norm), norm
+        shingle_docs(
+            train_val_test_split(docs.unionByName(planted), norm), "word", 3
+        ).persist()
     )
     assert flagged.filter(F.col("doc_id") == plant[0]).count() == 1
     # flagged ids are train members only

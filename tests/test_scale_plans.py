@@ -146,12 +146,14 @@ def test_minhash_verify_survives_no_broadcast(spark, sf_dir):
     and the estimate prune must run inside the band join (before any
     shingle array is shuffled), visible as the zip_with over the signature
     vectors in the join condition."""
-    from cdc_debezium_kafka_airflow_spark.operators.dedup import minhash_lsh_pairs
-    from cdc_debezium_kafka_airflow_spark.sources.tables import load_table
+    from cdc_debezium_kafka_airflow_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        shingled_documents,
+    )
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        pairs = minhash_lsh_pairs(load_table(spark, sf_dir, "documents"))
+        pairs = minhash_lsh_pairs(shingled_documents(spark, sf_dir))
         pairs.collect()
         plan = _plan(pairs)
         assert "BroadcastNestedLoopJoin" not in plan, plan
@@ -160,6 +162,57 @@ def test_minhash_verify_survives_no_broadcast(spark, sf_dir):
         assert "zip_with" in opt, opt
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+
+
+def _count_in_executed_plan(spark, df, marker: str) -> int:
+    """Occurrences of ``marker`` in the expressions of the physical
+    operators that RUN for ``df``: adaptive plans and query stages are
+    entered, a reused exchange is not (its subtree runs once), and a
+    persisted frame's plan counts once however many scans read it (one
+    cache builder per cached frame)."""
+    seen_caches = set()
+    n = 0
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        if name == "ReusedExchangeExec":
+            continue
+        if name == "InMemoryTableScanExec":
+            builder = node.relation().cacheBuilder()
+            key = spark._jvm.System.identityHashCode(builder)
+            if key not in seen_caches:
+                seen_caches.add(key)
+                stack.append(builder.cachedPlan())
+            continue
+        n += node.expressions().toString().count(marker)
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return n
+
+
+def test_minhash_query_shingles_once(spark, sf_dir):
+    """ext_dedup_minhash feeds ONE persisted shingle frame to both of its
+    pipelines (MinHash-LSH and the exact prefix-filtered join), and the
+    operators persist nothing of their input: the executed plan evaluates
+    the word-shingle gram expression exactly once. An operator that
+    re-shingled, or a query that stopped persisting the frame, would
+    evaluate it in several subtrees."""
+    from cdc_debezium_kafka_airflow_spark.queries.ext_queries import (
+        ext_dedup_minhash,
+    )
+
+    spark.catalog.clearCache()
+    df = ext_dedup_minhash(spark, sf_dir)
+    # the gram lambda of text.word_grams, as Catalyst prints it
+    assert _count_in_executed_plan(spark, df, "lambdafunction(concat_ws(") == 1
+    spark.catalog.clearCache()
 
 
 def test_whole_stage_codegen_active(spark, sf_dir):
@@ -1507,14 +1560,14 @@ def test_dedup_verify_broadcast_gate(spark, sf_dir):
         _broadcast_if_small,
         ngram_jaccard_pairs,
     )
-    from cdc_debezium_kafka_airflow_spark.sources.shingle_cache import (
+    from cdc_debezium_kafka_airflow_spark.operators.dedup import (
         shingled_documents,
     )
     from pyspark.sql import functions as F
 
     sh = shingled_documents(spark, sf_dir, unit="word", k=3).select(
         "doc_id", F.col("source").alias("block"), "shingles"
-    )
+    ).persist()
     # cap 0: gate must refuse to broadcast regardless of size
     df = spark.range(3)
     assert _broadcast_if_small(df, cap_bytes=0) is df
@@ -1522,7 +1575,7 @@ def test_dedup_verify_broadcast_gate(spark, sf_dir):
     assert _broadcast_if_small(df) is not df
     # at fixture scale the estimate is far under the cap, so the verify
     # stage plans as a broadcast join, not a sort-merge over the arrays
-    plan = _plan(ngram_jaccard_pairs(k=3, threshold=0.5, unit="word", shingled=sh))
+    plan = _plan(ngram_jaccard_pairs(sh, threshold=0.5))
     assert "BroadcastHashJoin" in plan
 
 

@@ -1,8 +1,9 @@
 """Regenerate the COVERAGE.md driver-verification ledger: for every
 registered query, the first round whose committed CORRECTNESS_r*.json
 carries a GREEN driver row (rows+schema+hash all passing, or the weaker
-rows-only pass for non-SQL-expressible ops), or `never` when the driver has
-not yet sampled the name. Run from the repo root; prints the markdown
+rows-only pass for non-SQL-expressible ops), `red` when the driver has
+checked the name but never seen it pass, or `never` when the driver has
+not yet sampled it. Run from the repo root; prints the markdown
 section between the BEGIN/END markers and, with --write, splices it into
 COVERAGE.md in place.
 """
@@ -50,25 +51,33 @@ def build_section() -> str:
 
     names = sorted(get_queries())
     n_green = sum(1 for n in names if n in first_green)
-    n_never = len(names) - n_green
+    n_red = sum(
+        1 for n in names if n in checked_rounds and n not in first_green
+    )
+    n_never = len(names) - n_green - n_red
     lines = [
         BEGIN,
         "",
         "## Driver-verification ledger (per name, regenerated per round)",
         "",
         f"Registry: **{len(names)}** queries. Driver-green (>=1 green row in "
-        f"a committed CORRECTNESS_r*.json): **{n_green}**. Never driver-"
-        f"sampled: **{n_never}** (these still pass the local "
+        f"a committed CORRECTNESS_r*.json): **{n_green}**. Driver-checked "
+        f"but never green (`red`): **{n_red}**. Never driver-sampled: "
+        f"**{n_never}**. Every name passes the local "
         "`tools/check_oracles.py` gate and pytest; the driver rotation "
-        "drains them at ~40 names/round — queries/registry.py).",
+        "(queries/registry.py) gives red names the leading slots and rings "
+        "through the rest.",
         "",
         "| query | first green | query | first green |",
         "|---|---|---|---|",
     ]
-    cells = [
-        (n, f"r{first_green[n]:02d}" if n in first_green else "never")
-        for n in names
-    ]
+
+    def state(n: str) -> str:
+        if n in first_green:
+            return f"r{first_green[n]:02d}"
+        return "red" if n in checked_rounds else "never"
+
+    cells = [(n, state(n)) for n in names]
     half = (len(cells) + 1) // 2
     for i in range(half):
         left = cells[i]
