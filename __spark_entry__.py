@@ -46,7 +46,9 @@ def entry(spark: SparkSession) -> DataFrame:
         upsert_materialize,
     )
     from cdc_debezium_kafka_airflow_spark.queries.cdc_queries import _parsed
+    from cdc_debezium_kafka_airflow_spark.session import apply_runtime_confs
 
+    apply_runtime_confs(spark)
     main, dlq = split_dlq(_parsed(spark, SF0001))
     state = upsert_materialize(unwrap(main))
     rollup = state.groupBy("table_name").agg(

@@ -14,8 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from cdc_debezium_kafka_airflow_spark.queries.common import t
-from cdc_debezium_kafka_airflow_spark.session import apply_runtime_confs
+from cdc_debezium_kafka_airflow_spark.queries.common import q, t
 from cdc_debezium_kafka_airflow_spark.sources.cdc_fixture import (
     SQL_IS_MALFORMED,
     SQL_IS_TOMBSTONE,
@@ -45,20 +44,6 @@ from cdc_debezium_kafka_airflow_spark.operators.monitoring import (
     status_health,
 )
 from cdc_debezium_kafka_airflow_spark.streaming import jobs
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 # Shared oracle CTE: the parsed+DLQ-filtered changelog (valid records only).
 CH_CTE = f"""
@@ -94,7 +79,6 @@ def _parsed(spark: SparkSession, sf_dir: str) -> DataFrame:
     change log the streams consume (``jobs.changelog_batch``), each record
     parsed once (``parse_envelope``). A query that reads the parse in two
     or more branches persists what it needs itself."""
-    apply_runtime_confs(spark)
     return parse_envelope(jobs.changelog_batch(spark, sf_dir))
 
 
@@ -532,7 +516,6 @@ def cdc_schema_compat(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest_region)."""
     from cdc_debezium_kafka_airflow_spark.streaming import jobs
 
-    t(spark, sf_dir, "events")  # session confs
     replay = jobs.two_gen_replay_dir(spark, sf_dir)
     ch = spark.read.parquet(replay)
     after_json = F.get_json_object("value", "$.payload.after")

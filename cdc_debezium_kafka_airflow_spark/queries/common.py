@@ -1,6 +1,9 @@
-"""Shared helpers for query modules."""
+"""Shared helpers for query modules, and the one query registry."""
 
 from __future__ import annotations
+
+import functools
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -11,12 +14,36 @@ from cdc_debezium_kafka_airflow_spark.sources.tables import (
     table_path,
 )
 
+#: every registered query and its DuckDB oracle, keyed by name in
+#: definition order; ``registry`` orders the driver's view of them
+QUERIES: dict[str, Callable[..., DataFrame]] = {}
+ORACLES: dict[str, str] = {}
 
-def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load a fixture table with session tuning applied (the driver owns the
-    session; timeZone=UTC etc. are runtime-settable so we pin them here)."""
-    apply_runtime_confs(spark)
-    return load_table(spark, sf_dir, name)
+#: the fixture-table loader under the short name the query bodies use
+t = load_table
+
+
+def q(name: str, oracle: str):
+    """Register the decorated query under ``name`` with its oracle SQL.
+
+    The registered callable, which also replaces the module attribute,
+    applies the session tuning once per call before it runs the body: the
+    driver owns the session, and the tuned confs (timeZone=UTC among them)
+    are runtime-settable, so each query pins them itself."""
+    if name in QUERIES:
+        raise ValueError(f"duplicate query name: {name}")
+
+    def deco(fn: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
+        @functools.wraps(fn)
+        def run(spark: SparkSession, *args, **kwargs) -> DataFrame:
+            apply_runtime_confs(spark)
+            return fn(spark, *args, **kwargs)
+
+        QUERIES[name] = run
+        ORACLES[name] = oracle
+        return run
+
+    return deco
 
 
 def widen_narrow_scan(df: DataFrame, key: tuple | str | None = None) -> DataFrame:

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from cdc_debezium_kafka_airflow_spark.queries.common import t
+from cdc_debezium_kafka_airflow_spark.queries.common import q, t
 from cdc_debezium_kafka_airflow_spark.operators.ranking import histogram_rank
 from cdc_debezium_kafka_airflow_spark.operators.dedup import (
     exact_dedup,
@@ -37,20 +37,6 @@ from cdc_debezium_kafka_airflow_spark.operators.multimodal import (
     attach_media,
     extract_media_features,
 )
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 # normalized text, as a DuckDB expression (mirror of text.normalize_text)
 NORM = "lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
@@ -1298,9 +1284,9 @@ def ext_seq_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     return packed.select("doc_id", "lang", "shard", "n_tokens", "pack_id")
 
 
-@q(
-    "ext_decontaminate",
-    f"""
+#: train docs sharing >=2 word-3-gram shingles with the eval split; the
+#: oracle of every decontamination twin (Bloom prefilter, streaming)
+DECONTAMINATE_ORACLE = f"""
     WITH d AS (
       SELECT doc_id,
              CASE WHEN {BUCKET} < 90 THEN 'train'
@@ -1327,8 +1313,10 @@ def ext_seq_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE s.split = 'train'
     GROUP BY s.doc_id
     HAVING count(*) >= 2
-    """,
-)
+    """
+
+
+@q("ext_decontaminate", DECONTAMINATE_ORACLE)
 def ext_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Eval-set decontamination: train docs sharing >=2 word-3-gram shingles
     with the content-hash val/test split (exact dups already can't straddle
@@ -1797,10 +1785,8 @@ def ext_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semantic_dedup(t(spark, sf_dir, "embeddings"), threshold=0.35)
 
 
-@q(
-    "ext_decontaminate_bloom",
-    ORACLES["ext_decontaminate"],  # bit-identical result, different plan
-)
+# bit-identical result to ext_decontaminate, different plan
+@q("ext_decontaminate_bloom", DECONTAMINATE_ORACLE)
 def ext_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``ext_decontaminate`` through a broadcast-Bloom prefilter: the eval
     shingle set is built into a Bloom bitset driver-side (xxhash64 pairs,
@@ -5563,9 +5549,7 @@ def ext_signal_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal inputs reuse the production queries' plans unchanged."""
     docs = t(spark, sf_dir, "documents")
     q_frame = text_metrics(docs).select("doc_id", "quality_score")
-    nll = QUERIES["ext_bigram_perplexity"](spark, sf_dir).select(
-        "doc_id", "avg_nll"
-    )
+    nll = ext_bigram_perplexity(spark, sf_dir).select("doc_id", "avg_nll")
     langs = docs.select("doc_id", "lang")
     j = langs.join(q_frame, "doc_id").join(nll, "doc_id")
     wq = Window.partitionBy("lang").orderBy(

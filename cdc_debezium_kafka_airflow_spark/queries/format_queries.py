@@ -10,7 +10,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from cdc_debezium_kafka_airflow_spark.queries.common import t
+from cdc_debezium_kafka_airflow_spark.queries.common import q, t
 from cdc_debezium_kafka_airflow_spark.queries.cdc_queries import MAT_CTE, _unwrapped
 from cdc_debezium_kafka_airflow_spark.operators.cdc import upsert_materialize
 from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
@@ -18,20 +18,6 @@ from cdc_debezium_kafka_airflow_spark.sources.cache_util import (
     derived_input,
     process_scoped_scratch,
 )
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 EVENTS_DDL = (
     "event_id long, ts timestamp, user_id long, event_type string, "

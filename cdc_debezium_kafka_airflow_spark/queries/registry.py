@@ -1,16 +1,17 @@
-"""Merged query/oracle registry (the __spark_entry__.py contract)."""
+"""The driver's view of the query registry (the __spark_entry__.py contract).
+
+Each query module registers its queries through ``common.q`` when it is
+imported; this module imports them all and orders the driver window."""
 
 from __future__ import annotations
 
 import glob
-import json
 import os
-import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from cdc_debezium_kafka_airflow_spark.queries import (
+from cdc_debezium_kafka_airflow_spark.queries import (  # noqa: F401  (registers)
     cdc_queries,
     ext_queries,
     relational,
@@ -26,24 +27,11 @@ from cdc_debezium_kafka_airflow_spark.queries import (
     surface_queries,
     surface2_queries,
 )
+from cdc_debezium_kafka_airflow_spark.queries.common import (
+    ORACLES,
+    QUERIES as _ALL_QUERIES,
+)
 from cdc_debezium_kafka_airflow_spark.sources.cache_util import REPO_ROOT
-
-_MODULES = [
-    relational,
-    relational2,
-    relational3,
-    relational4,
-    relational5,
-    relational6,
-    relational7,
-    tpch_decision,
-    cdc_queries,
-    ext_queries,
-    format_queries,
-    streaming_queries,
-    surface_queries,
-    surface2_queries,
-]
 
 # Registry insertion order is a correctness-visibility contract: external
 # verification harnesses sample the FIRST N entries. Rounds 1-5 pinned one
@@ -71,15 +59,6 @@ _PRIORITY = [
     "ext_multimodal_cols",
 ]
 
-_ALL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-for _m in _MODULES:
-    for _k in _m.QUERIES:
-        if _k in _ALL_QUERIES:
-            raise ValueError(f"duplicate query name: {_k}")
-    _ALL_QUERIES.update(_m.QUERIES)
-    ORACLES.update(_m.ORACLES)
-
 _missing = [name for name in _PRIORITY if name not in _ALL_QUERIES]
 if _missing:
     raise ValueError(f"priority entries not registered: {_missing}")
@@ -95,100 +74,27 @@ def _round_key() -> int:
     return 1 + len(glob.glob(os.path.join(REPO_ROOT, "CORRECTNESS_r*.json")))
 
 
-def _row_green(row: object) -> bool:
-    """A driver row counts as confirmation only when every comparison the
-    harness ran actually PASSED. ``hash_match`` may be None for the weaker
-    rows-only check (non-SQL-expressible ops) — that still counts — but a
-    red/None rows_match, schema mismatch, or any ``err`` (e.g. the r05
-    ``no_oracle`` row for ext_bpe_tokenize) does not."""
-    if not isinstance(row, dict):
-        return False
-    return bool(
-        row.get("rows_match")
-        and row.get("schema_match")
-        and row.get("hash_match") in (True, None)
-        and not row.get("err")
-    )
-
-
-def _already_verified() -> tuple[set[str], set[str]]:
-    """(green, red) name sets from committed CORRECTNESS_r*.json files.
-    ``green`` = names with at least one PASSING past driver row; ``red`` =
-    names the driver has checked but NEVER seen pass. Round 6's version
-    counted mere *presence* as seen, so a name whose only row was red
-    (ext_bpe_tokenize, r05) could not re-enter the ring until the whole
-    unseen pool drained — red names now jump the queue instead. Still a
-    pure function of repo state: driver and re-runs compute one window."""
-    green: set[str] = set()
-    checked: set[str] = set()
-    for path in glob.glob(os.path.join(REPO_ROOT, "CORRECTNESS_r*.json")):
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-            if not isinstance(data, dict):
-                raise ValueError("not a JSON object")
-        except (OSError, ValueError) as exc:
-            # malformed artifact: the rotation goes on without its rows
-            print(f"REGISTRY-CORRECTNESS-SKIPPED: {path}: {exc}", file=sys.stderr)
-            continue
-        for name, row in data.items():
-            checked.add(name)
-            if _row_green(row):
-                green.add(name)
-    return green, checked - green
-
-
-def _compute_rotation(
-    pool: list[str],
-    red: set[str],
-    slots: int,
-    round_key: int,
-) -> list[str]:
-    """Pure rotation-window selection — the entire policy in one testable
-    function of (pool, red names, slot count, round counter), pinned by
-    tests/test_registry_order:
-
-    1. Ever-red-never-green names take GUARANTEED leading slots: a failed
-       driver row means the fix needs a fresh row NOW (and the ring
-       offset must not skip them).
-    2. An offset ring over the WHOLE pool, keyed by the round counter,
-       fills the remaining slots, so successive rounds re-confirm
-       different names. Skip-and-continue: a ring entry colliding with a
-       red name already placed is skipped and the next entry backfills,
-       else the window underfills.
-
-    Every oracle-backed name has been driver-checked at least once, and
-    the query surface is frozen, so no never-checked name is left to
-    drain ahead of the ring.
-    """
-    rotation: list[str] = sorted(k for k in pool if k in red)[:slots]
-    slots_left = slots - len(rotation)
-    if slots_left and pool:
-        off = ((round_key - 1) * slots) % len(pool)
-        i = 0
-        while slots_left > 0 and i < len(pool):
-            cand = pool[(off + i) % len(pool)]
-            i += 1
-            if cand not in rotation:
-                rotation.append(cand)
-                slots_left -= 1
-    return rotation
+def _compute_rotation(pool: list[str], slots: int, round_key: int) -> list[str]:
+    """The rotation window, a pure function of (pool, slot count, round
+    counter) pinned by tests/test_registry_order: ``slots`` names of the
+    sorted pool, starting at an offset keyed by the round, wrapping at the
+    end. Successive rounds re-confirm different names, and the window
+    fills as long as the pool has ``slots`` names."""
+    ring = sorted(pool)
+    if not ring:
+        return []
+    off = ((round_key - 1) * slots) % len(ring)
+    return (ring[off:] + ring[:off])[:slots]
 
 
 # Window slots not pinned to a sentinel ROTATE round-by-round through
-# every remaining ORACLE-BACKED query, so external driver confirmation
-# accumulates across rounds instead of re-checking the same head forever.
-# The pool is filtered to names in ORACLES — a query without an oracle
-# can only produce an `err=no_oracle` driver row (the one red row of
-# r05), so it never earns a rotation slot. Within one round the selection
-# is a pure function of (registry contents, committed CORRECTNESS files)
-# — the driver and any re-run see the same window.
-_rotation_pool = sorted(
-    k for k in _ALL_QUERIES if k not in set(_PRIORITY) and k in ORACLES
-)
+# every remaining query (each carries an oracle by construction), so
+# external driver confirmation accumulates across rounds instead of
+# re-checking the same head forever. Within one round the selection is a
+# pure function of the registry and the round counter: the driver and
+# any re-run see the same window.
 ROTATION: list[str] = _compute_rotation(
-    _rotation_pool,
-    _already_verified()[1],
+    [k for k in _ALL_QUERIES if k not in set(_PRIORITY)],
     max(0, VERIFIED_WINDOW - len(_PRIORITY)),
     _round_key(),
 )

@@ -6,22 +6,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from cdc_debezium_kafka_airflow_spark.queries.common import t
+from cdc_debezium_kafka_airflow_spark.queries.common import q, t
 from cdc_debezium_kafka_airflow_spark.operators.text import normalize_text, ws_tokens
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 @q(
     "agg_grouping_sets",
@@ -142,7 +128,6 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps-and-islands SQL."""
     from cdc_debezium_kafka_airflow_spark.streaming import jobs
 
-    t(spark, sf_dir, "events")  # session confs
     agg = (
         jobs.events_stream(spark, sf_dir)
         .withWatermark("ts", "1 day")
@@ -746,12 +731,11 @@ def _bucketed_table(
     write time, so every subsequent join is shuffle-free."""
     import os
 
-    from cdc_debezium_kafka_airflow_spark.queries.common import t as _t
     from cdc_debezium_kafka_airflow_spark.sources.cache_util import derived_input
 
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     tbl = f"bkt_{source}_{tag}"
-    df = _t(spark, sf_dir, source).select(*cols)
+    df = t(spark, sf_dir, source).select(*cols)
 
     def build(path: str) -> None:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")

@@ -19,21 +19,7 @@ from pyspark.sql.window import Window
 from cdc_debezium_kafka_airflow_spark.operators.ranking import (
     histogram_running_sum,
 )
-from cdc_debezium_kafka_airflow_spark.queries.common import t
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
+from cdc_debezium_kafka_airflow_spark.queries.common import q, t
 
 # ---------------------------------------------------------------------------
 # graph_pagerank — iterative graph analytics, integer-exact across engines

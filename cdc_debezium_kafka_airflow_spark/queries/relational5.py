@@ -32,6 +32,7 @@ from cdc_debezium_kafka_airflow_spark.operators.ranking import (
     ntile_from_rank,
 )
 from cdc_debezium_kafka_airflow_spark.queries.common import (
+    q,
     t,
     widen_narrow_scan,
 )
@@ -40,20 +41,6 @@ from cdc_debezium_kafka_airflow_spark.sources.cdc_fixture import (
     TOPIC_PREFIX,
     build_changelog,
 )
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 _SQL_TOPIC = f"'{TOPIC_PREFIX}' || {SQL_TABLE_CASE}"
 

@@ -40,26 +40,12 @@ from cdc_debezium_kafka_airflow_spark.operators.ranking import (
     histogram_rank,
     ntile_from_rank,
 )
-from cdc_debezium_kafka_airflow_spark.queries.common import t
+from cdc_debezium_kafka_airflow_spark.queries.common import q, t
 from cdc_debezium_kafka_airflow_spark.sources.cdc_fixture import (
     SQL_TABLE_CASE,
     TOPIC_PREFIX,
     build_changelog,
 )
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 _SQL_TOPIC = f"'{TOPIC_PREFIX}' || {SQL_TABLE_CASE}"
 _NORM = "lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))"

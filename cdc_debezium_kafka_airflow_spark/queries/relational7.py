@@ -64,21 +64,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from cdc_debezium_kafka_airflow_spark.queries.common import t
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
+from cdc_debezium_kafka_airflow_spark.queries.common import q, t
 
 _NORM = "lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
 
@@ -429,7 +415,7 @@ def _late_dim_oracle() -> str:
     """
 
 
-@q("cdc_late_arriving_dim", None)  # oracle attached below (needs CH_CTE)
+@q("cdc_late_arriving_dim", _late_dim_oracle())
 def cdc_late_arriving_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kimball late-arriving-dimension policy on top of the SCD2 lookup:
     a fact that arrives BEFORE its key's first dimension version (the
@@ -497,9 +483,6 @@ def cdc_late_arriving_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         eff["dim_value_scaled"].alias("dim_value_scaled"),
         F.coalesce(inferred, F.lit(False)).alias("inferred_member"),
     )
-
-
-ORACLES["cdc_late_arriving_dim"] = _late_dim_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -1093,7 +1076,7 @@ def _passk_oracle() -> str:
     """
 
 
-@q("ext_eval_pass_at_k", None)  # oracle attached below (built string)
+@q("ext_eval_pass_at_k", _passk_oracle())
 def ext_eval_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unbiased pass@k (Chen et al., 2021, "Evaluating LLMs Trained on
     Code" appendix): with n samples per task and c successes, the
@@ -1139,9 +1122,6 @@ def ext_eval_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_certain"),
     )
-
-
-ORACLES["ext_eval_pass_at_k"] = _passk_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -1781,7 +1761,7 @@ def _temporal_align_oracle() -> str:
     """
 
 
-@q("cdc_temporal_align", None)  # oracle attached below (needs CH_CTE)
+@q("cdc_temporal_align", _temporal_align_oracle())
 def cdc_temporal_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporal ALIGN (SQL:2011 / Snodgrass): intersect two SCD2
     dimension histories of the same key into the piecewise segments where
@@ -1853,9 +1833,6 @@ def cdc_temporal_align(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ca.eid").alias("a_event_id"),
         F.col("cb.eid").alias("b_event_id"),
     )
-
-
-ORACLES["cdc_temporal_align"] = _temporal_align_oracle()
 
 
 # ---------------------------------------------------------------------------

@@ -10,8 +10,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 
-from cdc_debezium_kafka_airflow_spark.queries.common import t
+from cdc_debezium_kafka_airflow_spark.queries.common import q
 from cdc_debezium_kafka_airflow_spark.queries.cdc_queries import CH_CTE, MAT_CTE
+from cdc_debezium_kafka_airflow_spark.queries.ext_queries import DECONTAMINATE_ORACLE
 from cdc_debezium_kafka_airflow_spark.sources.cdc_fixture import (
     SQL_IS_MALFORMED,
     SQL_IS_TOMBSTONE,
@@ -23,20 +24,6 @@ from cdc_debezium_kafka_airflow_spark.operators.cdc import (
     split_dlq,
 )
 from cdc_debezium_kafka_airflow_spark.streaming import jobs
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 @q(
     "stream_tumbling",
@@ -51,7 +38,6 @@ def q(name: str, oracle: str | None):
 )
 def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-day tumbling-window aggregation executed by a streaming query."""
-    t(spark, sf_dir, "events")  # applies session confs (UTC window alignment)
     return jobs.windowed_event_counts(spark, sf_dir)
 
 
@@ -72,7 +58,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join: orders and lineitem as two independent
     watermarked streams, joined on key + event-time window (state evictable
     once the other side's watermark passes the window end)."""
-    t(spark, sf_dir, "orders")
     return jobs.stream_stream_interval_join(spark, sf_dir)
 
 
@@ -86,7 +71,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyed latest-state CDC materialization in the streaming state store;
     must equal the batch upsert_materialize result."""
-    t(spark, sf_dir, "events")
     return jobs.streaming_upsert_state(spark, sf_dir)
 
 
@@ -103,7 +87,6 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dropDuplicatesWithinWatermark): at-least-once sources (Kafka redelivery)
     dedupe in bounded state — state TTL = the watermark, so it survives
     unbounded streams."""
-    t(spark, sf_dir, "events")
     deduped = (
         jobs.events_stream(spark, sf_dir)
         .withWatermark("ts", "1 day")
@@ -132,7 +115,6 @@ def stream_dlq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming DLQ side output: parse-failing records quarantined mid-
     stream and hoisted to the audit shape — must quarantine exactly the same
     records as the batch path."""
-    t(spark, sf_dir, "events")
     dlq = hoist_field(
         split_dlq(parse_envelope(jobs.changelog_stream(spark, sf_dir)))[1]
     )
@@ -149,7 +131,6 @@ def stream_dlq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_stateful_pandas_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful operator (applyInPandasWithState): keyed last-write-
     wins with deletes in user-managed state — must equal upsert_materialize."""
-    t(spark, sf_dir, "events")
     return jobs.stateful_upsert_apply_in_pandas(spark, sf_dir)
 
 
@@ -170,7 +151,6 @@ def stream_statestore_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming-state observability: read the upsert job's OWN state store
     (spark.read.format('statestore') over its checkpoint) — every live
     (table, key) buffer including delete markers, without touching the job."""
-    t(spark, sf_dir, "events")
     return jobs.state_store_audit(spark, sf_dir)
 
 
@@ -186,7 +166,6 @@ def stream_pydatasource_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets, bounded per-trigger advance, executor-parallel partitions)
     feeding the JVM state-store upsert across micro-batches — must equal
     upsert_materialize."""
-    t(spark, sf_dir, "events")
     return jobs.pydatasource_stream_upsert(spark, sf_dir)
 
 
@@ -200,7 +179,6 @@ def stream_pydatasource_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """snk_jdbc_upsert analog: per-micro-batch MERGE accumulation via
     foreachBatch (the reference's JDBC upsert sink shape)."""
-    t(spark, sf_dir, "events")
     return jobs.foreach_batch_upsert(spark, sf_dir)
 
 
@@ -220,7 +198,6 @@ def stream_foreachbatch_upsert_pg(spark: SparkSession, sf_dir: str) -> DataFrame
     proving the dialect-dispatch seam with a second engine actually
     driving the SQL, not just a rendered string. Same protocol, guard,
     and oracle as the Derby MERGE twin ``stream_foreachbatch_upsert``."""
-    t(spark, sf_dir, "events")
     return jobs.foreach_batch_upsert(
         spark, sf_dir, max_files_per_trigger=8, engine="duckdb"
     )
@@ -243,7 +220,6 @@ def ctl_retry_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     table must be byte-identical to the no-fault run — proving retry +
     idempotent-MERGE compose into exactly-once under transient sink
     faults. The oracle is the same upsert materialization SQL."""
-    t(spark, sf_dir, "events")
     attempt_log: list = []
 
     def flaky(batch_id: int, attempt: int) -> None:
@@ -297,7 +273,6 @@ def stream_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes live keys + generation-2 image counts from pure
     event_id arithmetic (see jobs.schema_evolving_stream_upsert docstring
     for the shared determinism contract)."""
-    t(spark, sf_dir, "events")
     return jobs.schema_evolving_stream_upsert(spark, sf_dir)
 
 
@@ -323,7 +298,6 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     (event x range(2) -> shifted day buckets). State note: sliding windows
     multiply state rows by duration/slide — watermark TTL is what bounds it
     on unbounded streams."""
-    t(spark, sf_dir, "events")
     agg = (
         jobs.events_stream(spark, sf_dir)
         .groupBy(
@@ -357,7 +331,6 @@ def stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     that keeps a 100 TB vector index fresh). The oracle pins total coverage;
     the streamed-equals-batch flag is computed in-engine by full-outer
     diffing the streamed index against the one-shot assignment."""
-    t(spark, sf_dir, "events")  # session confs
     return jobs.streaming_index_append(spark, sf_dir)
 
 
@@ -380,14 +353,10 @@ def stream_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     global order, so the oracle is the order-free invariant set shared
     with ext_dedup_semantic_incremental: exact batch accounting + witness
     validity for every verdict class."""
-    t(spark, sf_dir, "events")  # session confs
     return jobs.stream_semdedup_ingest(spark, sf_dir)
 
 
-@q(
-    "stream_decontaminate",
-    None,  # oracle assigned below: ext_decontaminate's exact SQL
-)
+@q("stream_decontaminate", DECONTAMINATE_ORACLE)
 def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING eval-set decontamination: incoming documents are screened
     AT INGEST against the benchmark Bloom bitset (built once, shared with
@@ -395,17 +364,7 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side shingle + Bloom prefilter, exact eval equi-join on the
     survivors. Per-doc verdicts are micro-batch-local, so the streamed
     result equals the batch operator's and reuses its EXACT oracle."""
-    t(spark, sf_dir, "documents")  # session confs
     return jobs.stream_decontaminate(spark, sf_dir)
-
-
-def _borrow_decontaminate_oracle() -> None:
-    from cdc_debezium_kafka_airflow_spark.queries import ext_queries
-
-    ORACLES["stream_decontaminate"] = ext_queries.ORACLES["ext_decontaminate"]
-
-
-_borrow_decontaminate_oracle()
 
 
 @q(
@@ -436,7 +395,6 @@ def stream_scd2_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch SCD2 SQL (cdc_scd2_history's), so any missed close, double
     insert, or wrong interval across micro-batch boundaries flips the
     hash."""
-    t(spark, sf_dir, "events")
     return jobs.foreach_batch_scd2(spark, sf_dir)
 
 
@@ -459,7 +417,6 @@ def stream_index_append_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     genuine batch count; the two flags are the in-engine single-join
     audit: seeds match the artifact cell-for-cell, appends match the
     one-shot assignment."""
-    t(spark, sf_dir, "events")  # session confs
     return jobs.streaming_index_append_dedup(spark, sf_dir)
 
 
@@ -479,7 +436,6 @@ def stream_domain_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState operator with a ONE-counter state per domain.
     Arrival order is deterministic (doc_id-range replay files), so the
     oracle recomputes the admitted set with a window rank."""
-    t(spark, sf_dir, "documents")  # session confs
     return jobs.stream_domain_quota(spark, sf_dir, cap=15)
 
 
@@ -516,7 +472,6 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed by the end watermark. The oracle recomputes both cuts from the
     exact closed-form watermark (max(seen prefix) - 2 days); the pinned
     Spark drop semantics are documented in jobs.stream_late_data_drop."""
-    t(spark, sf_dir, "events")
     return jobs.stream_late_data_drop(spark, sf_dir)
 
 
@@ -556,7 +511,6 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     120-day window — orders whose window is still open at end-of-replay
     stay in state and do not emit. The oracle reproduces exactly that
     eviction cut relationally."""
-    t(spark, sf_dir, "orders")
     return jobs.stream_stream_left_outer_join(spark, sf_dir)
 
 
@@ -589,7 +543,6 @@ def stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode end-to-end; the oracle reproduces the emission cut (daily
     windows whose end the joint watermark passed) and the per-day values
     (integer-scaled sums, so hourly->daily re-aggregation is exact)."""
-    t(spark, sf_dir, "events")
     return jobs.chained_window_aggs(spark, sf_dir)
 
 
@@ -610,7 +563,6 @@ def stream_stateful_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid-stream, a new query on the same checkpoint restores window state +
     watermark, and the final emission equals a never-restarted run (full
     counts for every window the end watermark closed)."""
-    t(spark, sf_dir, "events")
     return jobs.stateful_restart_windowed(spark, sf_dir)
 
 
@@ -633,7 +585,6 @@ def stream_dual_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated silver) multiplexed inside foreachBatch over a persisted
     batch image — both sinks provably carry the same truth (the oracle
     compares each against the batch table)."""
-    t(spark, sf_dir, "orders")
     return jobs.dual_sink_medallion(spark, sf_dir)
 
 
@@ -654,7 +605,6 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     process only the unseen files — duplicates or gaps hash-fail against
     the plain batch table (n_distinct_keys == n_orders is part of the
     compared output)."""
-    t(spark, sf_dir, "orders")
     return jobs.stream_checkpoint_recovery(spark, sf_dir)
 
 
@@ -674,7 +624,6 @@ def stream_dim_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachBatch: phase-1 rows (even keys) provably joined dim v1,
     phase-2 rows (odd keys) v2 — the closed-form oracle pins exactly
     which rows saw which dimension version."""
-    t(spark, sf_dir, "orders")
     return jobs.stream_dim_refresh(spark, sf_dir)
 
 
@@ -729,7 +678,6 @@ def stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitems at their own shipdate — o_orderdate <= l_shipdate binds).
     The oracle reproduces both eviction cuts relationally; rows still in
     state at end-of-replay do not emit, matching the HAVING/wm guards."""
-    t(spark, sf_dir, "orders")
     return jobs.stream_stream_full_outer_join(spark, sf_dir)
 
 
@@ -750,7 +698,6 @@ def stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_stream_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT SEMI interval join: an order emits once on its
     first in-window lineitem — the final distinct set is exactly EXISTS."""
-    t(spark, sf_dir, "orders")
     return jobs.stream_stream_semi_anti_join(spark, sf_dir, "left_semi")
 
 
@@ -769,7 +716,6 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast batch dimension (customer) in every micro-batch — stateless,
     map-side, no shuffle of the stream (the CDC topic -> warehouse-dim
     enrichment topology of the reference's sink DAGs)."""
-    t(spark, sf_dir, "events")
     return jobs.stream_static_dim_join(spark, sf_dir)
 
 
@@ -816,7 +762,6 @@ def stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark (global max ts - 1h delay) — the exact cut pinned against
     this build. Open sessions correctly never emit; at 100 TB they are
     the still-active users."""
-    t(spark, sf_dir, "events")
     return jobs.stream_session_timeout(spark, sf_dir)
 
 
@@ -894,7 +839,6 @@ def stream_ab_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ab_ztest_readout,
     )
 
-    t(spark, sf_dir, "events")
     return ab_ztest_readout(jobs.streaming_ab_moments(spark, sf_dir))
 
 
@@ -922,5 +866,4 @@ def stream_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     days, so per-day bitmaps are partial in every batch and the final
     OR-merge must reconstruct the exact batch answer — the oracle is the
     same correlated COUNT(DISTINCT), blind to the batch split."""
-    t(spark, sf_dir, "events")
     return jobs.stream_rolling_distinct(spark, sf_dir)

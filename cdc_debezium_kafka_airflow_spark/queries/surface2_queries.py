@@ -10,24 +10,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from cdc_debezium_kafka_airflow_spark.queries.common import (
+    q,
     t,
     widen_narrow_scan,
 )
 from cdc_debezium_kafka_airflow_spark.queries.cdc_queries import CH_CTE, _unwrapped
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 @q(
     "join_theta",

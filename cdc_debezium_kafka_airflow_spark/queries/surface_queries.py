@@ -7,24 +7,10 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from cdc_debezium_kafka_airflow_spark.queries.common import t
+from cdc_debezium_kafka_airflow_spark.queries.common import q, t
 from cdc_debezium_kafka_airflow_spark.operators.cdc import parse_envelope, unwrap
 from cdc_debezium_kafka_airflow_spark.sources.cdc_fixture import JSON_TS_OPTS
 from cdc_debezium_kafka_airflow_spark.streaming import jobs
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 @q(
     "src_cdc_snapshot",
@@ -165,7 +151,6 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     is emitted exactly once by stream end (the final no-data micro-batch
     flushes state), and no other window is — which is exactly the set the
     oracle derives in closed form."""
-    t(spark, sf_dir, "events")
     return jobs.windowed_event_counts_watermarked(spark, sf_dir)
 
 

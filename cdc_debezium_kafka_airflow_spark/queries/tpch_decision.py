@@ -30,21 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from cdc_debezium_kafka_airflow_spark.queries.common import t
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
+from cdc_debezium_kafka_airflow_spark.queries.common import q, t
 
 _TS = lambda s: F.lit(s).cast("timestamp")  # noqa: E731
 

@@ -41,10 +41,6 @@ def normalize_ts(df: DataFrame, cols: tuple[str, ...] = ("ts",)) -> DataFrame:
     return df
 
 
-# Backwards-compatible alias (pre-round-3 name).
-_nanos_to_timestamp = normalize_ts
-
-
 #: (sf_dir, table, file fingerprint) -> StructType. Schema inference
 #: reads parquet footers through 1-2 tiny scheduled jobs PER
 #: spark.read.parquet call; across a 344-query session that is hundreds

@@ -151,10 +151,8 @@ def test_incremental_snapshot_dedup_rule_fires(spark, sf_dir):
     the oracle match proves nothing about the race the algorithm handles —
     and the reconciled state must equal the straight materialization."""
     from pyspark.sql import functions as F
-    from cdc_debezium_kafka_airflow_spark.queries.cdc_queries import (
-        QUERIES,
-        _unwrapped,
-    )
+    from cdc_debezium_kafka_airflow_spark.queries.cdc_queries import _unwrapped
+    from cdc_debezium_kafka_airflow_spark.queries.registry import QUERIES
     from cdc_debezium_kafka_airflow_spark.operators.cdc import (
         upsert_materialize,
     )

@@ -351,7 +351,7 @@ def test_bigram_perplexity_scores_heldout_unseen_mass(spark, sf_dir):
     bigrams unseen in training (the smoothing path is exercised, not
     decorative)."""
     from pyspark.sql import functions as F
-    from cdc_debezium_kafka_airflow_spark.queries.ext_queries import QUERIES
+    from cdc_debezium_kafka_airflow_spark.queries.registry import QUERIES
     from cdc_debezium_kafka_airflow_spark.sources.tables import load_table
 
     out = QUERIES["ext_bigram_perplexity"](spark, sf_dir).persist()
@@ -380,7 +380,7 @@ def test_kneser_ney_generalizes_and_tracks_add1(spark, sf_dir):
     the unseen-context branch is exercised by the oracle equivalence, not
     by this corpus."""
     from pyspark.sql import functions as F
-    from cdc_debezium_kafka_airflow_spark.queries.ext_queries import QUERIES
+    from cdc_debezium_kafka_airflow_spark.queries.registry import QUERIES
     from cdc_debezium_kafka_airflow_spark.sources.tables import load_table
 
     out = QUERIES["ext_kneser_ney_lm"](spark, sf_dir).persist()
@@ -406,7 +406,7 @@ def test_dsir_selects_target_like_docs(spark, sf_dir):
     language relative to the corpus (the property DSIR exists for), and
     exactly floor(0.2*n) docs are selected."""
     from pyspark.sql import functions as F
-    from cdc_debezium_kafka_airflow_spark.queries.ext_queries import QUERIES
+    from cdc_debezium_kafka_airflow_spark.queries.registry import QUERIES
     from cdc_debezium_kafka_airflow_spark.sources.tables import load_table
 
     out = QUERIES["ext_dsir_resample"](spark, sf_dir)
@@ -428,7 +428,7 @@ def test_temperature_mix_flattens_distribution(spark, sf_dir):
     language must keep everything."""
     from collections import Counter
 
-    from cdc_debezium_kafka_airflow_spark.queries.ext_queries import QUERIES
+    from cdc_debezium_kafka_airflow_spark.queries.registry import QUERIES
 
     rows = QUERIES["ext_temperature_mix"](spark, sf_dir).collect()
     raw = Counter(r.lang for r in rows)
@@ -443,7 +443,7 @@ def test_temperature_mix_flattens_distribution(spark, sf_dir):
 
 
 def test_corpus_pipeline_funnel_consistency(spark, sf_dir):
-    from cdc_debezium_kafka_airflow_spark.queries.ext_queries import QUERIES
+    from cdc_debezium_kafka_airflow_spark.queries.registry import QUERIES
 
     rows = {r.stage_id: r for r in
             QUERIES["e2e_corpus_pipeline"](spark, sf_dir).collect()}

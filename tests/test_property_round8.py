@@ -123,7 +123,6 @@ def test_calibration_sigmoid_is_exact_rational(spark, sf_dir):
     the value. Recover n_tokens-consistent conf by recomputing the map
     over the observed bins' member counts via the sum identity: every
     per-bin conf_e6_sum must be expressible as a sum of grid values."""
-    from cdc_debezium_kafka_airflow_spark.queries.ext_queries import QUERIES as _  # noqa: F401
     from cdc_debezium_kafka_airflow_spark.queries.relational5 import (
         ext_calibration_curve,
     )

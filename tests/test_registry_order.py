@@ -3,12 +3,14 @@
 External verification harnesses sample the FIRST 50 queries() entries. From
 round 6 the head is a ~10-name sentinel spine (one canary per SURVEY.md §2
 family, each already multiply driver-green across CORRECTNESS_r01-r05) and
-the other ~40 slots rotate through the ORACLE-BACKED names, red names
-first. This test pins that contract so a refactor can't silently shrink
-the rotation or let a no-oracle name burn a slot.
+the other ~40 slots rotate through the rest by a round-keyed offset. This
+test pins that contract so a refactor can't silently shrink the rotation,
+and pins the one registration decorator every query goes through.
 """
 
-from cdc_debezium_kafka_airflow_spark.queries import registry
+import pytest
+
+from cdc_debezium_kafka_airflow_spark.queries import common, registry
 
 WINDOW = 50
 
@@ -50,9 +52,39 @@ def test_spine_is_small_so_rotation_is_wide():
 
 
 def test_no_duplicates_and_oracle_keys_subset():
+    """Every query carries an oracle, and no oracle lacks its query."""
     names = list(registry.QUERIES)
-    assert len(names) == len(set(names))
-    assert set(registry.ORACLES) <= set(registry.QUERIES)
+    assert len(names) == len(set(names)) == 344
+    assert registry.ORACLES.keys() == registry.QUERIES.keys()
+
+
+def test_duplicate_query_name_raises():
+    """The one decorator refuses a second query under a registered name,
+    and leaves the registered query and its oracle as they were."""
+    name = "upsert_materialize"
+    before = (common.QUERIES[name], common.ORACLES[name])
+    with pytest.raises(ValueError, match=f"duplicate query name: {name}"):
+
+        @common.q(name, "SELECT 1")
+        def again(spark, sf_dir):
+            raise AssertionError("never registered")
+
+    assert (common.QUERIES[name], common.ORACLES[name]) == before
+
+
+def test_query_applies_session_tuning_once_per_call(spark, sf_dir, monkeypatch):
+    """A registered query that loads six tables applies the session tuning
+    once, in the registered callable, not once per table load."""
+    calls = []
+    real = common.apply_runtime_confs
+
+    def counting(session):
+        calls.append(session)
+        return real(session)
+
+    monkeypatch.setattr(common, "apply_runtime_confs", counting)
+    registry.QUERIES["q5_regional_volume"](spark, sf_dir)
+    assert calls == [spark]
 
 
 def test_rotation_slots_are_oracle_backed():
@@ -61,12 +93,11 @@ def test_rotation_slots_are_oracle_backed():
     assert set(registry.ROTATION) <= set(registry.ORACLES)
 
 
-#: the rotation window of the committed repo state: ext_gopher_gate (the
-#: one red name) then the ring's slice of the pool at round key 14 (one
-#: plus the 13 committed CORRECTNESS files). A new CORRECTNESS file moves
-#: the ring; re-pin this list with it.
+#: the rotation window of the committed repo state: the ring's slice of
+#: the pool at round key 14 (one plus the 13 committed CORRECTNESS files).
+#: A new CORRECTNESS file moves the ring; re-pin this list with it.
 PINNED_ROTATION = [
-    "ext_gopher_gate", "fn_transpose", "fn_unpivot", "fn_variant",
+    "fn_transpose", "fn_unpivot", "fn_variant",
     "fn_variant_shred", "fn_xml_roundtrip", "funnel_conversion",
     "funnel_window", "graph_assortativity", "graph_bfs_hops",
     "graph_connected_components", "graph_degree_distribution",
@@ -77,16 +108,15 @@ PINNED_ROTATION = [
     "join_left", "join_null_safe", "join_range_asof", "join_range_interval",
     "join_semi", "join_skew_salted", "join_theta", "monitor_any_failed",
     "monitor_dlq_rate", "monitor_fanout_config", "monitor_heartbeat",
-    "monitor_slo_burn_rate", "monitor_status_health",
+    "monitor_slo_burn_rate", "monitor_status_health", "perf_cache_table",
 ]
 
 
 def test_rotation_fills_window_and_is_deterministic():
-    """The non-sentinel window slots rotate: ever-red-never-green names
-    take GUARANTEED leading slots (a failed driver row needs a fresh one
-    NOW) and a round-keyed offset ring over the whole oracle-backed pool
-    fills the rest. A re-import selects the same set (pure function of
-    repo state), and for the committed state that set is pinned."""
+    """The non-sentinel window slots rotate: a round-keyed offset ring over
+    the whole pool fills them. A re-import selects the same set (pure
+    function of repo state), and for the committed state that set is
+    pinned."""
     head = list(registry.QUERIES)[: len(registry._PRIORITY)]
     rotation = list(registry.QUERIES)[
         len(registry._PRIORITY) : registry.VERIFIED_WINDOW
@@ -94,52 +124,25 @@ def test_rotation_fills_window_and_is_deterministic():
     assert rotation == registry.ROTATION == PINNED_ROTATION
     assert not set(rotation) & set(registry._PRIORITY)
     assert len(head) + len(rotation) == registry.VERIFIED_WINDOW
-    pool = sorted(
-        k
-        for k in registry.QUERIES
-        if k not in set(registry._PRIORITY) and k in registry.ORACLES
-    )
-    _, red = registry._already_verified()
+    pool = sorted(k for k in registry.QUERIES if k not in set(registry._PRIORITY))
     slots = registry.VERIFIED_WINDOW - len(registry._PRIORITY)
     # the selection must be exactly the pure policy function applied to
     # the committed repo state — import-time wiring adds nothing
     assert rotation == registry._compute_rotation(
-        pool, red, slots, registry._round_key()
+        pool, slots, registry._round_key()
     )
     # window always fills as long as the pool is at least slot-sized
     if len(pool) >= slots:
         assert len(rotation) == slots
 
 
-def test_compute_rotation_red_leads_then_ring_backfills():
-    """Red names lead; the REMAINING slots backfill from the round-keyed
-    ring, skipping collisions — the window must still fill completely."""
-    pool = [f"q{i:02d}" for i in range(10)]
-    red = {"q04", "q09"}
-    for rk in range(1, 8):
-        got = registry._compute_rotation(pool, red, 6, rk)
-        assert len(got) == 6, f"window underfilled at round_key={rk}"
-        assert len(set(got)) == 6
-        assert got[:2] == ["q04", "q09"], "red names must lead the window"
-        # ring order from the round-keyed offset, collisions backfilled
-        off = ((rk - 1) * 6) % len(pool)
-        expect, i = [], 0
-        while len(expect) < 4 and i < len(pool):
-            cand = pool[(off + i) % len(pool)]
-            i += 1
-            if cand not in red and cand not in expect:
-                expect.append(cand)
-        assert got[2:] == expect
-
-
 def test_compute_rotation_drained_pool_rings_whole_pool():
-    """No red name: the ring walks the pool by round offset so successive
-    rounds re-confirm different names; dedup + backfill keep the window
-    exactly slot-sized."""
+    """The ring walks the pool by round offset so successive rounds
+    re-confirm different names, and the window stays exactly slot-sized."""
     pool = [f"q{i:02d}" for i in range(9)]
     seen_windows = set()
     for rk in range(1, 5):
-        got = registry._compute_rotation(pool, set(), 4, rk)
+        got = registry._compute_rotation(pool, 4, rk)
         assert len(got) == len(set(got)) == 4
         assert set(got) <= set(pool)
         seen_windows.add(tuple(got))
@@ -147,41 +150,7 @@ def test_compute_rotation_drained_pool_rings_whole_pool():
 
 
 def test_compute_rotation_small_pool_never_overfills():
-    """Pool smaller than the window: every pool name appears exactly once
-    and the loop terminates (no infinite ring walk)."""
+    """Pool smaller than the window: every pool name appears exactly once."""
     pool = ["a", "b", "c"]
-    got = registry._compute_rotation(pool, {"b"}, 10, 3)
+    got = registry._compute_rotation(pool, 10, 3)
     assert sorted(got) == pool
-    assert got[0] == "b"  # red jumps the queue even in a tiny pool
-
-
-def test_red_rows_do_not_count_as_seen():
-    """Round-6 regression: a name whose ONLY driver row failed (r05's
-    ext_bpe_tokenize err=no_oracle) must re-enter the window immediately,
-    not after the unseen pool drains."""
-    assert not registry._row_green({"rows_match": None, "err": "no_oracle"})
-    assert not registry._row_green(
-        {"rows_match": True, "schema_match": True, "hash_match": False,
-         "err": None}
-    )
-    # rows-only weaker check (hash_match None, no err) still counts green
-    assert registry._row_green(
-        {"rows_match": True, "schema_match": True, "hash_match": None,
-         "err": None}
-    )
-    green, red = registry._already_verified()
-    assert not green & red
-
-
-def test_malformed_correctness_file_is_named_and_skipped(
-    tmp_path, monkeypatch, capsys
-):
-    (tmp_path / "CORRECTNESS_r01.json").write_text(
-        '{"q": {"rows_match": true, "schema_match": true}}'
-    )
-    (tmp_path / "CORRECTNESS_r02.json").write_text('{"q": ')
-    monkeypatch.setattr(registry, "REPO_ROOT", str(tmp_path))
-    assert registry._already_verified() == ({"q"}, set())
-    err = capsys.readouterr().err
-    assert f"REGISTRY-CORRECTNESS-SKIPPED: {tmp_path / 'CORRECTNESS_r02.json'}: " in err
-    assert "CORRECTNESS_r01" not in err

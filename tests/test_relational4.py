@@ -725,7 +725,7 @@ def test_seasonal_decompose_recovers_planted_peak(spark, sf_dir):
     wrong dow arithmetic together."""
     from pyspark.sql import functions as F
 
-    from cdc_debezium_kafka_airflow_spark.queries.relational4 import QUERIES
+    from cdc_debezium_kafka_airflow_spark.queries.registry import QUERIES
 
     out = QUERIES["ts_seasonal_decompose"](spark, sf_dir)
     peaks = out.filter(F.col("peak")).select("event_type", "dow").collect()

@@ -651,9 +651,7 @@ def test_outbox_router_is_map_only(spark, sf_dir):
     """The outbox EventRouter is a stateless pass-through: op filter +
     topic/key projection over the parsed changelog — zero exchanges (the
     (topic, key) layout IS the downstream Kafka partitioning)."""
-    from cdc_debezium_kafka_airflow_spark.queries.cdc_queries import (
-        QUERIES,
-    )
+    from cdc_debezium_kafka_airflow_spark.queries.registry import QUERIES
 
     spark.catalog.clearCache()  # earlier tests' persisted frames
     plan = _plan(QUERIES["cdc_outbox_router"](spark, sf_dir))

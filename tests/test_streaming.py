@@ -349,15 +349,15 @@ def _checkpoint_manager(session, path: str) -> str:
 def test_checkpoints_commit_through_filesystem_manager(spark, sf_dir, tmp_path):
     """Checkpoint files commit through the FileSystem-based manager, whose
     rename forks no ``readlink`` helper: in the tuned session, and in an
-    untuned one once a query has loaded its first table through ``t()``."""
-    from cdc_debezium_kafka_airflow_spark.queries.common import t
+    untuned one once it has run one registered query."""
+    from cdc_debezium_kafka_airflow_spark.queries.registry import QUERIES
 
     fs_manager = f"{CHECKPOINTING}.FileSystemBasedCheckpointFileManager"
     assert _checkpoint_manager(spark, str(tmp_path)) == fs_manager
 
     fresh = spark.newSession()
     assert _checkpoint_manager(fresh, str(tmp_path)) != fs_manager
-    t(fresh, sf_dir, "events")
+    QUERIES["q6_forecast_revenue"](fresh, sf_dir)
     assert _checkpoint_manager(fresh, str(tmp_path)) == fs_manager
 
 

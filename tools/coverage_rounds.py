@@ -23,15 +23,29 @@ BEGIN = "<!-- BEGIN driver-round ledger (tools/coverage_rounds.py) -->"
 END = "<!-- END driver-round ledger -->"
 
 
-def build_section() -> str:
-    from cdc_debezium_kafka_airflow_spark.queries.registry import (
-        _row_green,
-        get_queries,
+def _row_green(row: object) -> bool:
+    """A driver row counts as confirmation only when every comparison the
+    harness ran actually PASSED. ``hash_match`` may be None for the weaker
+    rows-only check (non-SQL-expressible ops) — that still counts — but a
+    red/None rows_match, schema mismatch, or any ``err`` (e.g. the r05
+    ``no_oracle`` row for ext_bpe_tokenize) does not."""
+    if not isinstance(row, dict):
+        return False
+    return bool(
+        row.get("rows_match")
+        and row.get("schema_match")
+        and row.get("hash_match") in (True, None)
+        and not row.get("err")
     )
 
+
+def driver_rounds(root: str = ROOT) -> tuple[dict[str, int], dict[str, list[int]]]:
+    """(first green round, rounds checked) per name, from the committed
+    CORRECTNESS_r*.json files under ``root``. A malformed file prints one
+    named line on stderr and the ledger goes on without its rows."""
     first_green: dict[str, int] = {}
     checked_rounds: dict[str, list[int]] = {}
-    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
+    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
         if not m:
             continue
@@ -39,6 +53,8 @@ def build_section() -> str:
         try:
             with open(path) as fh:
                 data = json.load(fh)
+            if not isinstance(data, dict):
+                raise ValueError("not a JSON object")
         except (OSError, ValueError) as exc:
             print(f"REGISTRY-CORRECTNESS-SKIPPED: {path}: {exc}", file=sys.stderr)
             continue
@@ -48,7 +64,13 @@ def build_section() -> str:
                 name not in first_green or rnd < first_green[name]
             ):
                 first_green[name] = rnd
+    return first_green, checked_rounds
 
+
+def build_section() -> str:
+    from cdc_debezium_kafka_airflow_spark.queries.registry import get_queries
+
+    first_green, checked_rounds = driver_rounds()
     names = sorted(get_queries())
     n_green = sum(1 for n in names if n in first_green)
     n_red = sum(
@@ -65,8 +87,8 @@ def build_section() -> str:
         f"but never green (`red`): **{n_red}**. Never driver-sampled: "
         f"**{n_never}**. Every name passes the local "
         "`tools/check_oracles.py` gate and pytest; the driver rotation "
-        "(queries/registry.py) gives red names the leading slots and rings "
-        "through the rest.",
+        "(queries/registry.py) rings through every name outside its "
+        "sentinel spine, one offset per round.",
         "",
         "| query | first green | query | first green |",
         "|---|---|---|---|",
